@@ -60,10 +60,9 @@ object Frames {
           }
         }
       case other =>
-        // a frame with no checkpoint anywhere (persist-flavor Memo
-        // entries route here on invalidate) is a silent no-op, same as
-        // before; a DERIVED frame over embedded checkpoints is the
-        // contract violation worth a loud line
+        // a frame with no checkpoint anywhere is a silent no-op; a
+        // DERIVED frame over embedded checkpoints is the contract
+        // violation worth a loud line
         val embedded = other.collect {
           case lr: org.apache.spark.sql.execution.LogicalRDD => lr }.size
         if (embedded > 0)

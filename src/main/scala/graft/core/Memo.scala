@@ -31,8 +31,14 @@ object Memo {
       case _ => false
     }
   }
-  private val memo =
-    mutable.Map.empty[(SessionKey, String), scala.concurrent.Future[DataFrame]]
+  /** A registered build and its flavor: `truncate` entries are
+    * checkpoint-rooted and freed by `Frames.release`, the others are
+    * persisted and freed by `unpersist`. */
+  private final case class Entry(f: scala.concurrent.Future[DataFrame], truncate: Boolean) {
+    def free(df: DataFrame): Unit =
+      if (truncate) graft.core.Frames.release(df) else df.unpersist()
+  }
+  private val memo = mutable.Map.empty[(SessionKey, String), Entry]
 
   private def prune(): Unit =
     memo.filterInPlace { case ((k, _), _) => !k.s.sparkContext.isStopped }
@@ -65,10 +71,10 @@ object Memo {
     val owned = synchronized {
       prune()
       memo.get(k) match {
-        case Some(f) => Right(f)
+        case Some(e) => Right(e.f)
         case None =>
           val p = scala.concurrent.Promise[DataFrame]()
-          memo.update(k, p.future)
+          memo.update(k, Entry(p.future, truncate))
           Left(p)
       }
     }
@@ -111,7 +117,7 @@ object Memo {
           // re-wedge the waiters the finally exists to free.
           try {
             if (res.isFailure) synchronized {
-              if (memo.get(k).exists(_ eq p.future)) memo.remove(k)
+              if (memo.get(k).exists(_.f eq p.future)) memo.remove(k)
             }
           } finally p.tryComplete(res)
         }
@@ -131,28 +137,26 @@ object Memo {
     * every index for the whole pass. */
   def invalidate(spark: SparkSession, keyPrefix: String): Unit = synchronized {
     prune()
-    memo.filterInPlace { case ((k, key), f) =>
+    memo.filterInPlace { case ((k, key), e) =>
       if ((k.s eq spark) && key.startsWith(keyPrefix)) {
-        if (!spark.sparkContext.isStopped) f.value match {
-          // unpersist covers persist()-cached frames; Frames.release
-          // additionally frees localCheckpoint blocks of truncated
-          // entries (a no-op for everything else)
-          case Some(v) => v.foreach { df =>
-            df.unpersist(); graft.core.Frames.release(df)
-          }
+        if (!spark.sparkContext.isStopped) e.f.value match {
+          // persisted entries unpersist; truncated entries release
+          // their checkpoint blocks. A persisted entry built over a
+          // truncated one embeds its checkpoint as a leaf, so routing
+          // it through Frames.release would only print that call's
+          // contract-violation WARN for a correct no-op.
+          case Some(v) => v.foreach(e.free)
           case None =>
             // in-flight build: the entry is dropped now, so when the
             // build finishes its cached DataFrame would stay persisted
             // but unreachable through Memo until session stop (ADVICE
             // r7) — unpersist it the moment it materializes instead.
-            f.onComplete(_.foreach { df =>
+            e.f.onComplete(_.foreach { df =>
               // Try: the context can stop between the isStopped check
               // and unpersist; a throw here would only spam the global
               // EC's uncaught reporter (ADVICE r8).
               scala.util.Try {
-                if (!spark.sparkContext.isStopped) {
-                  df.unpersist(); graft.core.Frames.release(df)
-                }
+                if (!spark.sparkContext.isStopped) e.free(df)
               }
             })(scala.concurrent.ExecutionContext.global)
         }

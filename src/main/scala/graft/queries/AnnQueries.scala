@@ -236,12 +236,14 @@ object AnnQueries {
     // ivfCent build here so their one-time cost lands in index_build
     // (visible, counted) rather than inside ann_ivf's untimed warm
     // rep (the memo-truth accounting rule, round 16).
-    val ivfConsumers = Set("ann_ivf", "ann_recall", "ann_semdedup")
+    // ann_semdedup reads labeledPrep only, never the centroids
+    val prepConsumers = Set("ann_ivf", "ann_recall", "ann_semdedup")
+    val centConsumers = Set("ann_ivf", "ann_recall")
     graft.core.Par.run(Seq(
       () => if (!cosConsumers.subsetOf(skipped)) cosTruth(s, dir).count(): Unit,
       () => if (!l2Consumers.subsetOf(skipped)) l2Truth(s, dir).count(): Unit,
-      () => if (!ivfConsumers.subsetOf(skipped)) labeledPrep(s, dir).count(): Unit,
-      () => if (!ivfConsumers.subsetOf(skipped)) ivfCent(s, dir).count(): Unit))
+      () => if (!prepConsumers.subsetOf(skipped)) labeledPrep(s, dir).count(): Unit,
+      () => if (!centConsumers.subsetOf(skipped)) ivfCent(s, dir).count(): Unit))
   }
 
   /** Scratch locations of persisted IVF-PQ artifacts, keyed by

@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.dedup.{DedupSettings, Outputs, Pipeline}
+import graft.core.{Frames, Par, Tables}
+import graft.dedup.{DedupSettings, Normalize, Outputs, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -67,8 +68,22 @@ object Sources {
       .saveAsTable(table)
 
   /** S4 + E3 + O1 — run the full pipeline on an input file and write
-    * the three reference reports under `outDir` (parquet or csv).
-    * Returns the full cluster table. */
+    * the five reports under `outDir`: company_duplicates_final,
+    * canonical_summary, settings, golden_mapping and
+    * high_confidence_review (parquet or csv; `xlsx` writes the
+    * reference's three workbooks instead).
+    *
+    * The pipeline runs once per call. The derived table (normalize
+    * chain) and the result table are each materialized once through
+    * [[graft.core.Frames.materialize]] — reliable checkpoint files when
+    * `settings.checkpointDir` is set, local checkpoint blocks otherwise
+    * — and every report is a projection of the result table, so the
+    * CSV scan, the normalize chain, the confidence join and the
+    * election windows never rerun per report. The parquet/csv writes
+    * are independent jobs over that table and run at the same time
+    * ([[graft.core.Par]]). Returns the result table, checkpoint-backed:
+    * its plan root is the checkpoint, and `Frames.release` on it frees
+    * the blocks (or files) once the caller is done with it. */
   def runFile(spark: SparkSession, inPath: String, outDir: String,
       nameCol: Option[String] = None, rowOrderCol: Option[String] = None,
       settings: DedupSettings = DedupSettings(), format: String = "parquet"): DataFrame = {
@@ -76,14 +91,24 @@ object Sources {
     val name = nameCol.orElse(detectNameColumn(df0)).getOrElse(
       throw new IllegalArgumentException(s"no string column in $inPath"))
     // a stable row id: an explicit key column, else a line id for
-    // single-partition inputs (documented: file order = row_order)
+    // single-partition inputs (documented: file order = row_order).
+    // The ids are assigned once, by the derived-table materialization
+    // below, so every report sees the same ids.
     val (df, orderCol) = rowOrderCol match {
       case Some(c) => (df0, c)
       case None =>
         (df0.coalesce(1).withColumn("_row_order",
           org.apache.spark.sql.functions.monotonically_increasing_id()), "_row_order")
     }
-    val full = Pipeline.run(df, name, orderCol, settings)
+    settings.engageCheckpoints(spark)
+    val reliable = settings.reliableCheckpoints
+    // Pipeline.run's own composition, with both tables materialized:
+    // the derived table has two readers inside the pipeline (name
+    // index, row-level confidence join), the result table five reports
+    val derived = Frames.materialize(Normalize.withDerived(
+      Tables.spread(df, orderCol), name, orderCol, settings), reliable)
+    val full = Frames.materialize(Pipeline.runDerived(derived, settings), reliable)
+    Frames.release(derived)
     if (format == "xlsx") {
       // the reference's exact three-workbook layout (outputs.py:44-58)
       new java.io.File(outDir).mkdirs()
@@ -97,16 +122,17 @@ object Sources {
       Xlsx.write(Seq("review" -> Outputs.review(full)),
         s"$outDir/high_confidence_review.xlsx")
     } else {
-      def save(d: DataFrame, sub: String): Unit = {
+      def save(d: DataFrame, sub: String): () => Unit = () => {
         val w = d.coalesce(1).write.mode("overwrite")
         if (format == "csv") w.option("header", "true").csv(s"$outDir/$sub")
         else w.parquet(s"$outDir/$sub")
       }
-      save(Outputs.clusters(full), "company_duplicates_final")
-      save(Outputs.summary(full), "canonical_summary")
-      save(Outputs.settingsEcho(spark, settings), "settings")
-      save(Outputs.mapping(full), "golden_mapping")
-      save(Outputs.review(full), "high_confidence_review")
+      Par.run(Seq(
+        save(Outputs.clusters(full), "company_duplicates_final"),
+        save(Outputs.summary(full), "canonical_summary"),
+        save(Outputs.settingsEcho(spark, settings), "settings"),
+        save(Outputs.mapping(full), "golden_mapping"),
+        save(Outputs.review(full), "high_confidence_review")))
     }
     full
   }

@@ -135,20 +135,26 @@ object BandStore {
         // holding the .lock file. ~3 s total, then fall back to the
         // documented unlocked best-effort path (worst case: one run's
         // samples lost to a concurrent merge — never a stalled run).
-        def tryAcquire(): Option[java.nio.channels.FileLock] = {
+        // Only a null tryLock() — a peer process holds the lock — is
+        // worth waiting for; an exception (the lock already held in
+        // this JVM, an I/O error) will not clear, so it falls back at
+        // once.
+        def tryAcquire(): Either[String, java.nio.channels.FileLock] = {
           var left = 30
-          var got: Option[java.nio.channels.FileLock] = None
-          while (got.isEmpty && left > 0) {
-            got = scala.util.Try(Option(lockFile.getChannel.tryLock()))
-              .toOption.flatten
-            if (got.isEmpty) { Thread.sleep(100); left -= 1 }
+          var got: Either[String, java.nio.channels.FileLock] = Left("timed out")
+          while (got.isLeft && left > 0) {
+            scala.util.Try(lockFile.getChannel.tryLock()) match {
+              case scala.util.Success(null) => Thread.sleep(100); left -= 1
+              case scala.util.Success(l) => got = Right(l)
+              case scala.util.Failure(t) => got = Left(s"failed ($t)"); left = 0
+            }
           }
           got
         }
-        val lock = tryAcquire()
-        if (lock.isEmpty)
-          System.err.println(s"WARN BandStore: lock on $path.lock timed out; " +
-            "appending unlocked (best-effort)")
+        val acquired = tryAcquire()
+        val lock = acquired.toOption
+        acquired.swap.foreach(why => System.err.println(
+          s"WARN BandStore: lock on $path.lock $why; appending unlocked (best-effort)"))
         try appendLocked(path, sig, fresh)
         finally lock.foreach(l => scala.util.Try(l.release()))
       } finally lockFile.close()

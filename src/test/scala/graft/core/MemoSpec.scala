@@ -197,4 +197,30 @@ class MemoSpec extends AnyFunSuite {
     assert(attempts === 2 && ok.head().getInt(0) === 3)
     Memo.invalidate(spark)
   }
+
+  test("invalidate frees a persisted entry built over a truncated one without a WARN") {
+    import spark.implicits._
+    val base = Memo.cached(spark, "memo-warn:base", truncate = true) {
+      (1 to 10).toDF("v")
+    }
+    val agg = Memo.cached(spark, "memo-warn:agg") { base.groupBy().count() }
+    assert(agg.head().getLong(0) === 10)
+    // the persisted entry's plan embeds the truncated entry's
+    // checkpoint as a leaf: Frames.release would call it a violation
+    assert(agg.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr }.size === 1)
+    val rddId = base.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    assert(agg.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Memo.invalidate(spark, "memo-warn:")
+    finally System.setErr(saved)
+    assert(!err.toString.contains("Frames.release"), err.toString)
+    // both entries are still freed: the cache entry and the blocks
+    assert(agg.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
+  }
 }

@@ -1,6 +1,10 @@
 package graft.sources
 
-import graft.dedup.SparkTest
+import graft.core.Frames
+import graft.dedup.{DedupSettings, Outputs, Pipeline, SparkTest}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -83,5 +87,121 @@ class SourcesSpec extends AnyFunSuite {
         "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp").collect()(0)
     assert(r.getDouble(0) == 0.8444444444444443)
     assert(r.getDouble(1) == 11.0)
+  }
+
+  private val Stems = Seq("Acme", "Globex", "Initech", "Umbrella", "Hooli", "Vandelay",
+    "Stark", "Wayne", "Wonka", "Tyrell", "Cyberdyne", "Soylent", "Oscorp", "Sterling")
+  private val Seconds = Seq("Industries", "Trading", "Systems", "Holdings", "Foods")
+  private val Tails = Seq("Ltd", "Limited", "Inc", "Pvt Ltd", "LLC", "Corporation", "")
+
+  /** Company `i` of a deterministic master file: stems x second words x
+    * legal tails, with case variants and a dropped-letter typo on every
+    * eleventh row, so clusters hold several surface forms. */
+  private def company(i: Int): String = {
+    val stem = Stems(i % Stems.size)
+    val typo = if (i % 11 == 0) stem.dropRight(1) else stem
+    val n = s"$typo ${Seconds(i / Stems.size % Seconds.size)} " +
+      Tails(i / (Stems.size * Seconds.size) % Tails.size)
+    (i % 3 match {
+      case 0 => n
+      case 1 => n.toUpperCase
+      case _ => n.toLowerCase
+    }).trim
+  }
+
+  /** A CSV of `rows` companies, with an `id` key column or without. */
+  private def companiesCsv(rows: Int, withId: Boolean): String = {
+    val dir = Files.createTempDirectory("graft_runfile").toFile
+    val csv = new java.io.File(dir, "companies.csv")
+    val w = new java.io.PrintWriter(csv)
+    w.println(if (withId) "id,Company Name" else "Company Name")
+    (0 until rows).foreach(i => w.println(if (withId) s"${1000 + i},${company(i)}" else company(i)))
+    w.close()
+    csv.getAbsolutePath
+  }
+
+  private def reports(full: DataFrame, settings: DedupSettings): Seq[(String, DataFrame)] = Seq(
+    "company_duplicates_final" -> Outputs.clusters(full),
+    "canonical_summary" -> Outputs.summary(full),
+    "settings" -> Outputs.settingsEcho(spark, settings),
+    "golden_mapping" -> Outputs.mapping(full),
+    "high_confidence_review" -> Outputs.review(full))
+
+  /** One written report, rows in file order. */
+  private def written(out: String, sub: String, format: String,
+      like: DataFrame): Seq[Row] =
+    (if (format == "csv")
+      spark.read.schema(like.schema).option("header", "true").csv(s"$out/$sub")
+    else spark.read.parquet(s"$out/$sub")).collect().toSeq
+
+  test("runFile reports equal the unmaterialized pipeline's, in every regime and format") {
+    val csv = companiesCsv(160, withId = true)
+    val regimes = Seq(
+      "driver fast path" -> DedupSettings(),
+      "materialize" -> DedupSettings(driverFastPathNames = 0L),
+      "materialize, reliable checkpoints" -> DedupSettings(driverFastPathNames = 0L,
+        checkpointDir = Some(Files.createTempDirectory("graft_runfile_ck").toString)))
+    for ((regime, settings) <- regimes) {
+      val expected = Pipeline.run(Sources.readCsv(spark, csv), "Company Name", "id", settings)
+      val expectedReports = reports(expected, settings).map { case (sub, d) =>
+        (sub, d, d.collect().toSeq) }
+      val expectedRows = expected.orderBy("row_order").collect().toSeq
+      assert(expectedRows.size === 160)
+      for (format <- Seq("parquet", "csv")) {
+        val out = Files.createTempDirectory("graft_runfile_out").toString
+        val full = Sources.runFile(spark, csv, out, Some("Company Name"), Some("id"),
+          settings, format)
+        for ((sub, like, rows) <- expectedReports) {
+          // csv reads an empty string back as null (settings'
+          // explicit_maps is empty): the format cannot tell them apart
+          val want = if (format == "csv")
+            rows.map(r => Row.fromSeq(r.toSeq.map { case "" => null; case v => v }))
+          else rows
+          assert(written(out, sub, format, like) === want, s"$regime / $format / $sub")
+        }
+        // the returned frame is the checkpoint itself, with the same rows
+        full.queryExecution.analyzed match {
+          case lr: LogicalRDD =>
+            assert(lr.rdd.getCheckpointFile.isDefined === settings.reliableCheckpoints, regime)
+          case other => fail(s"$regime: returned plan root is ${other.getClass.getSimpleName}")
+        }
+        assert(full.orderBy("row_order").collect().toSeq === expectedRows, regime)
+        Frames.release(full)
+      }
+    }
+  }
+
+  test("no key column: every report sees the same line ids") {
+    // big enough (> 64 KB) that the pipeline spreads the single-split
+    // scan across partitions after the ids are assigned
+    val n = 3000
+    val csv = companiesCsv(n, withId = false)
+    val out = Files.createTempDirectory("graft_runfile_nokey").toString
+    val full = Sources.runFile(spark, csv, out)
+    def read(sub: String) = spark.read.parquet(s"$out/$sub")
+    val clusters = read("company_duplicates_final")
+    // file order = row_order
+    val byRow = clusters.select("row_order", "original_name").collect()
+    assert(byRow.map(_.getLong(0)).toSeq === (0L until n.toLong))
+    assert(byRow.map(_.getString(1)).toSeq === (0 until n).map(company))
+
+    val pairs = clusters.select("original_name", "canonical_name")
+    val mapping = read("golden_mapping")
+    assert(mapping.count() === n)
+    assert(mapping.exceptAll(pairs).isEmpty && pairs.exceptAll(mapping).isEmpty)
+
+    val summary = read("canonical_summary")
+    assert(summary.agg(sum("count")).head().getLong(0) === n)
+    val perCluster = clusters.groupBy("cluster_id", "canonical_name").count()
+    assert(summary.exceptAll(perCluster).isEmpty && perCluster.exceptAll(summary).isEmpty)
+
+    val review = read("high_confidence_review")
+    val expectedReview = clusters.filter(col("confidence") >= 0.95 && col("cluster_size") >= 2)
+    assert(review.collect().toSeq === expectedReview.collect().toSeq)
+    assert(review.count() > 0)
+
+    assert(full.select(clusters.columns.map(col): _*).orderBy("row_order").collect().toSeq ===
+      clusters.collect().toSeq)
+    Frames.release(full)
   }
 }

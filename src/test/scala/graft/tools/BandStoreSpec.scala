@@ -109,4 +109,23 @@ class BandStoreSpec extends AnyFunSuite {
       0.74, 0.78, 0.82, 0.85, 1.2, 1.6, 3.4, 6.5)
     assert(BandStore.derive(wide).get.spread === 2.0)
   }
+
+  test("append falls back at once when tryLock throws instead of retrying") {
+    val p = tmpPath()
+    // a lock already held in this JVM makes tryLock() throw
+    // OverlappingFileLockException: it never clears, so waiting out
+    // the 30 x 100 ms retry budget would only stall the caller
+    val held = new java.io.RandomAccessFile(p + ".lock", "rw")
+    val lock = held.getChannel.lock()
+    try {
+      val t0 = System.nanoTime()
+      BandStore.append(p, "sig-a", Seq(0.5))
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 2000, s"append waited $ms ms on a non-retryable lock error")
+      assert(BandStore.load(p, "sig-a") === Seq(0.5)) // unlocked append landed
+    } finally {
+      lock.release(); held.close()
+      new java.io.File(p).delete(); new java.io.File(p + ".lock").delete()
+    }
+  }
 }
