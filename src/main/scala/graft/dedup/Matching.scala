@@ -17,15 +17,33 @@ import org.apache.spark.sql.functions._
   * name side is small. */
 object Matching {
 
+  /** The size of a name index, from one aggregate over it: distinct
+    * names, implied pairs Σ C(|block|, 2) and the largest block's
+    * name count. The name-level stage picks its regime from this row
+    * (driver fast path, dense guard, CC's edge bound). */
+  final case class StageSizing(names: Long, impliedPairs: Long, maxBlockNames: Long)
+
+  /** [[StageSizing]] of a (materialized) name index — one tiny job. */
+  def stageSizing(stats: DataFrame): StageSizing = {
+    // SQL `/` is double division — n·(n-1) is always even, so the
+    // long cast after the halving is exact
+    val r = stats.groupBy("block_key").agg(count(lit(1)).as("_n"))
+      .agg(sum(col("_n")), sum((col("_n") * (col("_n") - 1) / 2).cast("long")),
+        max(col("_n"))).head()
+    if (r.isNullAt(0)) StageSizing(0L, 0L, 0L)
+    else StageSizing(r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** Which execution regime the name-level stage (pairs → components
-    * + candidates) last ran on the calling thread, and how many JW
-    * passes the dense regime paid. Mirrors [[Cluster.lastStats]]:
-    * observability only, thread-local, no production branching. */
-  final case class StageStats(regime: String, jwPasses: Int)
+    * + candidates) last ran on the calling thread, how many JW passes
+    * it paid, and the sizing row the regime was chosen from. Mirrors
+    * [[Cluster.lastStats]]: observability only, thread-local, no
+    * production branching. */
+  final case class StageStats(regime: String, jwPasses: Int, sizing: StageSizing)
   private val lastStageTl = new ThreadLocal[StageStats]
   def lastStageStats: Option[StageStats] = Option(lastStageTl.get)
-  private[dedup] def recordStage(regime: String, jwPasses: Int): Unit =
-    lastStageTl.set(StageStats(regime, jwPasses))
+  private[dedup] def recordStage(regime: String, jwPasses: Int, sizing: StageSizing): Unit =
+    lastStageTl.set(StageStats(regime, jwPasses, sizing))
 
   /** Distinct-name statistics per block. `min_row` doubles as the
     * name's graph-node id; `max_row` drives the per-row confidence
@@ -133,37 +151,36 @@ object Matching {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Driver fast path for SMALL name indexes: computes the pair join,
-    * connected components, and the per-name confidence candidates in
-    * one driver pass over the collected index, replacing ~6 tiny
-    * Spark jobs (pair checkpoint, CC checkpoint/count/collect, sizing
-    * aggregate) whose fixed scheduling overhead dominates at test
-    * scale. Semantics are bit-identical to the distributed path: the
-    * SAME [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the
-    * same predicate and confidence ladder, min-label components, and
-    * the same O(names) candidate reduction (max partner row per
-    * (name, conf)).
+  /** Driver fast path for name indexes under the gate: computes the
+    * pair join, connected components, and the per-name confidence
+    * candidates in one driver pass over the collected index, replacing
+    * the salted pair join and its checkpoint, CC's collect and the two
+    * rejoin joins of the distributed path (timings on
+    * [[DedupSettings.driverFastPathNames]]). Semantics are
+    * bit-identical to the distributed path: the SAME
+    * [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the same
+    * predicate and confidence ladder, min-label components, and the
+    * same O(names) candidate reduction (max partner row per (name,
+    * conf)).
     *
-    * Returns None — caller must use the distributed path — when the
-    * index exceeds `settings.driverFastPathNames`, any block exceeds
-    * the governor cap (the hot-block policy is a distributed
-    * concern), or the implied pair count exceeds `maxPairEstimate`
-    * (driver pairing is single-threaded; 2M pairs ≈ 1–2 s is the
-    * break-even against executor parallelism). */
-  private[dedup] def driverPairsAndCandidates(statsCk: DataFrame,
+    * Returns None — caller must use the distributed path — without
+    * touching the index when `sizing` shows more names than
+    * `settings.driverFastPathNames`, a block over the governor cap (the
+    * hot-block policy is a distributed concern), or more implied pairs
+    * than `maxPairEstimate` (driver pairing is single-threaded; 2M
+    * pairs ≈ 1–2 s of JW bounds it). */
+  private[dedup] def driverPairsAndCandidates(stats: DataFrame, sizing: StageSizing,
       settings: DedupSettings = DedupSettings(), maxPairEstimate: Long = 2000000L)
       : Option[(Seq[(Long, Long)], Seq[(String, Double, Long)])] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val limit = settings.driverFastPathNames
-    if (limit <= 0 || statsCk.count() > limit) return None
-    val rows = statsCk
+    val fits = settings.driverFastPathNames > 0 &&
+      sizing.names <= settings.driverFastPathNames &&
+      sizing.impliedPairs <= maxPairEstimate &&
+      settings.maxBlockNames.forall(sizing.maxBlockNames <= _)
+    if (!fits) return None
+    val byBlock = stats
       .select("block_key", "base_name", "min_row", "max_row", "token_key").collect()
-    val byBlock = rows.groupBy(_.getString(0))
-    val pairEst = byBlock.valuesIterator
-      .map(b => b.length.toLong * (b.length - 1) / 2).sum
-    val underCap = settings.maxBlockNames
-      .forall(cap => byBlock.valuesIterator.forall(_.length <= cap))
-    if (pairEst > maxPairEstimate || !underCap) return None
+      .groupBy(_.getString(0))
 
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     val nodes = scala.collection.mutable.Set.empty[Long]
@@ -243,7 +260,7 @@ object Matching {
     * thousand driver rows. Bit-identical to the materialized path:
     * same join, same thresholds, same reduction — pinned by
     * DensePathSpec. */
-  private[dedup] def denseAggregatedStage(stats: DataFrame,
+  private[dedup] def denseAggregatedStage(stats: DataFrame, sizing: StageSizing,
       settings: DedupSettings, maxIter: Int = 50): (DataFrame, DataFrame) = {
     val spark = stats.sparkSession
     import spark.implicits._
@@ -321,7 +338,7 @@ object Matching {
       s"denseAggregatedStage exhausted maxIter=$maxIter before convergence — " +
         "returned components may be under-merged")
     log.info(s"denseAggregatedStage: converged after $iter JW pass(es) + 1 shared")
-    recordStage("dense-recompute", iter + 1)
+    recordStage("dense-recompute", iter + 1, sizing)
     val comps = parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "component")
     (comps, crossCand)
   }

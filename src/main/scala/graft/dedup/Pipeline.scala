@@ -34,17 +34,6 @@ import org.apache.spark.sql.functions._
   * results (ReliableCheckpointSpec). */
 object Pipeline {
 
-  /** Σ |block|·(|block|-1)/2 over the (materialized) name index —
-    * one tiny aggregate job, the same estimate the driver fast path
-    * and the governor sizing use. */
-  private[dedup] def pairEstimate(stats: org.apache.spark.sql.DataFrame): Long = {
-    // SQL `/` is double division — n·(n-1) is always even, so the
-    // long cast after the halving is exact
-    val r = stats.groupBy("block_key").agg(count(lit(1)).as("_n"))
-      .agg(sum((col("_n") * (col("_n") - 1) / 2).cast("long"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
   /** Typed row of the pipeline output — for callers who want
     * compile-time field checks on the contract table. */
   case class DedupRecord(
@@ -105,38 +94,39 @@ object Pipeline {
     // checkpoint files — the multi-executor deployment path.
     settings.engageCheckpoints(spark)
     val reliable = settings.reliableCheckpoints
-    // Name index materialized ONCE; every branch below (fast-path
+    // Name index materialized ONCE; every branch below (regime
     // sizing, pair join sides, row-level joins) reads the blocks.
     val stats = graft.core.Frames.materialize(Matching.nameStats(derived), reliable)
+    // ONE sizing aggregate picks the regime: the driver fast-path
+    // gate, the dense guard and CC's edge bound all read this row, and
+    // it is recorded with the regime (StageStats).
+    val sizing = Matching.stageSizing(stats)
 
-    // The pair join (the Jaro-Winkler work) has two consumers — the
-    // CC edge set and the confidence candidates. Materializing the
-    // full pair rows is off the table (a dense block makes them tens
-    // of millions of WIDE rows — 6 GB at the 10×-scale stress test),
-    // but the similarity compute itself must not run twice either
-    // (round 2 paid a double JW pass here: once for the eager CC
-    // build, once in the final DAG). Resolution: checkpoint ONLY the
-    // compact (a_min_row, b_min_row, pair_conf) projection — 24
-    // bytes/pair — and recover the name-level fields by joining back
-    // to `stats` on min_row, which uniquely identifies a distinct
-    // name (each row belongs to exactly one (block_key, base_name)
-    // group, so group minima never collide). Small name indexes skip
-    // all of it: Matching.driverPairsAndCandidates computes the same
-    // (components, candidates) in one driver pass — bit-identical
-    // results, ~6 fewer jobs (the Cluster.localEdgeCC philosophy
-    // applied to the whole name-level stage).
-    // lazy: the driver fast path never needs the estimate; the other
-    // two branches share ONE aggregate job (the regime guard and the
-    // CC gate both read it)
-    lazy val impliedPairs = Pipeline.pairEstimate(stats)
+    // Up to DedupSettings.driverFastPathNames names (and 2M implied
+    // pairs), Matching.driverPairsAndCandidates computes (components,
+    // candidates) in one driver pass over the collected index —
+    // bit-identical results, none of the distributed jobs below (the
+    // Cluster.localEdgeCC philosophy applied to the whole name-level
+    // stage). Above it the pair join (the Jaro-Winkler work) has two
+    // consumers — the CC edge set and the confidence candidates.
+    // Materializing the full pair rows is off the table (a dense
+    // block makes them tens of millions of WIDE rows — 6 GB at the
+    // 10×-scale stress test), but the similarity compute itself must
+    // not run twice either (round 2 paid a double JW pass here: once
+    // for the eager CC build, once in the final DAG). Resolution:
+    // checkpoint ONLY the compact (a_min_row, b_min_row, pair_conf)
+    // projection — 24 bytes/pair — and recover the name-level fields
+    // by joining back to `stats` on min_row, which uniquely
+    // identifies a distinct name (each row belongs to exactly one
+    // (block_key, base_name) group, so group minima never collide).
     val (comps, crossCand) =
-      Matching.driverPairsAndCandidates(stats, settings) match {
+      Matching.driverPairsAndCandidates(stats, sizing, settings) match {
         case Some((compsLocal, candLocal)) =>
           import spark.implicits._
-          Matching.recordStage("driver-fast-path", 1)
+          Matching.recordStage("driver-fast-path", 1, sizing)
           (compsLocal.toDF("id", "component"),
             candLocal.toDF("cand_name", "cand_conf", "partner_max_row"))
-        case None if impliedPairs > settings.densePairEstimate =>
+        case None if sizing.impliedPairs > settings.densePairEstimate =>
           // DENSE regime (sf1+ supplier: a 10k-name near-clique is
           // 50M implied pairs): checkpointing the pair rows costs
           // gigabytes of storage + GC churn while the codegen'd JW
@@ -144,9 +134,9 @@ object Pipeline {
           // push both consumers down to aggregates over the streamed
           // join (one shared pass + one verification pass per CC
           // round). See Matching.denseAggregatedStage.
-          Matching.denseAggregatedStage(stats, settings)
+          Matching.denseAggregatedStage(stats, sizing, settings)
         case None =>
-          Matching.recordStage("materialize", 1)
+          Matching.recordStage("materialize", 1, sizing)
           val pairsCompact = graft.core.Frames.materialize(
             Matching.qualifyingPairsPrepared(stats, settings)
               .select(col("a_min_row"), col("b_min_row"), col("pair_conf")),
@@ -164,7 +154,7 @@ object Pipeline {
           // already fits the driver, CC skips the pre-contraction
           // constant outright (VERDICT r15 item 1)
           val compsDist = Cluster.connectedComponents(edges,
-            edgesMaterialized = true, edgeCountHint = impliedPairs,
+            edgesMaterialized = true, edgeCountHint = sizing.impliedPairs,
             reliable = reliable)
           // name fields recovered from the compact checkpoint: AQE
           // turns both min_row joins into broadcasts (the name index

@@ -28,12 +28,37 @@ final case class DedupSettings(
       * O(|b|·w)); window <= 1 drops the block entirely (rows keep
       * singleton clusters). */
     hotBlockWindow: Int = 10,
-    /** Driver fast path gate (execution knob, not semantics): name
-      * indexes at most this large — with a bounded implied pair count
-      * — run pairing + components + candidates on the driver instead
-      * of ~6 tiny distributed jobs (Matching.driverPairsAndCandidates;
-      * results are bit-identical). 0 disables. */
-    driverFastPathNames: Long = 4096L,
+    /** Driver fast path gate (execution knob, not semantics): a name
+      * index of at most this many distinct names — with at most 2M
+      * implied pairs and no block over [[maxBlockNames]] — runs
+      * pairing + components + candidates in one driver pass
+      * (Matching.driverPairsAndCandidates) instead of the distributed
+      * pair checkpoint, CC collect and rejoin joins; results are
+      * bit-identical. The pair bound caps the driver's single-threaded
+      * JW work; this gate caps the index the driver collects. 0 forces
+      * the distributed path.
+      *
+      * Measured: `Sources.runFile` job seconds on perfbench's seeded
+      * company file scaled to 1, 10, 30, 60 and 120× its entities
+      * (blocks of ≤ 11 names), each regime forced through this knob,
+      * `local[4]` on a 4-vCPU VM, one run per cell, seeds 1 / 2:
+      *
+      * {{{
+      *   names   implied pairs   distributed (0)   driver
+      *    4.4k        2.0k          7.8 /  8.6     4.2 /  5.0
+      *     44k         20k         15.1 / 17.9    10.8 / 11.2
+      *    132k         58k         24.9 / 25.2    13.7 / 17.6
+      *    264k        118k         40.8 / 33.7    26.0 / 26.2
+      *    528k        235k         56.8 / 56.5    42.9 / 40.6
+      * }}}
+      *
+      * The driver path was faster at every size: on inputs like these
+      * there is no speed crossover up to 528k names, and the gate bounds
+      * driver memory rather than time. The default is 2^18, the largest
+      * power of two with two measured sizes above it (2^19 has only the
+      * 528k row, 0.8% above it, and the driver heap the collected index
+      * needs was not measured). */
+    driverFastPathNames: Long = 262144L,
     /** Dense regime gate (execution knob, not semantics): above this
       * implied pair count the name-level stage never materializes
       * pair rows — it recomputes the codegen'd JW join per consumer

@@ -83,7 +83,15 @@ object Sources {
     * are independent jobs over that table and run at the same time
     * ([[graft.core.Par]]). Returns the result table, checkpoint-backed:
     * its plan root is the checkpoint, and `Frames.release` on it frees
-    * the blocks (or files) once the caller is done with it. */
+    * the blocks (or files) once the caller is done with it.
+    *
+    * CSV reports write a null as an empty unquoted field and an empty
+    * string as `""`. Spark's csv reader turns both into null by default
+    * (its `nullValue` is the empty string). Read a report back with
+    * `.option("header", "true").option("nullValue", "\u0000")` — any
+    * `nullValue` that never occurs in the data — to keep them apart:
+    * empty fields then read as null and `""` as the empty string
+    * (e.g. the settings report's empty `explicit_maps`). */
   def runFile(spark: SparkSession, inPath: String, outDir: String,
       nameCol: Option[String] = None, rowOrderCol: Option[String] = None,
       settings: DedupSettings = DedupSettings(), format: String = "parquet"): DataFrame = {

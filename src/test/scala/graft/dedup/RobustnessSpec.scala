@@ -88,4 +88,46 @@ class RobustnessSpec extends AnyFunSuite {
       assert(fast.toSeq == dist.toSeq, s"paths diverge for seed $seed")
     }
   }
+
+  test("driver fast path == distributed pipeline above 4,096 names; the stage record explains the regime") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    def word(syllables: Int): String = (0 until syllables).map(_ =>
+      s"${"BDFGKLMNPRSTVZ".charAt(rnd.nextInt(14))}${"AEIOU".charAt(rnd.nextInt(5))}").mkString
+    // 700 first tokens × 7 second tokens: ~4.9k distinct base names;
+    // every 5th name also appears once more verbatim and once with its
+    // last two letters swapped (self and cross candidates), so blocks
+    // hold ≤ 9 names — plus one 12-name block
+    val heads = Iterator.continually(word(3)).distinct.take(700).toSeq
+    val names = heads.flatMap(h => (0 until 7).map(_ => s"$h ${word(3)}"))
+    val variants = names.indices.filter(_ % 5 == 0).flatMap { i =>
+      val n = names(i)
+      Seq(n, n.dropRight(2) + n.takeRight(1) + n.takeRight(2).head)
+    }
+    val big = Iterator.continually(word(3)).distinct.take(12).map(w => s"BIGBLOCK $w").toSeq
+    val df = (names ++ variants ++ big).zipWithIndex.map { case (n, i) => (i.toLong, n) }
+      .toDF("id", "name")
+
+    def run(settings: DedupSettings) = {
+      val rows = Pipeline.run(df, "name", "id", settings).orderBy("row_order").collect()
+      (rows.toSeq, Matching.lastStageStats.get)
+    }
+    val (fast, fastStage) = run(DedupSettings())
+    val (dist, distStage) = run(DedupSettings(driverFastPathNames = 0L))
+    assert(fast == dist, "driver fast path diverges from the materialize regime")
+    assert(fastStage.regime == "driver-fast-path")
+    assert(distStage.regime == "materialize")
+
+    // the recorded sizing is the index's own: names, Σ C(b,2), max block
+    val blocks = Matching.nameStats(Normalize.withDerived(df, "name", "id"))
+      .groupBy("block_key").count().collect().map(_.getLong(1))
+    val expected = Matching.StageSizing(blocks.sum, blocks.map(b => b * (b - 1) / 2).sum, blocks.max)
+    assert(expected.names > 4096L && expected.maxBlockNames == 12L, expected)
+    assert(fastStage.sizing == expected && distStage.sizing == expected)
+
+    // a block over the governor cap keeps the index off the driver
+    val (_, cappedStage) = run(DedupSettings(maxBlockNames = Some(10L)))
+    assert(cappedStage.regime == "materialize", cappedStage)
+    assert(cappedStage.sizing == expected)
+  }
 }
