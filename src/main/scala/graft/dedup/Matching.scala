@@ -151,17 +151,17 @@ object Matching {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Driver fast path for name indexes under the gate: computes the
-    * pair join, connected components, and the per-name confidence
-    * candidates in one driver pass over the collected index, replacing
-    * the salted pair join and its checkpoint, CC's collect and the two
-    * rejoin joins of the distributed path (timings on
-    * [[DedupSettings.driverFastPathNames]]). Semantics are
-    * bit-identical to the distributed path: the SAME
+  /** The name table, built on the driver for name indexes under the
+    * gate: the pair join, connected components, the cluster sizes, the
+    * canonical election and the confidence thresholds of every distinct
+    * name in one driver pass over the collected index, replacing the
+    * salted pair join and its checkpoint, CC's collect, the rejoin joins
+    * and the name-level aggregates of [[nameTable]] (timings on
+    * [[DedupSettings.driverFastPathNames]]). Semantics are bit-identical
+    * to [[nameTable]] over the distributed regimes: the SAME
     * [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the same
     * predicate and confidence ladder, min-label components, and the
-    * same O(names) candidate reduction (max partner row per (name,
-    * conf)).
+    * same election order (code-point length, UTF-8 byte order).
     *
     * Returns None — caller must use the distributed path — without
     * touching the index when `sizing` shows more names than
@@ -169,69 +169,128 @@ object Matching {
     * hot-block policy is a distributed concern), or more implied pairs
     * than `maxPairEstimate` (driver pairing is single-threaded; 2M
     * pairs ≈ 1–2 s of JW bounds it). */
-  private[dedup] def driverPairsAndCandidates(stats: DataFrame, sizing: StageSizing,
+  private[dedup] def driverNameTable(stats: DataFrame, sizing: StageSizing,
       settings: DedupSettings = DedupSettings(), maxPairEstimate: Long = 2000000L)
-      : Option[(Seq[(Long, Long)], Seq[(String, Double, Long)])] = {
+      : Option[DataFrame] = {
     import org.apache.spark.unsafe.types.UTF8String
     val fits = settings.driverFastPathNames > 0 &&
       sizing.names <= settings.driverFastPathNames &&
       sizing.impliedPairs <= maxPairEstimate &&
       settings.maxBlockNames.forall(sizing.maxBlockNames <= _)
     if (!fits) return None
-    val byBlock = stats
-      .select("block_key", "base_name", "min_row", "max_row", "token_key").collect()
-      .groupBy(_.getString(0))
+    val rows = stats
+      .select("block_key", "base_name", "n_rows", "min_row", "max_row", "token_key").collect()
+    val n = rows.length
+    val name = rows.map(r => UTF8String.fromString(r.getString(1)))
+    val nRows = rows.map(_.getLong(2))
+    val minRow = rows.map(_.getLong(3))
+    val maxRow = rows.map(_.getLong(4))
+    val tokenKey = rows.map(_.getString(5))
 
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    val nodes = scala.collection.mutable.Set.empty[Long]
-    def find(x: Long): Long = {
+    // union-find over name indexes
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val p = parent(c); parent(c) = r; c = p }
       r
     }
-    def union(a: Long, b: Long): Unit = {
-      nodes += a; nodes += b
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val cand = scala.collection.mutable.Map.empty[(String, Double), Long]
-    def offer(name: String, conf: Double, partnerMax: Long): Unit = {
-      val k = (name, conf)
-      if (cand.getOrElse(k, Long.MinValue) < partnerMax) cand(k) = partnerMax
-    }
-    byBlock.valuesIterator.foreach { block =>
-      val ns = block.map(r =>
-        (r.getString(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      var i = 0
-      while (i < ns.length) {
-        var j = i + 1
-        while (j < ns.length) {
-          val a = ns(i); val b = ns(j)
-          val ratio = graft.functions.JaroWinklerAlgo.similarity(
-            UTF8String.fromString(a._1), UTF8String.fromString(b._1))
-          val tok = a._4 == b._4
-          if ((tok && ratio >= settings.softThreshold) ||
-            ratio >= settings.hardThreshold) {
-            val conf =
-              if (tok && ratio >= 0.90) Rules.ConfTokenAndRatio
-              else if (ratio >= 0.90) Rules.ConfHardRatio
-              else if (ratio >= 0.85) Rules.ConfSoftRatio
-              else Rules.ConfDefault
-            union(a._2, b._2)
-            offer(a._1, conf, b._3)
-            offer(b._1, conf, a._3)
+    // A.1 thresholds per confidence level (0 = 0.98, 1 = 0.95,
+    // 2 = 0.88): the largest partner max_row, Long.MinValue = none
+    val top = Array.fill(3, n)(Long.MinValue)
+    def offer(level: Int, i: Int, partnerMax: Long): Unit =
+      if (top(level)(i) < partnerMax) top(level)(i) = partnerMax
+    rows.indices.groupBy(rows(_).getString(0)).valuesIterator.foreach { block =>
+      var x = 0
+      while (x < block.length) {
+        var y = x + 1
+        while (y < block.length) {
+          val (i, j) = (block(x), block(y))
+          val ratio = graft.functions.JaroWinklerAlgo.similarity(name(i), name(j))
+          val tok = tokenKey(i) == tokenKey(j)
+          if ((tok && ratio >= settings.softThreshold) || ratio >= settings.hardThreshold) {
+            val (ri, rj) = (find(i), find(j))
+            if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
+            // the confidence ladder as a level; a 0.70 pair never beats
+            // the 0.70 default, so it only merges clusters
+            val level = if (tok && ratio >= 0.90) 0 else if (ratio >= 0.90) 1
+              else if (ratio >= 0.85) 2 else -1
+            if (level >= 0) { offer(level, i, maxRow(j)); offer(level, j, maxRow(i)) }
           }
-          j += 1
+          y += 1
         }
-        i += 1
+        x += 1
       }
     }
-    // min-label component per edge-connected node (same contract as
-    // Cluster.connectedComponents: nodes without edges are absent)
-    val comps = nodes.iterator.map(n => (n, find(n))).toSeq
-    Some((comps, cand.iterator.map { case ((n, c), m) => (n, c, m) }.toSeq))
+    // a name's own rows are 0.98 candidates for each other
+    for (i <- 0 until n if nRows(i) >= 2) offer(0, i, maxRow(i))
+
+    // per root: cluster id = min row, size = Σ n_rows, and the elected
+    // name = min by (-n_rows, code-point length, UTF-8 bytes)
+    val clusterId = Array.fill(n)(Long.MaxValue)
+    val size = new Array[Long](n)
+    val elected = Array.fill(n)(-1)
+    def beats(i: Int, j: Int): Boolean =
+      if (nRows(i) != nRows(j)) nRows(i) > nRows(j)
+      else if (name(i).numChars != name(j).numChars) name(i).numChars < name(j).numChars
+      else name(i).compareTo(name(j)) < 0
+    for (i <- 0 until n) {
+      val r = find(i)
+      clusterId(r) = math.min(clusterId(r), minRow(i))
+      size(r) += nRows(i)
+      if (elected(r) < 0 || beats(i, elected(r))) elected(r) = i
+    }
+    def opt(t: Long) = if (t == Long.MinValue) None else Some(t)
+    val spark = stats.sparkSession
+    import spark.implicits._
+    Some((0 until n).map { i =>
+      val r = find(i)
+      (rows(i).getString(1), clusterId(r), size(r), rows(elected(r)).getString(1),
+        opt(top(0)(i)), opt(top(1)(i)), opt(top(2)(i)))
+    }.toDF("base_name", "cluster_id", "cluster_size", "elected_name", "t98", "t95", "t88"))
+  }
+
+  /** The name table from a distributed regime's name-level results —
+    * `comps` (id = a name's min_row, component) and `crossCand`
+    * (cand_name, cand_conf, partner_max_row), any number of candidate
+    * rows per (name, conf) — as name-level aggregates over `stats`. One
+    * row per distinct base name:
+    *
+    *  - cluster_id: the component's min row_order, else the name's
+    *    min_row (A.2)
+    *  - cluster_size: Σ n_rows over the cluster
+    *  - elected_name: the cluster's name with the most rows, then the
+    *    shortest in code points, then the first in UTF-8 byte order —
+    *    a name's votes are its n_rows (A.3)
+    *  - t98 / t95 / t88: the largest partner max_row among the name's
+    *    candidates at that confidence; t98 also counts the name's own
+    *    max_row when it has two rows or more. A row's confidence is the
+    *    highest level whose threshold exceeds its row_order (A.1); 0.70
+    *    candidates can never beat the 0.70 default, so none is kept.
+    *
+    * [[driverNameTable]] builds the same table on the driver. */
+  private[dedup] def nameTable(stats: DataFrame, comps: DataFrame,
+      crossCand: DataFrame): DataFrame = {
+    val clustered = stats
+      .join(comps.withColumnRenamed("id", "min_row"), Seq("min_row"), "left")
+      .select(col("base_name"), col("n_rows"), col("max_row"),
+        coalesce(col("component"), col("min_row")).as("cluster_id"))
+    val clusters = clustered.groupBy("cluster_id").agg(
+      sum(col("n_rows")).as("cluster_size"),
+      min(struct((-col("n_rows")).as("votes"), length(col("base_name")).as("len"),
+        col("base_name").as("name"))).getField("name").as("elected_name"))
+    def top(conf: Double) = max(when(col("cand_conf") === conf, col("partner_max_row")))
+    val thresholds = crossCand.groupBy(col("cand_name").as("base_name")).agg(
+      top(Rules.ConfTokenAndRatio).as("cross98"),
+      top(Rules.ConfHardRatio).as("t95"),
+      top(Rules.ConfSoftRatio).as("t88"))
+    clustered
+      .join(clusters, Seq("cluster_id"))
+      .join(thresholds, Seq("base_name"), "left")
+      .select(col("base_name"), col("cluster_id"), col("cluster_size"), col("elected_name"),
+        greatest(col("cross98"), when(col("n_rows") >= 2, col("max_row"))).as("t98"),
+        col("t95"), col("t88"))
   }
 
   /** Dense-block name-level stage WITHOUT pair materialization: the
@@ -248,7 +307,7 @@ object Matching {
     * grouped by (node, name, pair_conf) — name ↔ node is bijective
     * (node = the name's min_row) so the grouping is ≤ |confs| rows
     * per name — keeping `max(partner_max_row)` (the A.1 candidate
-    * reduction, same as the materialized path's groupBy) and
+    * reduction that [[nameTable]] finishes per name) and
     * `min(peer)` (each name's min qualifying neighbor per conf).
     * Connected components then run Borůvka-style on the driver:
     * round 1 unions each node with its min neighbor (derived from the

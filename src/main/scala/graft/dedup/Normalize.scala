@@ -92,8 +92,12 @@ object Normalize {
 
   /** Convenience: attach the full derived-column contract
     * (SURVEY.md §1) to a DataFrame. `rowOrder` must be a stable,
-    * unique, orderable key — at scale an explicit source key, never an
-    * implicit read order. */
+    * orderable key — at scale an explicit source key, never an
+    * implicit read order — and should be unique. The pipeline keeps
+    * every row of a repeated key (one output row per input row,
+    * identical rows included), but such rows share a row_order: neither
+    * is a "later" row for the other's confidence, and their order in a
+    * report sorted by row_order is undefined. */
   def withDerived(
       df: org.apache.spark.sql.DataFrame,
       nameCol: String,

@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** E3 — the full dedup "query" (engine.py:210-369) as one lazy
@@ -15,9 +14,15 @@ import org.apache.spark.sql.functions._
   *  - canonical tie-break = (count desc, length asc, base_name asc)
   *    (A.3)
   *
-  * Name-level intermediates (stats, pairs, components, candidates)
-  * are tiny relative to the row table, so every join back to rows is
-  * AQE-broadcastable.
+  * Everything but one comparison is a property of a distinct base
+  * NAME, not of a row: the pair join, components, cluster sizes, the
+  * election and the confidence candidates all run at name level and
+  * end in one name table (cluster_id, cluster_size, elected_name and
+  * the per-level confidence thresholds t98/t95/t88 — see
+  * [[Matching.nameTable]]). The row stage is then ONE left join of the
+  * rows onto that table (tiny relative to the rows, so
+  * AQE-broadcastable) and a projection: no row-level aggregate and no
+  * window, so every input row comes out once, repeated keys included.
   *
   * Execution semantics: [[run]] is NOT fully lazy — the compact pair
   * projection and the CC edge set are eagerly materialized via
@@ -63,8 +68,8 @@ object Pipeline {
       settings: DedupSettings = DedupSettings()): DataFrame =
     // spread the source before the normalize chain: a single-split
     // scan would run the 14-regex base-name derivation serially on
-    // one core, twice (the stats build and the row-level confidence
-    // join both read `derived`). Gated no-op at production split
+    // one core, twice (the stats build and the row join both read
+    // `derived`). Gated no-op at production split
     // counts; row_order is an explicit source key, so partitioning
     // never affects results (guide §2.4).
     runDerived(Normalize.withDerived(
@@ -95,148 +100,116 @@ object Pipeline {
     settings.engageCheckpoints(spark)
     val reliable = settings.reliableCheckpoints
     // Name index materialized ONCE; every branch below (regime
-    // sizing, pair join sides, row-level joins) reads the blocks.
+    // sizing, pair join sides, name-table aggregates) reads the blocks.
     val stats = graft.core.Frames.materialize(Matching.nameStats(derived), reliable)
     // ONE sizing aggregate picks the regime: the driver fast-path
     // gate, the dense guard and CC's edge bound all read this row, and
     // it is recorded with the regime (StageStats).
     val sizing = Matching.stageSizing(stats)
 
+    // --- the name table: one row per distinct base name with its
+    // cluster id, cluster size, elected canonical name and A.1
+    // confidence thresholds (Matching.nameTable). Everything the row
+    // stage needs except one comparison is a property of a NAME, so
+    // the regimes below differ only in how they build this table.
+    //
     // Up to DedupSettings.driverFastPathNames names (and 2M implied
-    // pairs), Matching.driverPairsAndCandidates computes (components,
-    // candidates) in one driver pass over the collected index —
-    // bit-identical results, none of the distributed jobs below (the
-    // Cluster.localEdgeCC philosophy applied to the whole name-level
-    // stage). Above it the pair join (the Jaro-Winkler work) has two
-    // consumers — the CC edge set and the confidence candidates.
-    // Materializing the full pair rows is off the table (a dense
-    // block makes them tens of millions of WIDE rows — 6 GB at the
-    // 10×-scale stress test), but the similarity compute itself must
-    // not run twice either (round 2 paid a double JW pass here: once
-    // for the eager CC build, once in the final DAG). Resolution:
-    // checkpoint ONLY the compact (a_min_row, b_min_row, pair_conf)
-    // projection — 24 bytes/pair — and recover the name-level fields
-    // by joining back to `stats` on min_row, which uniquely
-    // identifies a distinct name (each row belongs to exactly one
-    // (block_key, base_name) group, so group minima never collide).
-    val (comps, crossCand) =
-      Matching.driverPairsAndCandidates(stats, sizing, settings) match {
-        case Some((compsLocal, candLocal)) =>
-          import spark.implicits._
-          Matching.recordStage("driver-fast-path", 1, sizing)
-          (compsLocal.toDF("id", "component"),
-            candLocal.toDF("cand_name", "cand_conf", "partner_max_row"))
-        case None if sizing.impliedPairs > settings.densePairEstimate =>
-          // DENSE regime (sf1+ supplier: a 10k-name near-clique is
-          // 50M implied pairs): checkpointing the pair rows costs
-          // gigabytes of storage + GC churn while the codegen'd JW
-          // join recomputes in ~2 s — so never materialize pairs;
-          // push both consumers down to aggregates over the streamed
-          // join (one shared pass + one verification pass per CC
-          // round). See Matching.denseAggregatedStage.
-          Matching.denseAggregatedStage(stats, sizing, settings)
-        case None =>
-          Matching.recordStage("materialize", 1, sizing)
-          val pairsCompact = graft.core.Frames.materialize(
-            Matching.qualifyingPairsPrepared(stats, settings)
-              .select(col("a_min_row"), col("b_min_row"), col("pair_conf")),
-            reliable)
-          // --- C1 (distributed): node id = the name's min_row, so a
-          // component id IS min(row_order) in-cluster. The edge set is
-          // a projection of the compact checkpoint — already
-          // materialized, so CC must not copy it again
-          // (edgesMaterialized: on the sf1 supplier clique that copy
-          // was ~2 GB of storage and seconds of wall per run).
-          val edges = pairsCompact
-            .select(col("a_min_row").as("src"), col("b_min_row").as("dst"))
-          // edgeCountHint: qualifying pairs ⊆ implied pairs, so the
-          // Σ C(block,2) estimate is a valid upper bound — when it
-          // already fits the driver, CC skips the pre-contraction
-          // constant outright (VERDICT r15 item 1)
-          val compsDist = Cluster.connectedComponents(edges,
-            edgesMaterialized = true, edgeCountHint = sizing.impliedPairs,
-            reliable = reliable)
-          // name fields recovered from the compact checkpoint: AQE
-          // turns both min_row joins into broadcasts (the name index
-          // is tiny relative to pairs), so this costs two map-side
-          // probes of already-computed conf rows, not a second
-          // similarity join.
-          val nameByMin = stats.select(col("min_row"), col("base_name"), col("max_row"))
-          val rejoined = pairsCompact
-            .join(nameByMin.select(col("min_row").as("a_min_row"),
-              col("base_name").as("a_name"), col("max_row").as("a_max_row")), Seq("a_min_row"))
-            .join(nameByMin.select(col("min_row").as("b_min_row"),
-              col("base_name").as("b_name"), col("max_row").as("b_max_row")), Seq("b_min_row"))
-          val crossDist = rejoined.select(col("a_name").as("cand_name"),
-              col("pair_conf").as("cand_conf"), col("b_max_row").as("partner_max_row"))
-            .union(rejoined.select(col("b_name"), col("pair_conf"), col("a_max_row")))
-            // exact O(pairs) -> O(names) reduction: for a (name, conf)
-            // only the FURTHEST partner matters — `partner_max_row >
-            // row_order` holds for some candidate iff it holds for the
-            // max. Collapses the candidate join input from |pairs|·2
-            // to ≤ 3 rows per name.
-            .groupBy("cand_name", "cand_conf")
-            .agg(max(col("partner_max_row")).as("partner_max_row"))
-          (compsDist, crossDist)
-      }
+    // pairs), Matching.driverNameTable builds it in one driver pass over
+    // the collected index — bit-identical results, none of the
+    // distributed jobs below (the Cluster.localEdgeCC philosophy applied
+    // to the whole name-level stage). Above it the pair join (the
+    // Jaro-Winkler work) has two consumers — the CC edge set and the
+    // confidence candidates. Materializing the full pair rows is off
+    // the table (a dense block makes them tens of millions of WIDE rows
+    // — 6 GB at the 10×-scale stress test), but the similarity compute
+    // itself must not run twice either (round 2 paid a double JW pass
+    // here: once for the eager CC build, once in the final DAG).
+    // Resolution: checkpoint ONLY the compact (a_min_row, b_min_row,
+    // pair_conf) projection — 24 bytes/pair — and recover the
+    // name-level fields by joining back to `stats` on min_row, which
+    // uniquely identifies a distinct name (each row belongs to exactly
+    // one (block_key, base_name) group, so group minima never collide).
+    val names = Matching.driverNameTable(stats, sizing, settings) match {
+      case Some(table) =>
+        Matching.recordStage("driver-fast-path", 1, sizing)
+        table
+      case None =>
+        val (comps, crossCand) =
+          if (sizing.impliedPairs > settings.densePairEstimate)
+            // DENSE regime (sf1+ supplier: a 10k-name near-clique is
+            // 50M implied pairs): checkpointing the pair rows costs
+            // gigabytes of storage + GC churn while the codegen'd JW
+            // join recomputes in ~2 s — so never materialize pairs;
+            // push both consumers down to aggregates over the streamed
+            // join (one shared pass + one verification pass per CC
+            // round). See Matching.denseAggregatedStage.
+            Matching.denseAggregatedStage(stats, sizing, settings)
+          else {
+            Matching.recordStage("materialize", 1, sizing)
+            val pairsCompact = graft.core.Frames.materialize(
+              Matching.qualifyingPairsPrepared(stats, settings)
+                .select(col("a_min_row"), col("b_min_row"), col("pair_conf")),
+              reliable)
+            // --- C1 (distributed): node id = the name's min_row, so a
+            // component id IS min(row_order) in-cluster. The edge set is
+            // a projection of the compact checkpoint — already
+            // materialized, so CC must not copy it again
+            // (edgesMaterialized: on the sf1 supplier clique that copy
+            // was ~2 GB of storage and seconds of wall per run).
+            val edges = pairsCompact
+              .select(col("a_min_row").as("src"), col("b_min_row").as("dst"))
+            // edgeCountHint: qualifying pairs ⊆ implied pairs, so the
+            // Σ C(block,2) estimate is a valid upper bound — when it
+            // already fits the driver, CC skips the pre-contraction
+            // constant outright (VERDICT r15 item 1)
+            val compsDist = Cluster.connectedComponents(edges,
+              edgesMaterialized = true, edgeCountHint = sizing.impliedPairs,
+              reliable = reliable)
+            // name fields recovered from the compact checkpoint: AQE
+            // turns both min_row joins into broadcasts (the name index
+            // is tiny relative to pairs), so this costs two map-side
+            // probes of already-computed conf rows, not a second
+            // similarity join. Both orientations become candidates;
+            // Matching.nameTable reduces them to O(names) rows.
+            val nameByMin = stats.select(col("min_row"), col("base_name"), col("max_row"))
+            val rejoined = pairsCompact
+              .join(nameByMin.select(col("min_row").as("a_min_row"),
+                col("base_name").as("a_name"), col("max_row").as("a_max_row")), Seq("a_min_row"))
+              .join(nameByMin.select(col("min_row").as("b_min_row"),
+                col("base_name").as("b_name"), col("max_row").as("b_max_row")), Seq("b_min_row"))
+            val crossDist = rejoined.select(col("a_name").as("cand_name"),
+                col("pair_conf").as("cand_conf"), col("b_max_row").as("partner_max_row"))
+              .union(rejoined.select(col("b_name"), col("pair_conf"), col("a_max_row")))
+            (compsDist, crossDist)
+          }
+        Matching.nameTable(stats, comps, crossCand)
+    }
 
-    val nameCluster = stats
-      .join(comps.withColumnRenamed("id", "min_row"), Seq("min_row"), "left")
-      .select(col("base_name"),
-        coalesce(col("component"), col("min_row")).as("cluster_id"))
+    // --- the row stage: ONE left join of the rows onto the name table
+    // and a projection. Empty-base rows are absent from the table
+    // (nameStats drops them) and become forced singletons: cluster_id
+    // = their row_order, size 1, canonical = their normalized name,
+    // confidence 0.50 (A.1). A row's confidence is the highest level
+    // whose threshold (a partner row's max row_order) exceeds its own
+    // row_order; the reason is read off the same rung.
+    val ladder = Seq(
+      (col("base_name") === "", Rules.ConfEmptyBase, Rules.ReasonEmptyBase),
+      (col("t98") > col("row_order"), Rules.ConfTokenAndRatio, Rules.ReasonTokenAndRatio),
+      (col("t95") > col("row_order"), Rules.ConfHardRatio, Rules.ReasonHardRatio),
+      (col("t88") > col("row_order"), Rules.ConfSoftRatio, Rules.ReasonSoftRatio))
+    def rungs(pick: ((Column, Double, String)) => Any, default: Any): Column =
+      ladder.tail.foldLeft(when(ladder.head._1, pick(ladder.head)))((w, r) => w.when(r._1, pick(r)))
+        .otherwise(default)
 
-    // --- A.1 confidence candidates at name level: a name's rows can
-    // claim pair_conf if a partner row with a higher row_order exists.
-    val selfCand = stats.filter(col("n_rows") >= 2)
-      .select(col("base_name").as("cand_name"),
-        lit(Rules.ConfTokenAndRatio).as("cand_conf"),
-        col("max_row").as("partner_max_row"))
-    val candidates = selfCand.union(crossCand)
-
-    val withConf = derived
-      .join(candidates,
-        derived("base_name") === candidates("cand_name") &&
-          candidates("partner_max_row") > derived("row_order"),
-        "left")
-      .groupBy("row_order", "original_name", "normalized_name", "base_name", "block_key")
-      .agg(max(col("cand_conf")).as("max_cand_conf"))
-      .withColumn("confidence",
-        when(col("base_name") === "", lit(Rules.ConfEmptyBase))
-          .otherwise(coalesce(col("max_cand_conf"), lit(Rules.ConfDefault))))
-      .drop("max_cand_conf")
-
-    // --- cluster assignment: empty-base rows are forced singletons.
-    val clustered = withConf
-      .join(nameCluster, Seq("base_name"), "left")
-      .withColumn("cluster_id",
-        coalesce(col("cluster_id"), col("row_order")))
-
-    // --- A1/A2: canonical election (mode, tie → shortest, then asc)
-    // + cluster size, as windows sharing ONE shuffle by cluster_id
-    // instead of two aggregate+join round-trips. Empty-base rows are
-    // always singleton clusters (they never enter blocking), so
-    // within any multi-row cluster every base_name is non-empty and
-    // the vote ordering needs no empty-name guard.
-    val voteW = Window.partitionBy("cluster_id", "base_name")
-    val clusterW = Window.partitionBy("cluster_id")
-    val electW = clusterW.orderBy(
-      col("votes").desc, length(col("base_name")).asc, col("base_name").asc)
-
-    clustered
-      .withColumn("votes", count(lit(1)).over(voteW))
-      .withColumn("cluster_size", count(lit(1)).over(clusterW))
-      .withColumn("elected_name", first(col("base_name")).over(electW))
-      .withColumn("canonical_name",
+    derived
+      .join(names, Seq("base_name"), "left")
+      .select(col("row_order"), col("original_name"), col("normalized_name"),
+        col("base_name"), col("block_key"),
+        coalesce(col("cluster_id"), col("row_order")).as("cluster_id"),
+        coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
         when(col("base_name") === "", col("normalized_name"))
-          .otherwise(col("elected_name")))
-      .withColumn("reason",
-        when(col("confidence") === Rules.ConfEmptyBase, lit(Rules.ReasonEmptyBase))
-          .when(col("confidence") === Rules.ConfTokenAndRatio, lit(Rules.ReasonTokenAndRatio))
-          .when(col("confidence") === Rules.ConfHardRatio, lit(Rules.ReasonHardRatio))
-          .when(col("confidence") === Rules.ConfSoftRatio, lit(Rules.ReasonSoftRatio))
-          .otherwise(lit(Rules.ReasonDefault)))
-      .select("row_order", "original_name", "normalized_name", "base_name",
-        "block_key", "cluster_id", "cluster_size", "canonical_name",
-        "confidence", "reason")
+          .otherwise(col("elected_name")).as("canonical_name"),
+        rungs(_._2, Rules.ConfDefault).as("confidence"),
+        rungs(_._3, Rules.ReasonDefault).as("reason"))
   }
 }

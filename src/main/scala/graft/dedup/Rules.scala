@@ -31,9 +31,9 @@ final case class DedupSettings(
     /** Driver fast path gate (execution knob, not semantics): a name
       * index of at most this many distinct names — with at most 2M
       * implied pairs and no block over [[maxBlockNames]] — runs
-      * pairing + components + candidates in one driver pass
-      * (Matching.driverPairsAndCandidates) instead of the distributed
-      * pair checkpoint, CC collect and rejoin joins; results are
+      * pairing, components and the whole name table in one driver pass
+      * (Matching.driverNameTable) instead of the distributed pair
+      * checkpoint, CC collect, rejoin joins and name aggregates; results are
       * bit-identical. The pair bound caps the driver's single-threaded
       * JW work; this gate caps the index the driver collects. 0 forces
       * the distributed path.

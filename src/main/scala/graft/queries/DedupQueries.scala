@@ -83,8 +83,8 @@ object DedupQueries {
     // The four builds are independent Memo keys, and Memo's per-key
     // locking runs different keys as genuinely concurrent Spark jobs.
     // Run them in parallel: the pipeline build has driver-side phases
-    // (union-find over the collected min edges, election window
-    // planning) during which executors idle — the three derived-table
+    // (union-find over the collected min edges, name-table assembly)
+    // during which executors idle — the three derived-table
     // regex scans fill those gaps instead of queueing behind them.
     graft.core.Par.run(Seq(
       () => fullPart(s, dir).count(): Unit,

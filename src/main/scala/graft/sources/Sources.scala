@@ -78,9 +78,11 @@ object Sources {
     * [[graft.core.Frames.materialize]] — reliable checkpoint files when
     * `settings.checkpointDir` is set, local checkpoint blocks otherwise
     * — and every report is a projection of the result table, so the
-    * CSV scan, the normalize chain, the confidence join and the
-    * election windows never rerun per report. The parquet/csv writes
-    * are independent jobs over that table and run at the same time
+    * CSV scan, the normalize chain and the name-level stage never rerun
+    * per report. Each report reads the result table as ONE partition
+    * and is sorted (or aggregated) inside it: no report shuffles, and
+    * each writes a single file. The parquet/csv writes are independent
+    * jobs over that table and run at the same time
     * ([[graft.core.Par]]). Returns the result table, checkpoint-backed:
     * its plan root is the checkpoint, and `Frames.release` on it frees
     * the blocks (or files) once the caller is done with it.
@@ -117,30 +119,34 @@ object Sources {
       Tables.spread(df, orderCol), name, orderCol, settings), reliable)
     val full = Frames.materialize(Pipeline.runDerived(derived, settings), reliable)
     Frames.release(derived)
+    // every report reads one partition of the checkpoint: a single
+    // partition satisfies any required distribution, so the reports'
+    // sorts and aggregate plan no exchange (and each writes one file)
+    val one = full.coalesce(1)
     if (format == "xlsx") {
       // the reference's exact three-workbook layout (outputs.py:44-58)
       new java.io.File(outDir).mkdirs()
       Xlsx.write(Seq(
-        "clusters" -> Outputs.clusters(full),
-        "canonical_summary" -> Outputs.summary(full),
+        "clusters" -> Outputs.clusters(one),
+        "canonical_summary" -> Outputs.summary(one),
         "settings" -> Outputs.settingsEcho(spark, settings)),
         s"$outDir/company_duplicates_final.xlsx")
-      Xlsx.write(Seq("mapping" -> Outputs.mapping(full)),
+      Xlsx.write(Seq("mapping" -> Outputs.mapping(one)),
         s"$outDir/golden_mapping.xlsx")
-      Xlsx.write(Seq("review" -> Outputs.review(full)),
+      Xlsx.write(Seq("review" -> Outputs.review(one)),
         s"$outDir/high_confidence_review.xlsx")
     } else {
       def save(d: DataFrame, sub: String): () => Unit = () => {
-        val w = d.coalesce(1).write.mode("overwrite")
+        val w = d.write.mode("overwrite")
         if (format == "csv") w.option("header", "true").csv(s"$outDir/$sub")
         else w.parquet(s"$outDir/$sub")
       }
       Par.run(Seq(
-        save(Outputs.clusters(full), "company_duplicates_final"),
-        save(Outputs.summary(full), "canonical_summary"),
-        save(Outputs.settingsEcho(spark, settings), "settings"),
-        save(Outputs.mapping(full), "golden_mapping"),
-        save(Outputs.review(full), "high_confidence_review")))
+        save(Outputs.clusters(one), "company_duplicates_final"),
+        save(Outputs.summary(one), "canonical_summary"),
+        save(Outputs.settingsEcho(spark, settings).coalesce(1), "settings"),
+        save(Outputs.mapping(one), "golden_mapping"),
+        save(Outputs.review(one), "high_confidence_review")))
     }
     full
   }

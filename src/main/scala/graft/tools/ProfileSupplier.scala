@@ -75,25 +75,8 @@ object ProfileSupplier {
         val c = rejoined.select(col("a_name").as("cand_name"),
             col("pair_conf").as("cand_conf"), col("b_max_row").as("partner_max_row"))
           .union(rejoined.select(col("b_name"), col("pair_conf"), col("a_max_row")))
-          .groupBy("cand_name", "cand_conf")
-          .agg(max(col("partner_max_row")).as("partner_max_row"))
           .localCheckpoint(true)
         c.count(); c
-      }
-      phase("row assembly") {
-        // approximate the tail: candidate join + cluster join + windows
-        val selfCand = stats.filter(col("n_rows") >= 2)
-          .select(col("base_name").as("cand_name"),
-            lit(graft.dedup.Rules.ConfTokenAndRatio).as("cand_conf"),
-            col("max_row").as("partner_max_row"))
-        val candidates = selfCand.union(crossDist.select("cand_name", "cand_conf", "partner_max_row"))
-        val withConf = derived
-          .join(candidates,
-            derived("base_name") === candidates("cand_name") &&
-              candidates("partner_max_row") > derived("row_order"), "left")
-          .groupBy("row_order", "base_name")
-          .agg(max(col("cand_conf")).as("max_cand_conf"))
-        withConf.count()
       }
       phase("full Pipeline.run") {
         graft.dedup.Pipeline.run(Tables.supplier(spark, sfDir), "s_name", "s_suppkey")

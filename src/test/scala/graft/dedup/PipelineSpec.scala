@@ -1,6 +1,8 @@
 package graft.dedup
 
+import graft.functions.JaroWinklerAlgo
 import org.apache.spark.sql.Row
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end golden test: the reference's 8-row fixture
@@ -92,5 +94,111 @@ class PipelineSpec extends AnyFunSuite {
     val dist = Pipeline.run(df, "nm", "id",
       DedupSettings(driverFastPathNames = 0L)).orderBy("row_order").collect()
     assert(fast.length == 60 && fast.toSeq == dist.toSeq)
+  }
+
+  /** The Appendix A row rules computed directly on rows, independently
+    * of the name-level plan: union-find over qualifying name pairs
+    * (the same Jaro-Winkler doubles, predicate and confidence ladder),
+    * per row the highest candidate confidence with a strictly larger
+    * partner row_order, and the vote/length/name election run on the
+    * cluster's rows. Input: (row_order, original_name, normalized_name,
+    * base_name, block_key) rows with unique row_order. */
+  private def modelRows(derived: Seq[(Long, String, String, String, String)],
+      settings: DedupSettings): Seq[Row] = {
+    def utf8(s: String) = UTF8String.fromString(s)
+    def byteOrder(a: String, b: String) = utf8(a).compareTo(utf8(b)) < 0
+    val blockOf = derived.map(r => r._4 -> r._5).toMap
+    val names = derived.map(_._4).filter(_.nonEmpty).distinct.sortWith(byteOrder)
+    def tokenKey(n: String) = n.split(" ").sortWith(byteOrder).mkString
+
+    val parent = scala.collection.mutable.Map(names.map(n => n -> n): _*)
+    def find(n: String): String = if (parent(n) == n) n else find(parent(n))
+    val pairConf = scala.collection.mutable.Map.empty[(String, String), Double]
+    for (i <- names.indices; j <- i + 1 until names.length
+        if blockOf(names(i)) == blockOf(names(j))) {
+      val (a, b) = (names(i), names(j))
+      val ratio = JaroWinklerAlgo.similarity(utf8(a), utf8(b))
+      val tok = tokenKey(a) == tokenKey(b)
+      if ((tok && ratio >= settings.softThreshold) || ratio >= settings.hardThreshold) {
+        val conf =
+          if (tok && ratio >= 0.90) Rules.ConfTokenAndRatio
+          else if (ratio >= 0.90) Rules.ConfHardRatio
+          else if (ratio >= 0.85) Rules.ConfSoftRatio
+          else Rules.ConfDefault
+        pairConf((a, b)) = conf
+        pairConf((b, a)) = conf
+        parent(find(a)) = find(b)
+      }
+    }
+
+    val reasons = Map(Rules.ConfTokenAndRatio -> Rules.ReasonTokenAndRatio,
+      Rules.ConfHardRatio -> Rules.ReasonHardRatio, Rules.ConfSoftRatio -> Rules.ReasonSoftRatio,
+      Rules.ConfDefault -> Rules.ReasonDefault, Rules.ConfEmptyBase -> Rules.ReasonEmptyBase)
+    derived.sortBy(_._1).map { case (row, original, normalized, base, block) =>
+      if (base.isEmpty)
+        Row(row, original, normalized, base, block, row, 1L, normalized,
+          Rules.ConfEmptyBase, Rules.ReasonEmptyBase)
+      else {
+        val members = derived.filter(r => r._4.nonEmpty && find(r._4) == find(base))
+        val votes = members.groupBy(_._4).map { case (n, rs) => n -> rs.length }
+        val elected = votes.keys.toSeq.sortWith { (a, b) =>
+          val (la, lb) = (a.codePointCount(0, a.length), b.codePointCount(0, b.length))
+          if (votes(a) != votes(b)) votes(a) > votes(b)
+          else if (la != lb) la < lb
+          else byteOrder(a, b)
+        }.head
+        val conf = (Rules.ConfDefault +: derived.collect {
+          case (partner, _, _, other, _) if partner > row && other == base =>
+            Rules.ConfTokenAndRatio
+          case (partner, _, _, other, _) if partner > row && pairConf.contains((base, other)) =>
+            pairConf((base, other))
+        }).max
+        Row(row, original, normalized, base, block, members.map(_._1).min,
+          members.length.toLong, elected, conf, reasons(conf))
+      }
+    }
+  }
+
+  test("every regime equals a row-level model of the Appendix A rules") {
+    import spark.implicits._
+    val fixed = Seq(
+      "Quorra CorpX", "Quorra CorpY",                 // election tie: votes and length
+      "Zenith Motors Ltd", "Zenith Motors", "Zenith Motor", // votes beat length
+      "Globalstar Tours \uD835\uDC00", "Globalstar Tours XY", // code points, not UTF-16 units
+      "Northwind \uD835\uDC00\uFF21", "Northwind \uFF21\uD835\uDC00", // UTF-8, not UTF-16 order
+      null, "", "Ltd", "!!!", "Pvt Ltd")            // empty base names
+    val rnd = new scala.util.Random(11)
+    val tokens = Seq("ACME", "ACMEE", "GLOBEX", "GLOBEXX", "INITECH", "INITEK", "HOOLI",
+      "HOOLIE", "SYSTEMS", "SYSTEM", "TRADING", "TRADERS", "LTD", "INDIA")
+    val random = (0 until 60).map(_ =>
+      (0 until 1 + rnd.nextInt(3)).map(_ => tokens(rnd.nextInt(tokens.size))).mkString(" "))
+    val names = fixed ++ random
+    val ids = rnd.shuffle((0 until names.length).map(_ * 3L + 5L))
+    val df = ids.zip(names).toDF("id", "name")
+
+    val derived = Normalize.withDerived(df, "name", "id")
+      .select("row_order", "original_name", "normalized_name", "base_name", "block_key")
+      .as[(Long, String, String, String, String)].collect().toSeq
+    val clusterCounts = for (thresholds <- Seq(DedupSettings(),
+        DedupSettings(hardThreshold = 0.80, softThreshold = 0.75))) yield {
+      val expected = modelRows(derived, thresholds)
+      for ((regime, settings) <- Seq(
+          "driver fast path" -> thresholds,
+          "materialize" -> thresholds.copy(driverFastPathNames = 0L,
+            densePairEstimate = Long.MaxValue),
+          "dense" -> thresholds.copy(driverFastPathNames = 0L, densePairEstimate = 0L))) {
+        val got = Pipeline.run(df, "name", "id", settings).orderBy("row_order").collect().toSeq
+        assert(got == expected, s"$regime at ${thresholds.hardThreshold}/${thresholds.softThreshold}")
+      }
+      def canonical(name: String) =
+        expected.find(_.getString(1) == name).get.getString(7)
+      assert(canonical("Quorra CorpY") == "QUORRA CORPX")
+      assert(canonical("Zenith Motor") == "ZENITH MOTORS")
+      assert(canonical("Globalstar Tours XY") == "GLOBALSTAR TOURS \uD835\uDC00")
+      assert(canonical("Northwind \uD835\uDC00\uFF21") == "NORTHWIND \uFF21\uD835\uDC00")
+      expected.map(_.getLong(5)).distinct.size
+    }
+    // the lowered thresholds merge clusters the defaults keep apart
+    assert(clusterCounts(1) < clusterCounts(0), clusterCounts)
   }
 }

@@ -36,6 +36,15 @@ class RobustnessSpec extends AnyFunSuite {
     // unicode letters are word chars: kept, uppercased, GMBH stripped
     assert(full(5).getAs[String]("base_name") == "CAFÉ MÜNCHEN")
     assert(full(6).getAs[String]("base_name") == "NORMAL NAME")
+
+    // a repeated key keeps both rows: one output row per input row
+    val repeated = Pipeline.run(
+      Seq((1L, "Acme Ltd"), (1L, "Acme Ltd"), (2L, "Acme"), (3L, "Beta")).toDF("id", "name"),
+      "name", "id").orderBy("row_order").collect()
+    assert(repeated.length == 4)
+    assert(repeated.map(r => (r.getAs[Long]("row_order"), r.getAs[Long]("cluster_id"),
+      r.getAs[Long]("cluster_size"))).toSeq == Seq((1L, 1L, 3L), (1L, 1L, 3L), (2L, 1L, 3L),
+      (3L, 3L, 1L)))
   }
 
   test("normalize is idempotent and base_name is suffix-free (randomized)") {

@@ -3,8 +3,13 @@ package graft.sources
 import graft.core.Frames
 import graft.dedup.{DedupSettings, Outputs, Pipeline, SparkTest}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -13,6 +18,7 @@ import java.nio.file.Files
   * offline). */
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
+  private object Plans extends AdaptiveSparkPlanHelper
 
   test("csv in, reports out, column auto-detection") {
     val dir = Files.createTempDirectory("graft_src").toFile
@@ -120,6 +126,37 @@ class SourcesSpec extends AnyFunSuite {
     csv.getAbsolutePath
   }
 
+  private def exchanges(plan: SparkPlan): Seq[Exchange] =
+    Plans.collect(plan) { case e: Exchange => e }
+
+  /** `body`'s result and the executed plans of the file writes it ran.
+    * Query-execution listeners are called asynchronously, so this
+    * waits (up to 30 s) until the writes' plans have arrived. */
+  private def writePlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val done = new java.util.concurrent.atomic.AtomicLong
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+        done.incrementAndGet()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        done.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      // a marker query: once its own callback has run, every earlier
+      // query's callback has too (the listener bus is ordered)
+      val before = done.get
+      spark.range(1).collect()
+      val deadline = System.nanoTime + 30000000000L
+      while (done.get <= before && System.nanoTime < deadline) Thread.sleep(20)
+      (result, plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private def reports(full: DataFrame, settings: DedupSettings): Seq[(String, DataFrame)] = Seq(
     "company_duplicates_final" -> Outputs.clusters(full),
     "canonical_summary" -> Outputs.summary(full),
@@ -152,10 +189,22 @@ class SourcesSpec extends AnyFunSuite {
       assert(expectedRows.size === 160)
       for (format <- Seq("parquet", "csv")) {
         val out = Files.createTempDirectory("graft_runfile_out").toString
-        val full = Sources.runFile(spark, csv, out, Some("Company Name"), Some("id"),
-          settings, format)
-        for ((sub, like, rows) <- expectedReports)
+        val (full, writes) = writePlans(Sources.runFile(spark, csv, out, Some("Company Name"),
+          Some("id"), settings, format))
+        // the five report writes read one partition: none shuffles
+        assert(writes.length === 5, s"$regime / $format")
+        for (plan <- writes)
+          assert(exchanges(plan).isEmpty, s"$regime / $format: an exchange in\n$plan")
+        for ((sub, like, rows) <- expectedReports) {
           assert(written(out, sub, format, like) === rows, s"$regime / $format / $sub")
+          val parts = new java.io.File(out, sub).list().filter(_.startsWith("part-"))
+          assert(parts.length === 1, s"$regime / $format / $sub: ${parts.toSeq}")
+        }
+        // the same table reports over the checkpoint's own partitions
+        // do shuffle, so the check above can see an exchange
+        val shuffled = Outputs.clusters(full)
+        shuffled.collect()
+        assert(exchanges(shuffled.queryExecution.executedPlan).nonEmpty, regime)
         // the returned frame is the checkpoint itself, with the same rows
         full.queryExecution.analyzed match {
           case lr: LogicalRDD =>
@@ -200,5 +249,18 @@ class SourcesSpec extends AnyFunSuite {
     assert(full.select(clusters.columns.map(col): _*).orderBy("row_order").collect().toSeq ===
       clusters.collect().toSeq)
     Frames.release(full)
+  }
+
+  test("a warm runFile compiles (almost) nothing: one call's generated classes fit the codegen cache") {
+    val csv = companiesCsv(160, withId = true)
+    def call(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = Files.createTempDirectory("graft_runfile_warm").toString
+      Frames.release(Sources.runFile(spark, csv, out, Some("Company Name"), Some("id")))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val cold = call()
+    val warm = call()
+    assert(warm <= 5, s"cold call compiled $cold classes, the warm call $warm")
   }
 }
