@@ -373,7 +373,9 @@ object Bench {
         // a multi-second external stall (scheduler/writeback from OTHER
         // processes — r9 measured the same binary at 39s and 59s totals
         // with the spikes landing on DIFFERENT queries each pass, and
-        // an isolated RepProbe of a "rising" query was flat). A spike
+        // a "rising" query re-timed alone in a fresh session was flat;
+        // SCALE.md's sf10 forensic note records the same finding with
+        // its numbers). A spike
         // hits 1-2 reps of a random query; with only 3 reps one bad rep
         // already blows the spread and can shift the median. When the
         // spread is both relatively (>0.5×median) and absolutely
@@ -443,18 +445,16 @@ object Bench {
       // BOUNDED multi-attempt recovery (VERDICT r19 item 1: one
       // attempt per family lost the whole window whenever a stall
       // outlived a 2 s back-off — r19's driver run certified 8/135).
-      // Up to `recoveryTries` attempts with growing back-off; each
+      // Up to 3 attempts, one per growing back-off; each
       // attempt is the r18 certified-re-measure protocol (healthy
       // pre-probe → fresh reps → healthy post-probe), and the loop
       // exits the moment one attempt certifies. Worst case adds
-      // Σ backoffs (~42 s with the default 3 tries) per STILL-degraded
+      // Σ backoffs (~42 s) per STILL-degraded
       // family — bounded, and only spent on runs that would otherwise
       // ship flagged rows.
-      val recoveryTries = sys.env.get("SPARK_GRAFT_BENCH_RECOVERY_TRIES")
-        .map(_.toInt).getOrElse(3)
       val backoffsMs = Seq(2000L, 10000L, 30000L)
-      while (rows.exists(_.envDegraded) && attempts < recoveryTries) {
-        Thread.sleep(backoffsMs(math.min(attempts, backoffsMs.size - 1)))
+      while (rows.exists(_.envDegraded) && attempts < backoffsMs.size) {
+        Thread.sleep(backoffsMs(attempts))
         attempts += 1
         val rp = probeQuick(); noteBest(rp)
         recPre = Some(rp)

@@ -98,13 +98,8 @@ object Memo {
           // silently falls back to a full recompute mid-bench — at
           // 100× scale an evicted signature index rebuild is a full
           // corpus re-shingle (VERDICT r8).
-          val t0 = System.nanoTime()
           res = scala.util.Try(
             if (truncate) build.localCheckpoint(true) else build.persist(level))
-          // SPARK_GRAFT_MEMO_LOG=1: per-key build timing (index_build
-          // decomposition — dev diagnostic, unset in bench/driver runs)
-          if (sys.env.contains("SPARK_GRAFT_MEMO_LOG"))
-            println(f"[memo] $key built in ${(System.nanoTime() - t0) / 1e9}%.3f s")
           res.get
         } finally {
           // Remove-before-complete so a waiter that observes the

@@ -185,49 +185,22 @@ object Cluster {
     import spark.implicits._
     directed.select(col("src"), col("dst")).as[(Long, Long)]
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        it.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        // keys snapshot: find() path-compresses values mid-iteration
-        parent.keys.toArray.iterator.flatMap { k =>
-          val r = find(k)
-          if (r == k) None else Some((r, k))
-        }
+        // built per partition, inside the task: nothing driver-side
+        // is captured by the closure
+        val uf = new MinUnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        uf.components.collect { case (k, r) if r != k => (r, k) }
       }.toDF("src", "dst")
   }
 
   /** Regime 1: collect + path-compressed union-find (direction
     * agnostic — directed edges suffice). */
   private def localEdgeCC(directed: DataFrame): DataFrame = {
-    val pairs = directed.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new MinUnionFind
+    directed.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
     val spark = directed.sparkSession
     import spark.implicits._
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "component")
+    uf.components.toSeq.toDF("id", "component")
   }
 
   /** Regime 2: driver union-find over per-node min edges + broadcast
@@ -241,20 +214,7 @@ object Cluster {
     val spark = directed.sparkSession
     import spark.implicits._
     var e = directed
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new MinUnionFind
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
@@ -265,9 +225,8 @@ object Cluster {
         .groupBy("src").agg(min(col("dst")).as("dst")).collect()
       if (mins.isEmpty) done = true
       else {
-        mins.foreach(r => union(r.getLong(0), r.getLong(1)))
-        val mapping = parent.keys.toSeq.map(k => (k, find(k)))
-        val mapDf = broadcast(mapping.toDF("_n", "_r"))
+        mins.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        val mapDf = broadcast(uf.components.toSeq.toDF("_n", "_r"))
         // map-side relabel: two broadcast hash joins, no edge shuffle;
         // distinct's map-side partial agg shrinks the shuffle to the
         // contracted edge set
@@ -294,9 +253,9 @@ object Cluster {
     if (!done) log.warn(
       s"connectedComponents (min-edge contraction) exhausted maxIter=$maxIter " +
         "before convergence — returned components may be under-merged")
-    if (e ne directed) release(e) // the answer lives in `parent`, not `e`
+    if (e ne directed) release(e) // the answer lives in `uf`, not `e`
     lastStatsTl.set(CcStats("min-edge-contraction", iter))
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "component")
+    uf.components.toSeq.toDF("id", "component")
   }
 
   /** Regime 3: min-label propagation + pointer jumping. Labels must
@@ -350,4 +309,32 @@ object Cluster {
     lastStatsTl.set(CcStats("label-propagation", iter))
     labels.withColumnRenamed("label", "component")
   }
+}
+
+/** Path-compressed union-find over Long node ids in which every root is
+  * its component's MIN id, so `find` answers the component label the
+  * CC contract asks for (component = min node id). Single-threaded:
+  * one instance per partition task or per driver loop. */
+private[dedup] final class MinUnionFind {
+  private val parent = scala.collection.mutable.Map.empty[Long, Long]
+
+  def find(x: Long): Long = {
+    var r = x
+    while (parent(r) != r) r = parent(r)
+    var c = x
+    while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    parent.getOrElseUpdate(a, a)
+    parent.getOrElseUpdate(b, b)
+    val (ra, rb) = (find(a), find(b))
+    if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+  }
+
+  /** (node, component) for every node seen so far. Iterates a snapshot
+    * of the keys: `find` path-compresses values mid-iteration. */
+  def components: Iterator[(Long, Long)] =
+    parent.keys.toArray.iterator.map(k => (k, find(k)))
 }

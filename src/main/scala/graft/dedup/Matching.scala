@@ -109,15 +109,26 @@ object Matching {
       settings: DedupSettings = DedupSettings(), salt: Int = 0,
       pinSink: DataFrame => Unit = _ => ()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
+    governedPairs(stats, settings)(
+      allPairs(_, settings, salt, _),
+      sortedNeighborhoodPairs(_, settings.hotBlockWindow, settings, pinSink))
+  }
+
+  /** The cost governor's split of a name index (default ON): blocks over
+    * `settings.maxBlockNames` switch from full pairing to the
+    * sorted-neighborhood O(|b|·w) policy (or are dropped when
+    * hotBlockWindow <= 1), bounding the quadratic worst case. One
+    * single-row aggregate sizes the whole plan: the over-cap key list
+    * is bounded (each hot block holds > cap names, so ≤ |names|/cap
+    * keys) and the small-side name count picks the salt without
+    * another job. `full(names, knownNames)` pairs the under-cap blocks
+    * (knownNames < 0 = not sized), `hot(names)` the over-cap ones; the
+    * row-returning pairs and [[pairProfile]]'s slim feed pass their
+    * own builders. */
+  private def governedPairs(stats: DataFrame, settings: DedupSettings)(
+      full: (DataFrame, Long) => DataFrame, hot: DataFrame => DataFrame): DataFrame =
     settings.maxBlockNames match {
       case Some(cap) =>
-        // cost governor (default ON): over-cap blocks switch to the
-        // sorted-neighborhood O(|b|·w) policy (or are dropped when
-        // hotBlockWindow <= 1), bounding the quadratic worst case.
-        // One single-row aggregate sizes the whole plan: the over-cap
-        // key list is bounded (each hot block holds > cap names, so
-        // ≤ |names|/cap keys) and the small-side name count picks the
-        // salt without another job.
         val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
           .agg(
             collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
@@ -125,28 +136,31 @@ object Matching {
           .head()
         val hotKeys = sized.getSeq[String](0)
         val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-        if (hotKeys.nonEmpty) {
+        if (hotKeys.isEmpty) full(stats, smallNames)
+        else {
           val policy =
             if (settings.hotBlockWindow > 1)
               s"sorted-neighborhood(window=${settings.hotBlockWindow})"
             else "drop"
           log.warn(s"cost governor: ${hotKeys.length} block(s) exceed " +
             s"maxBlockNames=$cap — applying $policy to their pairs")
-        }
-        if (hotKeys.isEmpty) allPairs(stats, settings, salt, smallNames)
-        else {
           val spark = stats.sparkSession
           import spark.implicits._
           val hotDf = broadcast(hotKeys.toDF("block_key"))
-          val small = stats.join(hotDf, Seq("block_key"), "left_anti")
-          val base = allPairs(small, settings, salt, smallNames)
+          val base = full(stats.join(hotDf, Seq("block_key"), "left_anti"), smallNames)
           if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(sortedNeighborhoodPairs(
-            stats.join(hotDf, Seq("block_key"), "left_semi"),
-            settings.hotBlockWindow, settings, pinSink))
+          else base.unionByName(hot(stats.join(hotDf, Seq("block_key"), "left_semi")))
         }
-      case None => allPairs(stats, settings, salt)
+      case None => full(stats, -1L)
     }
+
+  /** Salt chunks for full pairing when the caller pins none: tiny name
+    * sets skip the wide fan-out (a 96-way shuffle of 64 names is pure
+    * scheduling overhead), big ones get full parallelism. `knownNames`
+    * < 0 → count here (one cheap job over the checkpoint). */
+  private def adaptiveSalt(capped: DataFrame, knownNames: Long): Int = {
+    val n = if (knownNames >= 0) knownNames else capped.count()
+    if (n < 500) 4 else 96
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -358,27 +372,13 @@ object Matching {
       col("pair_conf").as("cand_conf"), col("partner_max_row"))
 
     // driver union-find; round 1 comes free from the shared aggregate
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    val uf = new MinUnionFind
     base.groupBy(col("node")).agg(min(col("min_peer")).as("peer")).collect()
-      .foreach(r => union(r.getLong(0), r.getLong(1)))
+      .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
     var iter = 1
     var done = false
     while (!done && iter < maxIter) {
-      val mapDf = broadcast(parent.keys.toSeq.map(k => (k, find(k)))
-        .toDF("_n", "_r"))
+      val mapDf = broadcast(uf.components.toSeq.toDF("_n", "_r"))
       // one fresh JW pass: surviving cross-root edges, reduced
       // map-side to the min peer root per root
       val rem = pairs().select(col("a_min_row").as("src"), col("b_min_row").as("dst"))
@@ -391,14 +391,14 @@ object Matching {
         .collect()
       drainPins() // this pass's collect consumed its ranking checkpoint
       if (rem.isEmpty) done = true
-      else { rem.foreach(r => union(r.getLong(0), r.getLong(1))); iter += 1 }
+      else { rem.foreach(r => uf.union(r.getLong(0), r.getLong(1))); iter += 1 }
     }
     if (!done) log.warn(
       s"denseAggregatedStage exhausted maxIter=$maxIter before convergence — " +
         "returned components may be under-merged")
     log.info(s"denseAggregatedStage: converged after $iter JW pass(es) + 1 shared")
     recordStage("dense-recompute", iter + 1, sizing)
-    val comps = parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "component")
+    val comps = uf.components.toSeq.toDF("id", "component")
     (comps, crossCand)
   }
 
@@ -421,33 +421,8 @@ object Matching {
   def pairProfile(stats: DataFrame,
       settings: DedupSettings = DedupSettings()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    val slim = settings.maxBlockNames match {
-      case Some(cap) =>
-        val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
-          .agg(
-            collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
-            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"))
-          .head()
-        val hotKeys = sized.getSeq[String](0)
-        val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-        if (hotKeys.nonEmpty) log.warn(s"cost governor: ${hotKeys.length} " +
-          s"block(s) exceed maxBlockNames=$cap — profiling their pairs under " +
-          (if (settings.hotBlockWindow > 1)
-            s"sorted-neighborhood(window=${settings.hotBlockWindow})" else "drop"))
-        if (hotKeys.isEmpty) slimPairs(stats, smallNames)
-        else {
-          val spark = stats.sparkSession
-          import spark.implicits._
-          val hotDf = broadcast(hotKeys.toDF("block_key"))
-          val small = stats.join(hotDf, Seq("block_key"), "left_anti")
-          val base = slimPairs(small, smallNames)
-          if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(slimSorted(
-            stats.join(hotDf, Seq("block_key"), "left_semi"),
-            settings.hotBlockWindow))
-        }
-      case None => slimPairs(stats, -1L)
-    }
+    val slim = governedPairs(stats, settings)(
+      slimPairs, slimSorted(_, settings.hotBlockWindow))
     val qual = (col("token_match") && col("ratio") >= settings.softThreshold) ||
       col("ratio") >= settings.hardThreshold
     slim.agg(
@@ -463,50 +438,18 @@ object Matching {
 
   /** [[allPairs]] slimmed to (ratio, token_match), no predicate, no
     * canonical swap — the profile-aggregation feed. */
-  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame = {
-    val s = {
-      val n = if (knownNames >= 0) knownNames else capped.count()
-      if (n < 500) 4 else 96
-    }
-    val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
-    val a = salted.select(
-      col("block_key"),
-      col("base_name").as("l_name"),
-      col("token_key").as("l_token_key"),
-      col("chunk").as("l_chunk"),
-      explode(sequence(col("chunk"), lit(s - 1))).as("chunk"))
-    val b = salted.select(
-      col("block_key"),
-      col("base_name").as("r_name"),
-      col("token_key").as("r_token_key"),
-      col("chunk"))
-    // pinned repartition for the same AQE reason as allPairs
-    a.repartition(s, col("block_key"), col("chunk"))
-      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
-      .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
+  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame =
+    saltedSelfJoin(capped, adaptiveSalt(capped, knownNames), Seq("token_key"))
       .select(jaro_winkler(col("l_name"), col("r_name")).as("ratio"),
         (col("l_token_key") === col("r_token_key")).as("token_match"))
-  }
 
   /** [[sortedNeighborhoodPairs]] slimmed the same way (shares
     * [[withBlockRank]], so the profile path also never single-tasks
     * a hot block's rank). */
-  private def slimSorted(stats: DataFrame, window: Int): DataFrame = {
-    val ranked = withBlockRank(stats)
-    val a = ranked.select(
-      col("block_key"),
-      col("base_name").as("a_name"),
-      col("token_key").as("a_token_key"),
-      explode(sequence(col("rnk") + 1, col("rnk") + (window - 1))).as("rnk"))
-    val b = ranked.select(
-      col("block_key"),
-      col("base_name").as("b_name"),
-      col("token_key").as("b_token_key"),
-      col("rnk"))
-    a.join(b, Seq("block_key", "rnk"))
+  private def slimSorted(stats: DataFrame, window: Int): DataFrame =
+    neighborJoin(withBlockRank(stats), window, Seq("token_key"))
       .select(jaro_winkler(col("a_name"), col("b_name")).as("ratio"),
         (col("a_token_key") === col("b_token_key")).as("token_match"))
-  }
 
   /** Data-visible cost-governor report (ADVICE r2: divergence from
     * exact reference semantics should be observable in data, not only
@@ -529,40 +472,12 @@ object Matching {
   /** Full within-block pairing (salted; see the scaladoc above).
     * `capped` is (derived from) the checkpointed name index, so the
     * two join sides re-read materialized blocks, not the upstream
-    * aggregation. `knownNames` < 0 → count here (one cheap job over
-    * the checkpoint). */
+    * aggregation. `salt` > 0 pins the chunk count, otherwise
+    * [[adaptiveSalt]] picks it. */
   private def allPairs(capped: DataFrame, settings: DedupSettings,
-      salt: Int, knownNames: Long = -1L): DataFrame = {
-    // salt <= 0 → adaptive: tiny name sets skip the wide fan-out (a
-    // 96-way shuffle of 64 names is pure scheduling overhead), big
-    // ones get full parallelism.
-    val s = if (salt > 0) salt else {
-      val n = if (knownNames >= 0) knownNames else capped.count()
-      if (n < 500) 4 else 96
-    }
-    val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
-    val a = salted.select(
-      col("block_key"),
-      col("base_name").as("l_name"),
-      col("min_row").as("l_min_row"),
-      col("max_row").as("l_max_row"),
-      col("token_key").as("l_token_key"),
-      col("chunk").as("l_chunk"),
-      explode(sequence(col("chunk"), lit(s - 1))).as("chunk"))
-    val b = salted.select(
-      col("block_key"),
-      col("base_name").as("r_name"),
-      col("min_row").as("r_min_row"),
-      col("max_row").as("r_max_row"),
-      col("token_key").as("r_token_key"),
-      col("chunk"))
-    // Explicit repartition with a fixed partition count: the pre-join
-    // shuffle is tiny (names), so AQE would coalesce it to one
-    // partition and serialize the O(|b|²) pair explosion that happens
-    // INSIDE the join. A user repartition pins the parallelism.
-    val joined = a.repartition(s, col("block_key"), col("chunk"))
-      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
-      .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
+      salt: Int, knownNames: Long): DataFrame = {
+    val s = if (salt > 0) salt else adaptiveSalt(capped, knownNames)
+    val joined = saltedSelfJoin(capped, s, Seq("min_row", "max_row", "token_key"))
     // canonical a<b orientation regardless of which chunk fanned out
     val aIsL = col("l_name") < col("r_name")
     joined.select(
@@ -578,6 +493,41 @@ object Matching {
       .where((col("token_match") && col("ratio") >= settings.softThreshold) ||
         col("ratio") >= settings.hardThreshold)
       .withColumn("pair_conf", pairConfidence(col("ratio"), col("token_match")))
+  }
+
+  /** Each unordered pair of names within a block exactly once, over
+    * `s` salt chunks: the left side (l_name, l_<payload>, l_chunk)
+    * fans out to every chunk ≥ its own, the right side (r_name,
+    * r_<payload>) stays in its chunk, and same-chunk pairs keep
+    * l_name < r_name. Explicit repartition with a fixed partition
+    * count: the pre-join shuffle is tiny (names), so AQE would coalesce
+    * it to one partition and serialize the O(|b|²) pair explosion that
+    * happens INSIDE the join. A user repartition pins the parallelism. */
+  private def saltedSelfJoin(capped: DataFrame, s: Int, payload: Seq[String]): DataFrame = {
+    val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
+    val a = salted.select(pairSide("l", payload) ++ Seq(col("chunk").as("l_chunk"),
+      explode(sequence(col("chunk"), lit(s - 1))).as("chunk")): _*)
+    val b = salted.select(pairSide("r", payload) :+ col("chunk"): _*)
+    a.repartition(s, col("block_key"), col("chunk"))
+      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
+      .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
+  }
+
+  /** One pair-join side: block_key, then base_name and `payload`
+    * renamed with prefix `p` (l_name, l_token_key, …). */
+  private def pairSide(p: String, payload: Seq[String]): Seq[org.apache.spark.sql.Column] =
+    col("block_key") +: col("base_name").as(s"${p}_name") +:
+      payload.map(c => col(c).as(s"${p}_$c"))
+
+  /** The sorted-neighborhood join over a ranked index: each name
+    * (a_name, a_<payload>) meets its `window-1` successors in rank
+    * (b_name, b_<payload>). The rank-offset fan-out makes the
+    * neighborhood condition an equi-join on (block_key, rnk). */
+  private def neighborJoin(ranked: DataFrame, window: Int, payload: Seq[String]): DataFrame = {
+    val a = ranked.select(pairSide("a", payload) :+
+      explode(sequence(col("rnk") + 1, col("rnk") + (window - 1))).as("rnk"): _*)
+    val b = ranked.select(pairSide("b", payload) :+ col("rnk"): _*)
+    a.join(b, Seq("block_key", "rnk"))
   }
 
   /** Names-per-call above which [[blockRanked]] replaces the
@@ -667,22 +617,8 @@ object Matching {
       settings: DedupSettings = DedupSettings(),
       pinSink: DataFrame => Unit = _ => ()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    val ranked = withBlockRank(stats, pinSink, settings.reliableCheckpoints)
-    val a = ranked.select(
-      col("block_key"),
-      col("base_name").as("a_name"),
-      col("min_row").as("a_min_row"),
-      col("max_row").as("a_max_row"),
-      col("token_key").as("a_token_key"),
-      explode(sequence(col("rnk") + 1, col("rnk") + (window - 1))).as("rnk"))
-    val b = ranked.select(
-      col("block_key"),
-      col("base_name").as("b_name"),
-      col("min_row").as("b_min_row"),
-      col("max_row").as("b_max_row"),
-      col("token_key").as("b_token_key"),
-      col("rnk"))
-    a.join(b, Seq("block_key", "rnk"))
+    neighborJoin(withBlockRank(stats, pinSink, settings.reliableCheckpoints), window,
+        Seq("min_row", "max_row", "token_key"))
       .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name")))
       .withColumn("token_match", col("a_token_key") === col("b_token_key"))
       .drop("a_token_key", "b_token_key", "rnk")

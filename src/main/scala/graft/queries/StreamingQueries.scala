@@ -89,12 +89,9 @@ object StreamingQueries {
       targetBytesPerPart: Long): SparkSession = {
     val ss = s.newSession()
     val cores = s.sparkContext.defaultParallelism
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
-      .getOrElse {
-        val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
-        val derived = (bytes / targetBytesPerPart).min(BigInt(cores)).toInt
-        math.max(8, math.min(cores, derived))
-      }
+    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    val derived = (bytes / targetBytesPerPart).min(BigInt(cores)).toInt
+    val parts = math.max(8, math.min(cores, derived))
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
     ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     // AvailableNow drains all new files in ONE data batch; the trailing
@@ -107,8 +104,9 @@ object StreamingQueries {
     // the data branch (their timers just evict state the run is about
     // to drop; constant event time ⇒ no timer ever fires before the
     // data anyway). Measured on the interval-join harness: 0.8-1.9 s
-    // per run of addBatch on zero rows (StreamProbe) — per RUN, so
-    // every rep pays it twice. Scale-independent: the cost removed is
+    // per run of addBatch on zero rows (per-batch durationMs, recorded
+    // in OPTIMIZATION_r21.md and VERDICT.md) — per RUN, so every rep
+    // pays it twice. Scale-independent: the cost removed is
     // a whole micro-batch, not a local[32] tuning artifact. The DuckDB
     // twins grade that the final state is unchanged.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
@@ -128,25 +126,6 @@ object StreamingQueries {
       case other => throw new IllegalArgumentException(
         s"SPARK_GRAFT_STREAM_PROVIDER: unknown provider '$other' (rocksdb|default)")
     }
-    // SPARK_GRAFT_STREAM_STATS=1: print per-batch state-operator
-    // totals (rows + memory) — the scale sweep's evidence that keyed
-    // state stays bounded (SCALE.md's measured-not-asserted rule for
-    // the streaming family). Dev knob; unset in bench/driver runs.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_STATS"))
-      ss.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val so = e.progress.stateOperators
-          if (so.nonEmpty) {
-            val rows = so.map(_.numRowsTotal).sum
-            val mem = so.map(_.memoryUsedBytes).sum
-            println(f"[streamstats] parts=$parts batch=${e.progress.batchId} " +
-              f"stateRows=$rows stateMB=${mem / 1048576.0}%.1f")
-          }
-        }
-      })
     ss
   }
 
@@ -174,17 +153,15 @@ object StreamingQueries {
     * per-file open/footer/commit overhead at sf0.1 where the whole
     * input is ~1 MB (the r12 sf0.1 streaming creep), while 8 files
     * still saturate the per-row column work there. */
-  private def writeParts(s: SparkSession, input: DataFrame): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_WRITE_PARTS").map(_.toInt)
-      .getOrElse {
-        val cores = s.sparkContext.defaultParallelism
-        val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
-        // clamp in BigInt space BEFORE toInt: sizeInBytes defaults to
-        // a huge sentinel for non-estimable plans, and BigInt.toInt
-        // keeps only the low 32 bits — an unclamped conversion could
-        // silently truncate to an arbitrary (even negative) fan-out
-        (bytes / (128L << 10)).min(BigInt(cores)).max(BigInt(8)).toInt
-      }
+  private def writeParts(s: SparkSession, input: DataFrame): Int = {
+    val cores = s.sparkContext.defaultParallelism
+    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    // clamp in BigInt space BEFORE toInt: sizeInBytes defaults to
+    // a huge sentinel for non-estimable plans, and BigInt.toInt
+    // keeps only the low 32 bits — an unclamped conversion could
+    // silently truncate to an arbitrary (even negative) fan-out
+    (bytes / (128L << 10)).min(BigInt(cores)).max(BigInt(8)).toInt
+  }
 
   /** Memo'd 1-row bounds aggregate (max id / ts span) — the mid-split
     * point and watermark delay are deterministic functions of the

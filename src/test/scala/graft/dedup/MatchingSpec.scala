@@ -84,4 +84,23 @@ class MatchingSpec extends AnyFunSuite {
     val snAll = pairSet(Matching.sortedNeighborhoodPairs(stats, window = maxBlock.toInt + 1))
     assert(snAll == full)
   }
+
+  test("pair profile equals the aggregate of the qualifying pairs under every governor policy") {
+    val cap = stats.groupBy("block_key").count().agg(max("count")).head().getLong(0) - 1
+    val policies = Seq(
+      "no cap" -> DedupSettings(maxBlockNames = None),
+      "drop" -> DedupSettings(maxBlockNames = Some(cap), hotBlockWindow = 1),
+      "sorted-neighborhood" -> DedupSettings(maxBlockNames = Some(cap), hotBlockWindow = 10))
+    for ((policy, settings) <- policies) {
+      val profile = Matching.pairProfile(stats, settings).head()
+      val expected = Matching.qualifyingPairsPrepared(stats, settings)
+        .agg(count(lit(1)), sum(col("token_match").cast("long")),
+          round(avg(col("ratio")), 6))
+        .head()
+      assert(expected.getLong(0) > 0, policy)
+      assert(profile.getAs[Long]("n_pairs") == expected.getLong(0), policy)
+      assert(profile.getAs[Long]("n_token_matches") == expected.getLong(1), policy)
+      assert(profile.getAs[Double]("avg_ratio") == expected.getDouble(2), policy)
+    }
+  }
 }

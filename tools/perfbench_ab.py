@@ -21,6 +21,16 @@ working tree won (ties count for neither side). A gain is shown only
 when the working tree wins at least nine tenths of the pairs and the
 medians differ by more than the base's interquartile range.
 
+Every end-to-end metric also gets a no-regression verdict, printed in
+its row and written to `--json` under "verdicts". Its `bound` in
+BENCHMARK.json is read as a fraction of the base median:
+  worse       the working tree's median is worse than the base median
+              by more than the bound;
+  unresolved  the base runs' interquartile range is wider than the
+              bound, so 'not worse' cannot be told from noise, unless
+              every working-tree run beats every base run;
+  no worse    everything else.
+
 With `--trace-seeds N`, the untraced pairs are followed by one traced
 run (`--trace 1`) per side on each of the first N seeds, in the same
 alternating order, and each per-layer metric of BENCHMARK.json is
@@ -74,6 +84,22 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(base, change, better, bound):
+    """'worse', 'unresolved' or 'no worse' for one end-to-end metric
+    (see the module docstring); a side without results is unresolved."""
+    if not base or not change:
+        return "unresolved"
+    bq1, bmed, bq3 = quartiles(base)
+    cmed = quartiles(change)[1]
+    lower = better == "lower"
+    if ((cmed - bmed) if lower else (bmed - cmed)) > bound * abs(bmed):
+        return "worse"
+    beats_all = max(change) < min(base) if lower else min(change) > max(base)
+    if bq3 - bq1 > bound * abs(bmed) and not beats_all:
+        return "unresolved"
+    return "no worse"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="commit to compare against (e.g. HEAD)")
@@ -92,6 +118,7 @@ def main():
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     layers = [m["name"] for m in bench["per_layer"]]
     if a.metric not in better:
         sys.exit(f"--metric {a.metric} is not an end-to-end metric of BENCHMARK.json")
@@ -122,13 +149,17 @@ def main():
             print(f"traced seed {seed} {side}: {'done' if res else 'run failed'}", flush=True)
 
     print(f"\n{a.workload}: base {sha[:12]} vs working tree, {a.pairs} pairs")
-    print(f"{'metric':<16}{'base q1 / median / q3':>34}{'change q1 / median / q3':>34}")
+    print(f"{'metric':<16}{'base q1 / median / q3':>34}{'change q1 / median / q3':>34}"
+          f"{'bound':>7}  verdict")
+    verdicts = {}
     for m in better:
-        cols = []
+        cols, vals = [], []
         for side in ("base", "change"):
             xs = [r["metrics"][m]["value"] for r in runs[side] if r and m in r["metrics"]]
+            vals.append(xs)
             cols.append("/".join(f"{v:.4g}" for v in quartiles(xs)) if xs else "-")
-        print(f"{m:<16}{cols[0]:>34}{cols[1]:>34}")
+        verdicts[m] = verdict(*vals, better[m], bounds[m])
+        print(f"{m:<16}{cols[0]:>34}{cols[1]:>34}{bounds[m]:>7.2f}  {verdicts[m]}")
     for side in ("base", "change"):
         failed = sum(r["failed"] if r else 1 for r in runs[side])
         print(f"failed jobs ({side}): {failed}")
@@ -168,8 +199,8 @@ def main():
           f"base IQR {bq3 - bq1:.4g}: gain {'shown' if shown else 'NOT shown'}")
     if a.json:
         with open(a.json, "w") as f:
-            json.dump({"base": sha, "workload": a.workload, "runs": runs, "traced": traced},
-                      f, indent=1)
+            json.dump({"base": sha, "workload": a.workload, "verdicts": verdicts,
+                       "runs": runs, "traced": traced}, f, indent=1)
 
 
 if __name__ == "__main__":
