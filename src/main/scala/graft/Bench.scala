@@ -75,9 +75,9 @@ object Bench {
     // random 3-4× single-rep outliers with flat GC time. RAM-backed
     // local dirs remove the disk from the measurement entirely (the
     // benched queries' shuffles are MBs, nowhere near tmpfs capacity).
-    // pid-suffixed + stale-sweep (LocalDirs): a SIGKILLed run must not
-    // leak RAM-backed shuffle files into every later measurement
-    val localDir = graft.tools.LocalDirs.ramLocalDir("bench")
+    // pid-named + dead-pid sweep (Fs.ramScratch): a SIGKILLed run must
+    // not leak RAM-backed shuffle files into every later measurement
+    val localDir = graft.core.Fs.ramScratch("graft-bench-local").toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -241,7 +241,8 @@ object Bench {
       "dedup" -> graft.queries.DedupQueries.warmIndexes,
       "text" -> graft.queries.TextQueries.warmIndexes,
       "ann" -> graft.queries.AnnQueries.warmIndexes,
-      "mm" -> graft.queries.MultimodalQueries.warmIndexes)
+      "mm" -> graft.queries.MultimodalQueries.warmIndexes,
+      "stream" -> graft.queries.StreamingQueries.warmIndexes)
 
     // cached-RDD bytes currently resident in memory (MB) — the
     // storage half of the unified pool; execution memory isn't

@@ -255,9 +255,8 @@ object AnnQueries {
     * artifacts are deterministic functions of the key (same trained
     * index bit-for-bit), so cross-session reuse within the JVM is
     * sound. Reaped on JVM exit; a SIGKILLed run's leftovers are
-    * covered by the same 2h stale sweep the streaming scratch uses
-    * (RAM-backed /dev/shm leaks shrink usable memory for everything
-    * after). */
+    * reaped by the next [[graft.core.Fs.ramScratch]] call once its
+    * pid is dead. */
   private val savedIdxDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -269,38 +268,13 @@ object AnnQueries {
         scala.util.Try(rmTree(new java.io.File(d))): Unit)))
   }
 
-  /** A fresh scratch dir under /dev/shm when available (RAM-backed —
-    * the artifacts are KBs and the bench must not measure root-disk
-    * writeback). Before creating, reap leftovers of SIGKILLed runs:
-    * same-prefix dirs older than 2h that are NOT registered by this
-    * JVM (ADVICE r13: a >2h session's own live index must never be
-    * swept out from under it; cache hits also touch mtime below, so
-    * an in-use dir looks fresh to other JVMs' sweeps too). */
-  private def freshScratchDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (java.nio.file.Files.isDirectory(shm)) {
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      val mine = savedIdxDirs.values.toSet
-      val kids = shm.toFile.listFiles()
-      if (kids != null) kids.foreach { f =>
-        if (f.getName.startsWith("graft_annidx") &&
-            f.lastModified() < cutoff && !mine.contains(f.toString)) rmTree(f)
-      }
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    } else java.nio.file.Files.createTempDirectory(prefix)
-    base.toString
-  }
-
-  private def touch(dir: String): Unit =
-    new java.io.File(dir).setLastModified(System.currentTimeMillis()): Unit
-
   private def persistedIndexDir(s: SparkSession, dir: String): String = {
     val key = s"$dir:s$IpSub:k$IpK:i$IpIters:km$KmK"
     savedIdxDirs.get(key) match {
-      case Some(p) => touch(p); p
+      case Some(p) => p
       case None => synchronized {
         savedIdxDirs.getOrElse(key, {
-          val base = freshScratchDir("graft_annidx")
+          val base = graft.core.Fs.ramScratch("graft_annidx").toString
           // the code table is KBs at bench scale: 32 cache-partition
           // files would make every load/serve pay 32 file opens of
           // ~60 rows each (a real trainer sizes its output files; so
@@ -342,11 +316,11 @@ object AnnQueries {
   private def mutationScratch(s: SparkSession, dir: String): String = {
     val key = s"mut:$dir:s$IpSub:k$IpK:i$IpIters:km$KmK"
     val scratch = savedIdxDirs.get(key) match {
-      case Some(p) => touch(p); p
+      case Some(p) => p
       case None => synchronized {
         savedIdxDirs.getOrElse(key, {
           val src = java.nio.file.Paths.get(persistedIndexDir(s, dir))
-          val dst = java.nio.file.Paths.get(freshScratchDir("graft_annidx_mut"))
+          val dst = graft.core.Fs.ramScratch("graft_annidx_mut")
           val stream = java.nio.file.Files.walk(src)
           try stream.forEach { p =>
             val t = dst.resolve(src.relativize(p))

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Fs, Memo, Par, Tables}
 import graft.streaming.{EventStreams, StreamAnnDedup, StreamDedup, StreamMmDedup, StreamNearDup}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,55 +10,17 @@ import org.apache.spark.sql.streaming.Trigger
   * item 4): where a streaming path's FINAL STATE is expressible as a
   * batch query, it is declared here and graded like every batch
   * operator — closing the "streaming siblings are spec-only" gap.
-  * Each query drives the REAL machinery end-to-end: a file source,
-  * two `Trigger.AvailableNow` runs ("yesterday's ingest", "today's")
-  * sharing one checkpoint, so run 2 resumes run 1's offsets and
-  * state exactly as a restarted production job would.
+  * Each query drives the REAL machinery end-to-end through one
+  * harness ([[twoRuns]]): a file source, two `Trigger.AvailableNow`
+  * runs ("yesterday's ingest", "today's") sharing one checkpoint, so
+  * run 2 resumes run 1's offsets and state exactly as a restarted
+  * production job would.
   *
   * The other streaming ops (watermark-dropped late data, funnels,
   * the anomaly monitor) have no batch-equal final state by nature
   * (drops are arrival-order-dependent); they stay under their
   * batch-parity specs in graft/streaming. */
 object StreamingQueries {
-
-  /** Scratch tree for a two-run streaming query; best-effort removed
-    * after the result is materialized. RAM-backed when /dev/shm
-    * exists: the harness writes input files + checkpoint + state +
-    * output per REP, and on-disk page writeback is pure measurement
-    * noise for MB-scale scratch (same rationale as Bench's tmpfs
-    * shuffle dirs). A real deployment supplies its own durable
-    * checkpoint path through the graft.streaming APIs — this scratch
-    * only exists for the graded two-run harness. */
-  private def scratch(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm)) {
-      // reap stale scratch from SIGKILLed runs (the try/finally below
-      // can't fire on a kill, and RAM-backed leaks shrink usable
-      // memory for everything after — the LocalDirs lesson). Any
-      // graft_stream/graft_rocks scratch older than 2h is dead: a
-      // single two-run harness lives for seconds.
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      val kids = shm.toFile.listFiles()
-      if (kids != null) kids.foreach { f =>
-        if ((f.getName.startsWith("graft_stream") ||
-             f.getName.startsWith("graft_rocks")) &&
-            f.lastModified() < cutoff) rmTree(f)
-      }
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    } else java.nio.file.Files.createTempDirectory(prefix)
-  }
-
-  private def rmTree(f: java.io.File): Unit = graft.core.Fs.rmTree(f)
-
-  /** Run `body` with a scratch tree, deleting it even on failure —
-    * the scratch lives in RAM (/dev/shm) when available, so a leak on
-    * a crashed run would cost memory, not just disk. `body` must
-    * materialize its result (localCheckpoint) before returning. */
-  private def withScratch(prefix: String)(
-      body: java.nio.file.Path => DataFrame): DataFrame = {
-    val tmp = scratch(prefix)
-    try body(tmp) finally rmTree(tmp.toFile)
-  }
 
   /** Child session (own SQLConf over the shared SparkContext) the
     * streaming machinery runs under. Stateful operators keep one
@@ -73,7 +35,9 @@ object StreamingQueries {
     * (stream_incremental_ann 6.2 s → 14.6 s — VERDICT r11). So the
     * count is DERIVED from the query's own input volume:
     * one partition per `targetBytesPerPart` of source bytes
-    * (plan-stats estimate), clamped to [8, cores]. The target
+    * (plan-stats estimate), at most `cores` and never fewer than 8 —
+    * the floor wins, so a host with fewer than 8 cores still gets 8.
+    * The target
     * encodes the state operator's per-byte compute density — a
     * quadratic pair-scoring state fn saturates a partition on KBs of
     * vectors (small target → more partitions as volume grows), while
@@ -149,7 +113,8 @@ object StreamingQueries {
     * task (7 s of its 15 s wall); production jobs get this for free
     * because real ingest is many files. Like the state partitions,
     * the count is DERIVED from input volume (one file per ~128 KB,
-    * clamped [8, cores]): a fixed fan-out of 32 paid ~1 s/query of
+    * at most `cores` and never fewer than 8, also on a host with
+    * fewer than 8 cores): a fixed fan-out of 32 paid ~1 s/query of
     * per-file open/footer/commit overhead at sf0.1 where the whole
     * input is ~1 MB (the r12 sf0.1 streaming creep), while 8 files
     * still saturate the per-row column work there. */
@@ -169,58 +134,131 @@ object StreamingQueries {
     * scan+agg job before the harness even starts; Memo them like
     * every other shared derived frame (the family invalidation in
     * Bench releases them with the rest of the stream family). */
-  private def memoBounds(s: SparkSession, key: String)(
-      df: => DataFrame): org.apache.spark.sql.Row =
-    graft.core.Memo.cached(s, key)(df).head()
+  private def memoBounds(s: SparkSession, key: String)(df: => DataFrame): Row =
+    Memo.cached(s, s"stream_bounds:$key")(df).head()
+
+  /** `df` with its split point: half its max `idCol`, memo'd. */
+  private def withMid(s: SparkSession, key: String, df: DataFrame,
+      idCol: String): (DataFrame, Long) =
+    (df, memoBounds(s, key)(df.agg(max(col(idCol)))).getLong(0) / 2)
+
+  /** A deterministic md5-bucketed 25% sample (first hex digit of
+    * md5(id) in 0-3): id-pattern-independent, and reproduced verbatim
+    * by the DuckDB twins. */
+  private def md5Quarter(idCol: String): Column =
+    substring(md5(col(idCol).cast("string")), 1, 1).isin("0", "1", "2", "3")
+
+  // constant event time: nothing is late, nothing times out — the
+  // batch-equal final state the gate requires
+  private val ConstTs = lit("2024-01-01 00:00:00").cast("timestamp")
+
+  // The queries' inputs with their split points: one function per
+  // input, called by the query and by warmIndexes alike, so a memo key
+  // and its expression cannot drift apart.
+
+  private def docsInput(s: SparkSession, dir: String): (DataFrame, Long) =
+    withMid(s, s"docs:$dir",
+      Tables.documents(s, dir).select(col("doc_id"), col("text")), "doc_id")
+
+  private def docs25Input(s: SparkSession, dir: String): (DataFrame, Long) =
+    withMid(s, s"docs25:$dir", Tables.documents(s, dir).filter(md5Quarter("doc_id"))
+      .select(col("doc_id"), col("text")).withColumn("ts", ConstTs), "doc_id")
+
+  private def emb25Input(s: SparkSession, dir: String): (DataFrame, Long) =
+    withMid(s, s"emb25:$dir", Tables.embeddings(s, dir).filter(md5Quarter("vec_id"))
+      .select(col("vec_id"), col("embedding")).withColumn("ts", ConstTs), "vec_id")
+
+  // pinned once per session (Memo), not per repetition: the decode and
+  // its max-id bound are deterministic per dir
+  private def mmInput(s: SparkSession, dir: String): (DataFrame, Long) =
+    withMid(s, s"mmidx:$dir", Memo.cached(s, s"stream_mmidx:$dir", truncate = true) {
+      MultimodalQueries.dhashIndex(s, dir).withColumn("ts", ConstTs)
+    }, "media_id")
+
+  /** max(event_id), min(ts), max(ts) of the events table. */
+  private def eventBounds(s: SparkSession, dir: String): Row =
+    memoBounds(s, s"events:$dir")(
+      Tables.events(s, dir).agg(max(col("event_id")), min(col("ts")), max(col("ts"))))
+
+  /** Bench's untimed `stream` warm: builds every bounds memo, the
+    * dHash pin and the dHash bucket stats the queries read, so none of
+    * them is built inside a query's untimed warm rep and index_build
+    * counts them. */
+  def warmIndexes(s: SparkSession, dir: String): Unit =
+    Par.run(Seq(
+      () => docsInput(s, dir): Unit,
+      () => docs25Input(s, dir): Unit,
+      () => emb25Input(s, dir): Unit,
+      () => { mmInput(s, dir); MultimodalQueries.overCapBucketKeys(s, dir): Unit },
+      () => eventBounds(s, dir): Unit))
+
+  /** The two-run checkpoint-resume harness every query here runs.
+    * `input` ships in two drops: the rows with `splitCol <= mid`, then
+    * the rest. Each drop is written multi-file ([[writeParts]]) into
+    * one file-source dir and drained by one `Trigger.AvailableNow` run
+    * of `operator`, which gets the harness session and a fresh reader
+    * of that dir per call. Both runs share one checkpoint. Every
+    * micro-batch goes through `sink(tmp)` (by default appended to
+    * `tmp/out`, overwritten in `complete` output mode), and
+    * `readout(tmp/out)` is materialized before the scratch tree `tmp`
+    * is deleted — also when a run fails.
+    *
+    * The tree is RAM-backed where /dev/shm exists ([[Fs.ramScratch]]):
+    * the harness writes input files, checkpoint, state and output per
+    * rep, and disk page writeback is pure measurement noise for
+    * MB-scale scratch. A real deployment supplies its own durable
+    * checkpoint path through the graft.streaming APIs. */
+  private def twoRuns(s: SparkSession, prefix: String, input: DataFrame,
+      splitCol: String, mid: Long, target: Long, complete: Boolean = false)(
+      operator: (SparkSession, () => DataFrame) => DataFrame,
+      sink: String => (DataFrame, Long) => Unit = tmp => (b, _) =>
+        b.write.mode(if (complete) "overwrite" else "append").parquet(s"$tmp/out"))(
+      readout: String => DataFrame): DataFrame = {
+    val ss = harnessSession(s, input, target)
+    val tmp = Fs.ramScratch(prefix)
+    try {
+      for (drop <- Seq(col(splitCol) <= mid, col(splitCol) > mid)) {
+        val batch = input.filter(drop)
+        batch.repartition(writeParts(s, batch)).write.mode("append").parquet(s"$tmp/in")
+        operator(ss, () => ss.readStream.schema(input.schema).parquet(s"$tmp/in"))
+          .writeStream
+          .option("checkpointLocation", s"$tmp/ck")
+          .outputMode(if (complete) "complete" else "append")
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch(sink(tmp.toString))
+          .start().awaitTermination()
+      }
+      readout(s"$tmp/out").localCheckpoint(true)
+    } finally Fs.rmTree(tmp.toFile)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Cross-RUN incremental exact dedup, END-TO-END through the real
     // streaming machinery: the documents table is split into two
-    // id-ordered halves, each shipped through
-    // StreamDedup.incrementalDedup as its own Trigger.AvailableNow
-    // run over a file source with a shared checkpoint + persistent
-    // hash index — run 2 resumes the checkpoint, reads only the new
-    // files, and dedups against the on-disk index of everything run
-    // 1 shipped. With the deterministic min-id in-batch survivor and
-    // the id-ordered split, the union of both runs' survivors must
-    // equal the BATCH exact-dedup answer (min doc_id per content
-    // hash) — which is exactly what the DuckDB twin grades. Scale:
-    // the per-batch anti-join shuffles by hash like any equi-join
-    // and the index is a parquet table — O(distinct history) on
-    // disk, not in executor memory.
+    // id-ordered halves, each shipped through StreamDedup's
+    // dedup-against-index batch step as its own AvailableNow run with
+    // a shared checkpoint + persistent hash index — run 2 resumes the
+    // checkpoint, reads only the new files, and dedups against the
+    // on-disk index of everything run 1 shipped. One micro-batch per
+    // run (AvailableNow with no file cap drains every new file in a
+    // single batch), so the in-batch min-id survivor — a
+    // deterministic window, partition-independent — is the run-wide
+    // survivor; with the id-ordered split the union of both runs'
+    // survivors must equal the BATCH exact-dedup answer (min doc_id
+    // per content hash) — which is exactly what the DuckDB twin
+    // grades. Scale: the per-batch anti-join shuffles by hash like
+    // any equi-join and the index is a parquet table — O(distinct
+    // history) on disk, not in executor memory.
     "stream_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val mid = memoBounds(s, s"stream_bounds:docs:$dir")(
-        docs.agg(max(col("doc_id")))).getLong(0) / 2
-      val ss = harnessSession(s, docs, KeyedStorageTarget)
-      withScratch("graft_stream_dedup") { tmp =>
-        val in = s"$tmp/in"
-        val idx = s"$tmp/idx"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          // one micro-batch per run (AvailableNow with no file cap
-          // drains every new file in a single batch), so the in-batch
-          // min-id survivor — a deterministic window, partition-
-          // independent — is the run-wide survivor. The input is
-          // written MULTI-FILE on purpose: the file source assigns
-          // one read task per small file, and a coalesce(1) input
-          // used to serialize the whole per-row compute of the
-          // micro-batch into a single task (measured 7 s → 2.4 s on
-          // the sf1 neardup run — the 100 TB lesson in miniature:
-          // source parallelism bounds stateful-stream throughput).
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          val stream = ss.readStream.schema(docs.schema).parquet(in)
-          StreamDedup.incrementalDedup(stream, "text", idx, ck, idCol = Some("doc_id")) {
-            (fresh, _) => fresh.write.mode("append").parquet(out)
-          }.awaitTermination()
-        }
-        runOnce(docs.filter(col("doc_id") <= mid))
-        runOnce(docs.filter(col("doc_id") > mid))
+      val (docs, mid) = docsInput(s, dir)
+      twoRuns(s, "graft_stream_dedup", docs, "doc_id", mid, KeyedStorageTarget)(
+        (_, src) => src(),
+        tmp => StreamDedup.againstIndex("text", s"$tmp/idx", Some("doc_id")) {
+          (fresh, _) => fresh.write.mode("append").parquet(s"$tmp/out")
+        }) { out =>
         s.read.parquet(out)
           .select(col("doc_id"), md5(col("text").cast("string")).as("content_hash"))
           .orderBy("doc_id")
-          .localCheckpoint(true) // materialize before the tmp dir is deleted
       }
     }),
 
@@ -234,10 +272,9 @@ object StreamingQueries {
     // exactly "all same-band-bucket pairs with signature agreement
     // ≥ minEst", independent of arrival order — the DuckDB twin's
     // self-join. Parameters mirror the batch text_lsh family
-    // (12 sigs, 6 bands × 2 rows, 2-shingles) over a deterministic
-    // md5-bucketed 25% sample (first hex digit of md5(doc_id) in 0-3
-    // — id-pattern-independent, reproduced verbatim by the twin; the
-    // same sampling-commutes argument as text_lsh_pairs_sample).
+    // (12 sigs, 6 bands × 2 rows, 2-shingles) over the md5-bucketed
+    // 25% sample (the same sampling-commutes argument as
+    // text_lsh_pairs_sample).
     // Audit mode makes EVERY doc a bucket representative, so state
     // and comparisons grow with the SQUARE of the hottest band
     // bucket — the r12 50% id-parity sample still ran 14.9 s at sf1,
@@ -250,39 +287,13 @@ object StreamingQueries {
     // back to its exact integer numerator (est·12) so no
     // double-rounding can diverge cross-engine.
     "stream_incremental_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 1)
-          .isin("0", "1", "2", "3"))
-        .select(col("doc_id"), col("text"))
-        // constant event time: nothing is late, nothing times out —
-        // the batch-equal final state the gate requires
-        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      val mid = memoBounds(s, s"stream_bounds:docs25:$dir")(
-        docs.agg(max(col("doc_id")))).getLong(0) / 2
-      implicit val ss: SparkSession =
-        harnessSession(s, docs, QuadraticStateTarget)
-      withScratch("graft_stream_neardup") { tmp =>
-        val in = s"$tmp/in"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          val stream = ss.readStream.schema(docs.schema).parquet(in)
-          val pairs = StreamNearDup.candidatePairs(stream, "doc_id", "text",
-            tsCol = "ts", delay = "1 hour",
-            numSigs = TextQueries.NumSigs, bands = TextQueries.Bands,
-            shingleK = TextQueries.ShingleK, minEst = 0.5,
-            maxReps = Int.MaxValue, addMatchedReps = true)
-          pairs.toDF().writeStream
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-            }
-            .start().awaitTermination()
-        }
-        runOnce(docs.filter(col("doc_id") <= mid))
-        runOnce(docs.filter(col("doc_id") > mid))
+      val (docs, mid) = docs25Input(s, dir)
+      twoRuns(s, "graft_stream_neardup", docs, "doc_id", mid, QuadraticStateTarget)(
+        (ss, src) => StreamNearDup.candidatePairs(src(), "doc_id", "text",
+          tsCol = "ts", delay = "1 hour",
+          numSigs = TextQueries.NumSigs, bands = TextQueries.Bands,
+          shingleK = TextQueries.ShingleK, minEst = 0.5,
+          maxReps = Int.MaxValue, addMatchedReps = true)(ss).toDF()) { out =>
         // explicit schema: a pairless corpus appends no parquet files
         s.read
           .schema(Encoders.product[StreamNearDup.Candidate].schema)
@@ -293,7 +304,6 @@ object StreamingQueries {
           // one row per agreeing band → pair-level uniqueness here
           .dropDuplicates("a_id", "b_id")
           .orderBy("a_id", "b_id")
-          .localCheckpoint(true)
       }
     }),
 
@@ -308,51 +318,26 @@ object StreamingQueries {
     // the streaming path must reproduce the batch sign-LSH join
     // bit-for-bit, including the in-state Scala cosine matching the
     // codegen'd DotProduct + Round to the last ulp.
+    // md5-bucketed 25% sample, the stream_incremental_neardup
+    // precedent: audit mode retains EVERY vector as a bucket rep and
+    // there are only 2^|planes| = 64 sign-LSH buckets, so audit state
+    // per bucket grows linearly with the corpus and the in-state
+    // cosine scoring quadratically — measured 32 s at sf10 (200k
+    // vectors) where production mode's maxReps cap stays flat.
+    // Sample-rate² bounds the audit; the twin (the proven
+    // ann_lsh_pairs relation) is sampled identically.
     "stream_incremental_ann" -> ((s, dir) => {
-      // md5-bucketed 25% sample, the stream_incremental_neardup
-      // precedent: audit mode retains EVERY vector as a bucket rep
-      // and there are only 2^|planes| = 64 sign-LSH buckets, so audit
-      // state per bucket grows linearly with the corpus and the
-      // in-state cosine scoring quadratically — measured 32 s at sf10
-      // (200k vectors) where production mode's maxReps cap stays
-      // flat. Sample-rate² bounds the audit; the twin (the proven
-      // ann_lsh_pairs relation) is sampled identically.
-      val emb = Tables.embeddings(s, dir)
-        .filter(substring(md5(col("vec_id").cast("string")), 1, 1)
-          .isin("0", "1", "2", "3"))
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      val mid = memoBounds(s, s"stream_bounds:emb25:$dir")(
-        emb.agg(max(col("vec_id")))).getLong(0) / 2
-      implicit val ss: SparkSession =
-        harnessSession(s, emb, QuadraticStateTarget)
-      withScratch("graft_stream_ann") { tmp =>
-        val in = s"$tmp/in"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          val stream = ss.readStream.schema(batch.schema).parquet(in)
-          StreamAnnDedup.candidatePairs(stream, "vec_id", "embedding",
-            planes = AnnQueries.Planes, tsCol = "ts", delay = "1 hour",
-            minCos = 0.20, maxReps = Int.MaxValue, addMatchedReps = true)
-            .toDF().writeStream
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-            }
-            .start().awaitTermination()
-        }
-        runOnce(emb.filter(col("vec_id") <= mid))
-        runOnce(emb.filter(col("vec_id") > mid))
+      val (emb, mid) = emb25Input(s, dir)
+      twoRuns(s, "graft_stream_ann", emb, "vec_id", mid, QuadraticStateTarget)(
+        (ss, src) => StreamAnnDedup.candidatePairs(src(), "vec_id", "embedding",
+          planes = AnnQueries.Planes, tsCol = "ts", delay = "1 hour",
+          minCos = 0.20, maxReps = Int.MaxValue, addMatchedReps = true)(ss).toDF()) { out =>
         s.read
           .schema(Encoders.product[StreamAnnDedup.Candidate].schema)
           .parquet(out)
           // one bucket per vector → each pair emitted exactly once
           .select("a_id", "b_id", "bucket", "cos")
           .orderBy("a_id", "b_id")
-          .localCheckpoint(true)
       }
     }),
 
@@ -374,37 +359,11 @@ object StreamingQueries {
     // fits the cap (every bucket under it at sf<=1; sf10 has 5 over),
     // and exactly the batch governor's dropped-bucket set otherwise.
     "stream_incremental_mmdedup" -> ((s, dir) => {
-      // pin once per session (Memo), not per repetition: the pinned
-      // frame (Memo'd decode + constant ts) and its max-id bound are
-      // deterministic per dir
-      val idx = graft.core.Memo.cached(s, s"stream_mmidx:$dir", truncate = true) {
-        MultimodalQueries.dhashIndex(s, dir)
-          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      }
-      val mid = memoBounds(s, s"stream_bounds:mmidx:$dir")(
-        idx.agg(max(col("media_id")))).getLong(0) / 2
-      implicit val ss: SparkSession =
-        harnessSession(s, idx, QuadraticStateTarget)
-      withScratch("graft_stream_mm") { tmp =>
-        val in = s"$tmp/in"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          val stream = ss.readStream.schema(batch.schema).parquet(in)
-          StreamMmDedup.candidatePairs(stream, "media_id",
-            tsCol = "ts", delay = "1 hour", maxHamming = 3,
-            maxReps = Int.MaxValue, addMatchedReps = true)
-            .toDF().writeStream
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-            }
-            .start().awaitTermination()
-        }
-        runOnce(idx.filter(col("media_id") <= mid))
-        runOnce(idx.filter(col("media_id") > mid))
+      val (idx, mid) = mmInput(s, dir)
+      twoRuns(s, "graft_stream_mm", idx, "media_id", mid, QuadraticStateTarget)(
+        (ss, src) => StreamMmDedup.candidatePairs(src(), "media_id",
+          tsCol = "ts", delay = "1 hour", maxHamming = 3,
+          maxReps = Int.MaxValue, addMatchedReps = true)(ss).toDF()) { out =>
         val emitted = s.read
           .schema(Encoders.product[StreamMmDedup.Candidate].schema)
           .parquet(out)
@@ -420,7 +379,6 @@ object StreamingQueries {
           .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
           .distinct()
           .orderBy("a_id", "b_id")
-          .localCheckpoint(true)
       }
     }),
 
@@ -443,49 +401,31 @@ object StreamingQueries {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val bounds = memoBounds(s, s"stream_bounds:events:$dir")(
-        ev.agg(max(col("event_id")), min(col("ts")), max(col("ts"))))
+      val bounds = eventBounds(s, dir)
       require(!bounds.isNullAt(0) && !bounds.isNullAt(1) && !bounds.isNullAt(2),
         "stream_interval_join: events table is empty — no ts span to derive a watermark from")
-      val mid = bounds.getLong(0) / 2
       val spanSec = (bounds.getTimestamp(2).getTime -
         bounds.getTimestamp(1).getTime) / 1000L
       val delay = s"${spanSec + 86400L} seconds"
-      val ss = harnessSession(s, ev, KeyedStorageTarget)
-      withScratch("graft_stream_ij") { tmp =>
-        val in = s"$tmp/in"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          def src() = ss.readStream.schema(batch.schema).parquet(in)
-          val clicks = EventStreams.withEventTimeWatermark(
-            src().filter(col("event_type") === "click")
-              .select(col("event_id"), col("user_id"), col("ts")),
-            delay = delay)
-          val views = EventStreams.withEventTimeWatermark(
-            src().filter(col("event_type") === "view"), delay = delay)
-            .select(col("user_id"), col("ts").as("view_ts"),
-              col("value").as("view_value"))
-          EventStreams.intervalJoin(clicks, views, "user_id",
-            "ts", "view_ts", lowerSec = 1800L)
-            .writeStream
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-            }
-            .start().awaitTermination()
-        }
-        runOnce(ev.filter(col("event_id") <= mid))
-        runOnce(ev.filter(col("event_id") > mid))
+      twoRuns(s, "graft_stream_ij", ev, "event_id", bounds.getLong(0) / 2,
+        KeyedStorageTarget)((_, src) => {
+        val clicks = EventStreams.withEventTimeWatermark(
+          src().filter(col("event_type") === "click")
+            .select(col("event_id"), col("user_id"), col("ts")),
+          delay = delay)
+        val views = EventStreams.withEventTimeWatermark(
+          src().filter(col("event_type") === "view"), delay = delay)
+          .select(col("user_id"), col("ts").as("view_ts"),
+            col("value").as("view_value"))
+        EventStreams.intervalJoin(clicks, views, "user_id",
+          "ts", "view_ts", lowerSec = 1800L)
+      }) { out =>
         s.read.parquet(out)
           .groupBy("event_id")
           .agg(count(lit(1)).as("n_views"),
             sum(col("view_value").cast("decimal(18,2)")).cast("double")
               .as("view_value_sum"))
           .orderBy("event_id")
-          .localCheckpoint(true)
       }
     }),
 
@@ -496,38 +436,19 @@ object StreamingQueries {
     // store, so run 2 folds today's events into yesterday's windows
     // and the final complete table equals the batch events_tumbling
     // answer on the union — the twin grades it with the identical
-    // SQL. foreachBatch overwrites the sink per trigger (complete
+    // SQL. The harness overwrites the sink per trigger (complete
     // mode's contract), so the last write IS the final state.
     "stream_tumbling_counts" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val mid = memoBounds(s, s"stream_bounds:events:$dir")(
-        ev.agg(max(col("event_id")), min(col("ts")), max(col("ts")))).getLong(0) / 2
-      val ss = harnessSession(s, ev, KeyedStorageTarget)
-      withScratch("graft_stream_tumbling") { tmp =>
-        val in = s"$tmp/in"
-        val ck = s"$tmp/ck"
-        val out = s"$tmp/out"
-        def runOnce(batch: DataFrame): Unit = {
-          batch.repartition(writeParts(s, batch)).write.mode("append").parquet(in)
-          val stream = ss.readStream.schema(batch.schema).parquet(in)
-          EventStreams.tumblingCounts(stream).writeStream
-            .option("checkpointLocation", ck)
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-            }
-            .start().awaitTermination()
-        }
-        runOnce(ev.filter(col("event_id") <= mid))
-        runOnce(ev.filter(col("event_id") > mid))
+      twoRuns(s, "graft_stream_tumbling", ev, "event_id", eventBounds(s, dir).getLong(0) / 2,
+        KeyedStorageTarget, complete = true)(
+        (_, src) => EventStreams.tumblingCounts(src())) { out =>
         s.read.parquet(out)
           .select(
             date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
             col("event_type"), col("n"), col("total_value"))
           .orderBy("window_start", "event_type")
-          .localCheckpoint(true)
       }
     })
   )

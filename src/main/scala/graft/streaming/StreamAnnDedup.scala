@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ext.Ann
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
 /** Streaming sign-LSH NEAR-duplicate detection over an embedding
@@ -38,12 +37,10 @@ import java.sql.Timestamp
 object StreamAnnDedup {
 
   case class BucketVec(bucket: Long, vec_id: Long, ts: Timestamp, u: Array[Double])
-  /** Bucket reps as packed primitives: `us` holds `vec_ids.length`
-    * consecutive `dim`-double unit vectors. Keyed state pays an
-    * encoder round-trip per read/write, and Catalyst's deserializer
-    * for collections of case classes walks the object graph element
-    * by element — primitive arrays copy as single blocks instead
-    * (the [[StreamNearDup]] state lesson). */
+  /** Bucket reps as packed primitives ([[BucketReps]]): `us` holds
+    * `vec_ids.length` consecutive `dim`-double unit vectors; the
+    * first rep fixes `dim`, and a vector of another dimension fails
+    * with "embedding dimension mismatch". */
   case class BucketState(vec_ids: Array[Long], us: Array[Double])
   case class Candidate(a_id: Long, b_id: Long, bucket: Long, cos: Double)
 
@@ -116,7 +113,6 @@ object StreamAnnDedup {
       addMatchedReps: Boolean = false)(
       implicit spark: SparkSession): Dataset[Candidate] = {
     import spark.implicits._
-    val isStreaming = stream.isStreaming
 
     val v = Ann.toDouble(col(embCol))
     val banded = stream
@@ -129,67 +125,20 @@ object StreamAnnDedup {
       .withWatermark("ts", delay)
       .as[BucketVec]
 
-    banded.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, vecs: Iterator[BucketVec], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(
-              BucketState(Array.emptyLongArray, Array.emptyDoubleArray))
-            var nReps = prior.vec_ids.length
-            // dimension of the packed reps; fixed by the first rep
-            var dim = if (nReps > 0) prior.us.length / nReps else -1
-            // grow-in-place scan buffers (capacity doubling): appends
-            // are amortized O(1) and the live prefix is scanned
-            // directly — no per-append copying in hot buckets
-            var ids = java.util.Arrays.copyOf(prior.vec_ids, math.max(4, nReps))
-            var us = java.util.Arrays.copyOf(prior.us,
-              math.max(4 * math.max(dim, 1), nReps * math.max(dim, 1)))
-            val out = List.newBuilder[Candidate]
-            var maxTs = Long.MinValue
-            // deterministic in-batch order regardless of shuffle arrival
-            vecs.toSeq.sortBy(x => (x.ts.getTime, x.vec_id)).foreach { x =>
-              maxTs = math.max(maxTs, x.ts.getTime)
-              // the dim-mismatch guard the batch DotProduct path has:
-              // schema drift must error, not truncate a cosine
-              require(dim < 0 || x.u.length == dim,
-                s"embedding dimension mismatch: ${x.u.length} vs $dim")
-              var matched = false
-              var r = 0
-              while (r < nReps) {
-                if (ids(r) != x.vec_id) {
-                  val c = cosine6Packed(us, r * dim, x.u)
-                  if (c >= minCos) {
-                    matched = true
-                    out += Candidate(math.min(ids(r), x.vec_id),
-                      math.max(ids(r), x.vec_id), key, c)
-                  }
-                }
-                r += 1
-              }
-              if ((addMatchedReps || !matched) && nReps < maxReps) {
-                if (dim < 0) {
-                  dim = x.u.length
-                  if (us.length < 4 * dim) us = new Array[Double](4 * dim)
-                }
-                if (nReps == ids.length) {
-                  ids = java.util.Arrays.copyOf(ids, ids.length * 2)
-                  us = java.util.Arrays.copyOf(us, us.length * 2)
-                }
-                ids(nReps) = x.vec_id
-                System.arraycopy(x.u, 0, us, nReps * dim, dim)
-                nReps += 1
-              }
-            }
-            state.update(BucketState(
-              java.util.Arrays.copyOf(ids, nReps),
-              java.util.Arrays.copyOf(us, nReps * math.max(dim, 0))))
-            if (isStreaming && maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(maxTs, delay)
-            out.result().iterator
-          }
+    new BucketReps[Long, BucketVec, Double, BucketState, Candidate](
+        "embedding", delay, maxReps, addMatchedReps) {
+      def id(x: BucketVec): Long = x.vec_id
+      def ts(x: BucketVec): Long = x.ts.getTime
+      def width(x: BucketVec): Int = x.u.length
+      def put(x: BucketVec, us: Array[Double], off: Int): Unit =
+        System.arraycopy(x.u, 0, us, off, x.u.length)
+      def pair(us: Array[Double], off: Int, x: BucketVec, key: Long,
+          lo: Long, hi: Long): Option[Candidate] = {
+        val c = cosine6Packed(us, off, x.u)
+        if (c >= minCos) Some(Candidate(lo, hi, key, c)) else None
       }
+      def unpack(s: BucketState): (Array[Long], Array[Double]) = (s.vec_ids, s.us)
+      def pack(ids: Array[Long], us: Array[Double]): BucketState = BucketState(ids, us)
+    }.candidates(banded, _.bucket)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact deduplication — the continuous counterpart of the
   * batch `text_exact_dedup` hash-groupBy. State is bounded by the
@@ -42,36 +41,43 @@ object StreamDedup {
     * the caller inside `sink`). */
   def incrementalDedup(stream: DataFrame, textCol: String, indexPath: String,
       checkpoint: String, idCol: Option[String] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer: DataStreamWriter[Row] = stream.writeStream
+      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch.withColumn("content_hash", md5(col(textCol).cast("string")))
-        val seen = readIndex(spark, indexPath)
-        val antiJoined = hashed.join(seen, Seq("content_hash"), "left_anti")
-        // in-batch survivor: dropDuplicates keeps an ARBITRARY row per
-        // hash (fine for pure dedup); with idCol the lowest id wins —
-        // the deterministic policy the batch dedup queries use, which
-        // is what lets a streaming run be graded against the batch
-        // oracle (same final state on the same data, any batch split)
-        val deduped = idCol match {
-          case Some(id) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("content_hash").orderBy(col(id).asc)
-            antiJoined.withColumn("_rn", row_number().over(w))
-              .filter(col("_rn") === 1).drop("_rn")
-          case None => antiJoined.dropDuplicates("content_hash")
-        }
-        val fresh = deduped
-          .localCheckpoint(true) // decouple sink + index writes from re-planning
-        sink(fresh.drop("content_hash"), batchId)
-        fresh.select("content_hash")
-          .write.mode("append").parquet(indexPath)
+      .foreachBatch(againstIndex(textCol, indexPath, idCol)(sink))
+      .start()
+
+  /** [[incrementalDedup]]'s micro-batch step, for a caller that runs
+    * its own `foreachBatch` drain: drop the batch's rows whose hash is
+    * in the index, hand the survivors to `sink`, then append their
+    * hashes to the index. */
+  private[graft] def againstIndex(textCol: String, indexPath: String,
+      idCol: Option[String])(sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    (batch, batchId) => {
+      val spark = batch.sparkSession
+      val hashed = batch.withColumn("content_hash", md5(col(textCol).cast("string")))
+      val seen = readIndex(spark, indexPath)
+      val antiJoined = hashed.join(seen, Seq("content_hash"), "left_anti")
+      // in-batch survivor: dropDuplicates keeps an ARBITRARY row per
+      // hash (fine for pure dedup); with idCol the lowest id wins —
+      // the deterministic policy the batch dedup queries use, which
+      // is what lets a streaming run be graded against the batch
+      // oracle (same final state on the same data, any batch split)
+      val deduped = idCol match {
+        case Some(id) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy("content_hash").orderBy(col(id).asc)
+          antiJoined.withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") === 1).drop("_rn")
+        case None => antiJoined.dropDuplicates("content_hash")
       }
-    writer.start()
-  }
+      val fresh = deduped
+        .localCheckpoint(true) // decouple sink + index writes from re-planning
+      sink(fresh.drop("content_hash"), batchId)
+      fresh.select("content_hash")
+        .write.mode("append").parquet(indexPath)
+    }
 
   /** The hash index, or an empty frame before the first append.
     * Existence is probed through the path's own Hadoop FileSystem —

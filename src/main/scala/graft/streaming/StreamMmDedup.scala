@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
 /** Streaming perceptual-hash NEAR-duplicate detection for images —
@@ -24,9 +23,9 @@ import java.sql.Timestamp
   * and batch agree bit-for-bit — no rounding contract needed (the
   * cosine paths' one subtlety doesn't exist in hamming space).
   *
-  * State layout: packed primitive arrays (the [[StreamNearDup]]
-  * lesson) — a bucket's reps are an id array plus a flat int array
-  * (rep r's four bands at [4r, 4r+4)).
+  * State layout: the packed primitive arrays of [[BucketReps]] — a
+  * bucket's reps are an id array plus a flat int array (rep r's four
+  * bands at [4r, 4r+4)).
   *
   * Scale/state design: state is per band bucket — a keyed aggregation
   * any cluster spreads like a shuffle; buckets cap at `maxReps` reps
@@ -60,7 +59,6 @@ object StreamMmDedup {
       implicit spark: SparkSession): Dataset[Candidate] = {
     import spark.implicits._
     require(bandCols.length == 4, s"need 4 band columns, got $bandCols")
-    val isStreaming = stream.isStreaming
 
     val banded = stream
       .select(col(idCol).cast("long").as("media_id"), col(tsCol).as("ts"),
@@ -75,58 +73,24 @@ object StreamMmDedup {
       .withWatermark("ts", delay)
       .as[BandHash]
 
-    banded.groupByKey(_.bkey)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, imgs: Iterator[BandHash], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(
-              BucketState(Array.emptyLongArray, Array.emptyIntArray))
-            var nReps = prior.ids.length
-            var ids = java.util.Arrays.copyOf(prior.ids, math.max(4, nReps))
-            var hs = java.util.Arrays.copyOf(prior.hs, math.max(16, nReps * 4))
-            val out = List.newBuilder[Candidate]
-            var maxTs = Long.MinValue
-            // deterministic in-batch order regardless of shuffle arrival
-            imgs.toSeq.sortBy(x => (x.ts.getTime, x.media_id)).foreach { x =>
-              maxTs = math.max(maxTs, x.ts.getTime)
-              var matched = false
-              var r = 0
-              while (r < nReps) {
-                if (ids(r) != x.media_id) {
-                  val o = r * 4
-                  val ham = Integer.bitCount(hs(o) ^ x.h0) +
-                    Integer.bitCount(hs(o + 1) ^ x.h1) +
-                    Integer.bitCount(hs(o + 2) ^ x.h2) +
-                    Integer.bitCount(hs(o + 3) ^ x.h3)
-                  if (ham <= maxHamming) {
-                    matched = true
-                    out += Candidate(math.min(ids(r), x.media_id),
-                      math.max(ids(r), x.media_id), key, ham)
-                  }
-                }
-                r += 1
-              }
-              if ((addMatchedReps || !matched) && nReps < maxReps) {
-                if (nReps == ids.length) {
-                  ids = java.util.Arrays.copyOf(ids, ids.length * 2)
-                  hs = java.util.Arrays.copyOf(hs, hs.length * 2)
-                }
-                ids(nReps) = x.media_id
-                hs(nReps * 4) = x.h0; hs(nReps * 4 + 1) = x.h1
-                hs(nReps * 4 + 2) = x.h2; hs(nReps * 4 + 3) = x.h3
-                nReps += 1
-              }
-            }
-            state.update(BucketState(
-              java.util.Arrays.copyOf(ids, nReps),
-              java.util.Arrays.copyOf(hs, nReps * 4)))
-            if (isStreaming && maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(maxTs, delay)
-            out.result().iterator
-          }
+    new BucketReps[Long, BandHash, Int, BucketState, Candidate](
+        "dHash", delay, maxReps, addMatchedReps) {
+      def id(x: BandHash): Long = x.media_id
+      def ts(x: BandHash): Long = x.ts.getTime
+      def width(x: BandHash): Int = 4
+      def put(x: BandHash, hs: Array[Int], o: Int): Unit = {
+        hs(o) = x.h0; hs(o + 1) = x.h1; hs(o + 2) = x.h2; hs(o + 3) = x.h3
       }
+      def pair(hs: Array[Int], o: Int, x: BandHash, key: Long,
+          lo: Long, hi: Long): Option[Candidate] = {
+        val ham = Integer.bitCount(hs(o) ^ x.h0) +
+          Integer.bitCount(hs(o + 1) ^ x.h1) +
+          Integer.bitCount(hs(o + 2) ^ x.h2) +
+          Integer.bitCount(hs(o + 3) ^ x.h3)
+        if (ham <= maxHamming) Some(Candidate(lo, hi, key, ham)) else None
+      }
+      def unpack(s: BucketState): (Array[Long], Array[Int]) = (s.ids, s.hs)
+      def pack(ids: Array[Long], hs: Array[Int]): BucketState = BucketState(ids, hs)
+    }.candidates(banded, _.bkey)
   }
 }

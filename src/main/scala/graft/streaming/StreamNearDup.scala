@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ext.TextOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
 /** Streaming MinHash-LSH NEAR-duplicate detection — the continuous
@@ -18,15 +17,11 @@ import java.sql.Timestamp
   * per representative whose signature-agreement fraction (the
   * standard unbiased Jaccard estimate) clears `minEst`.
   *
-  * State layout — PACKED PRIMITIVE ARRAYS, not an object graph: a
-  * bucket's representatives are stored as a doc-id array plus one
-  * flattened signature array (rep r's sigs at [r·numSigs,
-  * (r+1)·numSigs)). Keyed state pays an encoder round-trip on every
-  * read and write, and Catalyst's (de)serializer for nested
-  * collections of case classes walks the graph element by element —
-  * at corpus-sized state (audit mode retains every doc) that walk IS
-  * the bottleneck, while primitive `Array[Long]` columns copy as
-  * single memory blocks. Signatures travel as longs (the 8-hex sig →
+  * State layout: the packed primitive arrays of [[BucketReps]] — a
+  * doc-id array plus one flat signature array (rep r's sigs at
+  * [r·numSigs, (r+1)·numSigs)); at corpus-sized state (audit mode
+  * retains every doc) an object-graph layout's encoder walk IS the
+  * bottleneck. Signatures travel as longs (the 8-hex sig →
   * unsigned-32-bit parse is injective, so agreement counts and
   * therefore est_jaccard are bit-identical to the hex-string form).
   *
@@ -83,7 +78,6 @@ object StreamNearDup {
     require(numSigs % bands == 0, s"numSigs=$numSigs not divisible by bands=$bands")
     import spark.implicits._
     val rowsPerBand = numSigs / bands
-    val isStreaming = stream.isStreaming
 
     val base = stream
       .withColumn("_w", TextOps.words(col(textCol)))
@@ -106,69 +100,27 @@ object StreamNearDup {
       .withWatermark("ts", delay)
       .as[BandedDoc]
 
-    banded.groupByKey(_.band_key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, docs: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(
-              BucketState(Array.emptyLongArray, Array.emptyLongArray))
-            // grow-in-place scan buffers (capacity doubling): appends
-            // are amortized O(1) and the live prefix is scanned
-            // directly — no per-append copying in hot buckets
-            var nReps = prior.doc_ids.length
-            var ids = java.util.Arrays.copyOf(prior.doc_ids, math.max(4, nReps))
-            var sigsFlat = java.util.Arrays.copyOf(prior.sigs, math.max(4 * numSigs, nReps * numSigs))
-            val out = List.newBuilder[Candidate]
-            var maxTs = Long.MinValue
-            // deterministic in-batch order regardless of shuffle arrival
-            docs.toSeq.sortBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
-              maxTs = math.max(maxTs, d.ts.getTime)
-              var matched = false
-              var r = 0
-              while (r < nReps) {
-                if (ids(r) != d.doc_id) {
-                  var agree = 0
-                  var i = 0
-                  val off = r * numSigs
-                  while (i < numSigs) {
-                    if (sigsFlat(off + i) == d.sigs(i)) agree += 1
-                    i += 1
-                  }
-                  val est = agree.toDouble / numSigs
-                  if (est >= minEst) {
-                    matched = true
-                    out += Candidate(math.min(ids(r), d.doc_id),
-                      math.max(ids(r), d.doc_id), key,
-                      math.rint(est * 1e6) / 1e6)
-                  }
-                }
-                r += 1
-              }
-              // near-dups of an existing rep add no recall as reps
-              // themselves; distinct docs become reps up to the cap
-              // (audit mode admits matched docs too — see scaladoc)
-              if ((addMatchedReps || !matched) && nReps < maxReps) {
-                if (nReps == ids.length) {
-                  ids = java.util.Arrays.copyOf(ids, ids.length * 2)
-                  sigsFlat = java.util.Arrays.copyOf(sigsFlat, sigsFlat.length * 2)
-                }
-                ids(nReps) = d.doc_id
-                System.arraycopy(d.sigs, 0, sigsFlat, nReps * numSigs, numSigs)
-                nReps += 1
-              }
-            }
-            state.update(BucketState(
-              java.util.Arrays.copyOf(ids, nReps),
-              java.util.Arrays.copyOf(sigsFlat, nReps * numSigs)))
-            // batch runs (tests, backfills) have no watermark to time
-            // out against — timeouts are a streaming-only concern
-            if (isStreaming && maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(maxTs, delay)
-            out.result().iterator
-          }
+    new BucketReps[String, BandedDoc, Long, BucketState, Candidate](
+        "signature", delay, maxReps, addMatchedReps) {
+      def id(d: BandedDoc): Long = d.doc_id
+      def ts(d: BandedDoc): Long = d.ts.getTime
+      def width(d: BandedDoc): Int = d.sigs.length
+      def put(d: BandedDoc, sigs: Array[Long], off: Int): Unit =
+        System.arraycopy(d.sigs, 0, sigs, off, numSigs)
+      def pair(sigs: Array[Long], off: Int, d: BandedDoc, key: String,
+          lo: Long, hi: Long): Option[Candidate] = {
+        var agree = 0
+        var i = 0
+        while (i < numSigs) {
+          if (sigs(off + i) == d.sigs(i)) agree += 1
+          i += 1
+        }
+        val est = agree.toDouble / numSigs
+        if (est >= minEst) Some(Candidate(lo, hi, key, math.rint(est * 1e6) / 1e6))
+        else None
       }
+      def unpack(s: BucketState): (Array[Long], Array[Long]) = (s.doc_ids, s.sigs)
+      def pack(ids: Array[Long], sigs: Array[Long]): BucketState = BucketState(ids, sigs)
+    }.candidates(banded, _.band_key)
   }
 }

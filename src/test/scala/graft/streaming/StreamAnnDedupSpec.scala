@@ -104,4 +104,21 @@ class StreamAnnDedupSpec extends AnyFunSuite {
       .collect()
     assert(pairs.isEmpty, pairs.mkString("; "))
   }
+
+  test("a bucket whose vectors change dimension fails with a dimension mismatch") {
+    import spark.implicits._
+    implicit val s = spark
+    // the 4-dim prefix of `a` has the same plane dot products, so it
+    // lands in a's bucket and must fail against the 8-dim rep
+    val short = vec(1, 0.5, 0.25, 0)
+    val err = intercept[Exception] {
+      StreamAnnDedup.candidatePairs(
+        Seq((1L, at(0), a), (2L, at(1), short)).toDF("vec_id", "ts", "embedding"),
+        "vec_id", "embedding", planes, minCos = 0.1).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("embedding dimension mismatch: 4 vs 8")),
+      s"unexpected failure: $err")
+  }
 }
