@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,7 @@ object Verify {
     // optional: names beyond the first two args restrict the dump to
     // those queries (scale-test reruns of single queries)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.localSession()
     new java.io.File(outDir).mkdirs()
     // Same family grouping + Memo lifecycle as Bench: queries run in
     // deterministic family order and each family's shared indexes are
@@ -26,15 +17,10 @@ object Verify {
     // dump accumulates EVERY family's cached indexes in one JVM —
     // at sf1 that put the 32g heap within range of the OOM killer
     // (round 11), and at a bigger SF it would be the thing that dies.
-    val famAlias = Map("enrich" -> "dedup")
-    def familyOf(name: String): String = {
-      val f = name.takeWhile(_ != '_')
-      famAlias.getOrElse(f, f)
-    }
     SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .sortBy(_._1)
-      .groupBy { case (n, _) => familyOf(n) }.toSeq.sortBy(_._1)
+      .groupBy { case (n, _) => Mains.familyOf(n) }.toSeq.sortBy(_._1)
       .foreach { case (fam, qs) =>
         qs.foreach { case (name, fn) =>
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -45,20 +31,9 @@ object Verify {
         }
         graft.core.Memo.invalidate(spark, fam)
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Mains.jsonString(k)}: ${Mains.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // the DECLARED query surface, for the sweep's structural-
     // completeness stamp (VERDICT r13 item 3: the bench artifacts are
@@ -67,7 +42,7 @@ object Verify {
     // last-added query trails the sf1 sweep" recurred there; with
     // this dump tools/check.py enforces compared ∪ skipped == queries)
     val declared = SparkEntry.queries.keys.toSeq.sorted
-      .map(q).mkString("[", ",", "]")
+      .map(Mains.jsonString).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/queries.json"), declared)
     spark.stop()
   }

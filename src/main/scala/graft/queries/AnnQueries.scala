@@ -214,19 +214,15 @@ object AnnQueries {
     }
 
   /** Materialize the session-shared prepared-vector index (bench
-    * warm-up hook — see TextQueries.warmIndexes). */
-  def warmIndexes(s: SparkSession, dir: String): Unit = {
+    * warm-up hook — see TextQueries.warmIndexes). `timed` is the set of
+    * query names the bench will time. */
+  def warmIndexes(s: SparkSession, dir: String, timed: Set[String]): Unit = {
     prep(s, dir).count()
     // ground-truth tables build here so their one-time cost lands in
     // the artifact's index_build stamp (visible, counted in total)
     // rather than inside a recall query's untimed warm rep (invisible).
-    // Skip-aware (ADVICE r16): a SPARK_GRAFT_BENCH_SKIP run that
-    // excludes every consumer of a truth table must not pay (and
-    // stamp) its |probes|·n brute pass for nothing. Outside Bench the
-    // env var is unset and both tables always build.
-    val skipped = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    // A run that times no consumer of a truth table must not pay (and
+    // stamp) its |probes|·n brute pass for nothing.
     val cosConsumers = Set("ann_recall", "ann_recall_curve")
     val l2Consumers =
       Set("ann_pq_recall", "ann_ivf_pq_recall", "ann_ivf_pq_persist_recall")
@@ -240,10 +236,10 @@ object AnnQueries {
     val prepConsumers = Set("ann_ivf", "ann_recall", "ann_semdedup")
     val centConsumers = Set("ann_ivf", "ann_recall")
     graft.core.Par.run(Seq(
-      () => if (!cosConsumers.subsetOf(skipped)) cosTruth(s, dir).count(): Unit,
-      () => if (!l2Consumers.subsetOf(skipped)) l2Truth(s, dir).count(): Unit,
-      () => if (!prepConsumers.subsetOf(skipped)) labeledPrep(s, dir).count(): Unit,
-      () => if (!centConsumers.subsetOf(skipped)) ivfCent(s, dir).count(): Unit))
+      () => if (cosConsumers.exists(timed)) cosTruth(s, dir).count(): Unit,
+      () => if (l2Consumers.exists(timed)) l2Truth(s, dir).count(): Unit,
+      () => if (prepConsumers.exists(timed)) labeledPrep(s, dir).count(): Unit,
+      () => if (centConsumers.exists(timed)) ivfCent(s, dir).count(): Unit))
   }
 
   /** Scratch locations of persisted IVF-PQ artifacts, keyed by

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (VERDICT r13 item 6): measure BPE merge batching on a
@@ -111,14 +110,7 @@ object BpeZipf {
     val mode = args.lift(4).getOrElse("exact")
     require(mode == "exact" || mode == "relaxed" || mode == "parity",
       s"bad mode: $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.localSession()
     import spark.implicits._
 
     val word = udf(wordOf _)

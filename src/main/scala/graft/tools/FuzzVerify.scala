@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: the Spark half of the differential fuzzer
@@ -26,15 +25,7 @@ object FuzzVerify {
       else Seq.empty
     def selected(name: String): Boolean =
       prefixes.isEmpty || prefixes.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.localSession()
 
     val queries = graft.SparkEntry.queries
       .filter { case (name, _) => selected(name) }
@@ -60,18 +51,10 @@ object FuzzVerify {
       println(s"[fuzz] seed$i done (${queries.size} queries)")
     }
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = graft.SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${graft.Mains.jsonString(k)}: ${graft.Mains.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$root/oracle_sql.json"), json)
     spark.stop()
     if (failures > 0) sys.exit(1)
