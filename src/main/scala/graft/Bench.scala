@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.execution.SparkPlan
@@ -7,7 +8,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Benchmark entry point. Times every [[SparkEntry.queries]] entry over
   * `SPARK_GRAFT_SF_DIR`, writes the full artifact (every rep, median,
-  * spread, `n_exchanges`, `storage_mb`, CC stats, probe record) to
+  * spread, `n_exchanges`, `storage_mb`, `compiles` — the Janino classes
+  * compiled during the row's timed reps —, CC stats, probe record) to
   * `SPARK_GRAFT_BENCH_OUT` (default `bench_out.json`) and prints one
   * JSON line of at most 2,000 chars, because the driver parses only the
   * tail of stdout ([[stdoutLine]]).
@@ -84,8 +86,8 @@ object Bench {
     }
   }
 
-  /** A family's probe record: the bracketing probes and the last
-    * recovery attempt's probes. */
+  /** A family's probe record: the bracketing probes and the probes of
+    * the last recovery attempt that took fresh reps ([[recover]]). */
   private[graft] final case class Window(pre: Double, post: Double,
     recPre: Option[Double] = None, recPost: Option[Double] = None)
 
@@ -107,6 +109,40 @@ object Bench {
   private[graft] object Gate {
     def of(samples: Seq[Double]): Gate =
       Gate(derive(samples), samples.filter(valid).min)
+  }
+
+  /** A family's recovery pass: how it ended, how many attempts it took
+    * and the probe pair that bracketed the last fresh reps. */
+  private[graft] final case class Recovery(requeue: String, attempts: Int,
+    pre: Option[Double], post: Option[Double])
+
+  /** The recovery pass: while `pending`, after each back-off, a probe;
+    * if it is `healthy`, `remeasure` takes fresh reps and a second probe
+    * follows, and `recovered` runs when that one is healthy too. The
+    * kept (pre, post) pair comes from the last attempt that took fresh
+    * reps, so the two probes always bracket the same reps; an attempt
+    * whose first probe fails only sets `requeue`. */
+  private[graft] def recover(pending: () => Boolean, probe: () => Double,
+      healthy: Double => Boolean, remeasure: () => Unit, recovered: () => Unit,
+      sleep: Long => Unit = Thread.sleep): Recovery = {
+    val backoffsMs = Seq(2000L, 10000L, 30000L)
+    var rec = Recovery("none", 0, None, None)
+    while (pending() && rec.attempts < backoffsMs.size) {
+      sleep(backoffsMs(rec.attempts))
+      val attempt = rec.attempts + 1
+      val pre = probe()
+      rec =
+        if (!healthy(pre)) rec.copy(requeue = "still_degraded", attempts = attempt)
+        else {
+          remeasure()
+          val post = probe()
+          val ok = healthy(post)
+          // fresh medians are kept either way; the flags only clear here
+          if (ok) recovered()
+          Recovery(if (ok) "recovered" else "recovery_interrupted", attempt, Some(pre), Some(post))
+        }
+    }
+    rec
   }
 
   /** What the stdout line carries besides the median map. */
@@ -231,7 +267,7 @@ object Bench {
     // the median (and its spread) came from
     final class QRow(val name: String, val fn: Query, val times: IndexedSeq[Double],
       var median: Double, val nExchanges: Int, val storageHw: Long,
-      val ccStats: Option[graft.dedup.Cluster.CcStats],
+      val ccStats: Option[graft.dedup.Cluster.CcStats], val compiles: Long,
       var envDegraded: Boolean = false, var remeasured: Boolean = false,
       var freshTimes: IndexedSeq[Double] = IndexedSeq.empty,
       var allFresh: IndexedSeq[Double] = IndexedSeq.empty,
@@ -271,6 +307,7 @@ object Bench {
             s"bench query '$name' failed on $sfDir: ${e.getMessage}", e)
         }
         val ccStats = graft.dedup.Cluster.lastStats
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         var times = timeReps(fn)
         // a transient stall hits 1-2 reps of a random query: extra reps
         // while the spread is bad outvote it (every rep stays in the artifact)
@@ -279,41 +316,26 @@ object Bench {
           val m = medianOf(times)
           m > 0 && (times.last - times.head) / m > 0.5 && times.last - times.head > 0.25
         }) { times = (times :+ timeOne(fn)).sorted; extra += 1 }
-        new QRow(name, fn, times, medianOf(times), nExchanges, storageMb(), ccStats)
+        new QRow(name, fn, times, medianOf(times), nExchanges, storageMb(), ccStats,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
       }
       // the recovery pass runs before the family's indexes are released,
       // so a re-measure costs only timed reps
       val post = probe(3)
       val windowDegraded = loopGate.window(Window(pre, post))
       if (windowDegraded) rows.foreach(_.envDegraded = true)
-      var requeue = "none"
-      var recPre: Option[Double] = None
-      var recPost: Option[Double] = None
-      var attempts = 0
-      val backoffsMs = Seq(2000L, 10000L, 30000L)
-      while (rows.exists(_.envDegraded) && attempts < backoffsMs.size) {
-        Thread.sleep(backoffsMs(attempts))
-        attempts += 1
-        val rp = probe(3)
-        recPre = Some(rp)
-        if (!loopGate.degraded(rp, 1.3)) {
-          val affected = rows.filter(_.envDegraded)
-          affected.foreach { q =>
-            val fresh = timeReps(q.fn)
-            val m = medianOf(fresh)
-            if (m < q.median) { q.median = m; q.medianSource = "fresh"; q.freshTimes = fresh }
-            q.allFresh = q.allFresh ++ fresh
-            q.remeasured = true
-          }
-          val rpp = probe(3)
-          recPost = Some(rpp)
-          if (!loopGate.degraded(rpp, 1.3)) {
-            requeue = "recovered"
-            affected.foreach(_.envDegraded = false)
-          } else requeue = "recovery_interrupted" // fresh medians kept, flag kept
-        } else requeue = "still_degraded"
-      }
-      famRecs(fam) = FamRec(Window(pre, post, recPre, recPost), windowDegraded, requeue, attempts)
+      val rec = recover(() => rows.exists(_.envDegraded), () => probe(3),
+        p => !loopGate.degraded(p, 1.3),
+        remeasure = () => rows.filter(_.envDegraded).foreach { q =>
+          val fresh = timeReps(q.fn)
+          val m = medianOf(fresh)
+          if (m < q.median) { q.median = m; q.medianSource = "fresh"; q.freshTimes = fresh }
+          q.allFresh = q.allFresh ++ fresh
+          q.remeasured = true
+        },
+        recovered = () => rows.foreach(_.envDegraded = false))
+      famRecs(fam) = FamRec(Window(pre, post, rec.pre, rec.post), windowDegraded, rec.requeue,
+        rec.attempts)
       graft.core.Memo.invalidate(spark, fam)
       System.gc()
       rows
@@ -366,7 +388,8 @@ object Bench {
       s""""${q.name}":{"reps":[${q.times.map(fmt).mkString(",")}],"median":${fmt(q.median)},""" +
         s""""min":${fmt(sr.head)},"max":${fmt(sr.last)},"spread":${fmt(spreadOf(q))},""" +
         s""""iqr_spread":${fmt(iqrSpread(q))},""" +
-        s""""n_exchanges":${q.nExchanges},"storage_mb":${q.storageHw}$ccJson$flagJson}"""
+        s""""n_exchanges":${q.nExchanges},"storage_mb":${q.storageHw},""" +
+        s""""compiles":${q.compiles}$ccJson$flagJson}"""
     }.mkString("{", ",", "}")
     val warmJson = warmDetail.map { case (f, s) => s""""$f":${fmt(s)}""" }.mkString("{", ",", "}")
     val warmFailedJson = if (warmFailed.isEmpty) "" else

@@ -12,7 +12,7 @@ object Tables {
     spark.read.parquet(s"$sfDir/$table.parquet")
 
   /** Spread a small-split scan to one partition per core before
-    * CPU-heavy per-row work (regex normalize chains, image decode,
+    * CPU-heavy per-row work (the name normalize chain, image decode,
     * brute-force similarity scans). At test SF every table is a single
     * small parquet split, so narrow transforms inherit ONE partition —
     * fine for cheap projections, a serialization point for expensive

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.functions.functions.jaro_winkler
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** J1 + M1/M2 + C2 — the blocking self-join, similarity predicate and
@@ -17,13 +17,27 @@ import org.apache.spark.sql.functions._
   * name side is small. */
 object Matching {
 
-  /** The size of a name index, from one aggregate over it: distinct
-    * names, implied pairs Σ C(|block|, 2) and the largest block's
-    * name count. The name-level stage picks its regime from this row
-    * (driver fast path, dense guard, CC's edge bound). */
+  /** The size of a name index: distinct names, implied pairs
+    * Σ C(|block|, 2) and the largest block's name count. The name-level
+    * stage picks its regime from this row (driver fast path, dense
+    * guard, CC's edge bound). */
   final case class StageSizing(names: Long, impliedPairs: Long, maxBlockNames: Long)
 
-  /** [[StageSizing]] of a (materialized) name index — one tiny job. */
+  object StageSizing {
+    /** The sizing of a collected index from its rows' block keys — the
+      * driver fold that gives the same row as [[stageSizing]]. */
+    def ofBlocks(blockKeys: Iterable[String]): StageSizing = {
+      val sizes = blockKeys.groupMapReduce(identity)(_ => 1L)(_ + _).values
+      if (sizes.isEmpty) StageSizing(0L, 0L, 0L)
+      else StageSizing(sizes.sum, sizes.map(b => b * (b - 1) / 2).sum, sizes.max)
+    }
+  }
+
+  /** [[StageSizing]] of a (materialized) name index as one aggregate
+    * job (two shuffles). `Pipeline.runDerived` runs it only above the
+    * driver gate, for an index it does not collect; below the gate it
+    * folds the same row from the collected rows
+    * ([[StageSizing.ofBlocks]]). */
   def stageSizing(stats: DataFrame): StageSizing = {
     // SQL `/` is double division — n·(n-1) is always even, so the
     // long cast after the halving is exact
@@ -33,6 +47,12 @@ object Matching {
     if (r.isNullAt(0)) StageSizing(0L, 0L, 0L)
     else StageSizing(r.getLong(0), r.getLong(1), r.getLong(2))
   }
+
+  /** The name index on the driver, in the column order
+    * [[driverNameTable]] reads: block_key, base_name, n_rows, min_row,
+    * max_row, token_key. */
+  private[dedup] def collectIndex(stats: DataFrame): Array[Row] =
+    stats.select("block_key", "base_name", "n_rows", "min_row", "max_row", "token_key").collect()
 
   /** Which execution regime the name-level stage (pairs → components
     * + candidates) last ran on the calling thread, how many JW passes
@@ -168,32 +188,29 @@ object Matching {
   /** The name table, built on the driver for name indexes under the
     * gate: the pair join, connected components, the cluster sizes, the
     * canonical election and the confidence thresholds of every distinct
-    * name in one driver pass over the collected index, replacing the
-    * salted pair join and its checkpoint, CC's collect, the rejoin joins
-    * and the name-level aggregates of [[nameTable]] (timings on
-    * [[DedupSettings.driverFastPathNames]]). Semantics are bit-identical
-    * to [[nameTable]] over the distributed regimes: the SAME
-    * [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the same
-    * predicate and confidence ladder, min-label components, and the
-    * same election order (code-point length, UTF-8 byte order).
+    * name in one driver pass over the collected index ([[collectIndex]]),
+    * replacing the salted pair join and its checkpoint, CC's collect,
+    * the rejoin joins and the name-level aggregates of [[nameTable]]
+    * (timings on [[DedupSettings.driverFastPathNames]]). Semantics are
+    * bit-identical to [[nameTable]] over the distributed regimes: the
+    * SAME [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the
+    * same predicate and confidence ladder, min-label components, and
+    * the same election order (code-point length, UTF-8 byte order).
     *
-    * Returns None — caller must use the distributed path — without
-    * touching the index when `sizing` shows more names than
-    * `settings.driverFastPathNames`, a block over the governor cap (the
-    * hot-block policy is a distributed concern), or more implied pairs
-    * than `maxPairEstimate` (driver pairing is single-threaded; 2M
-    * pairs ≈ 1–2 s of JW bounds it). */
-  private[dedup] def driverNameTable(stats: DataFrame, sizing: StageSizing,
-      settings: DedupSettings = DedupSettings(), maxPairEstimate: Long = 2000000L)
-      : Option[DataFrame] = {
+    * Returns None — caller must use the distributed path — when `sizing`
+    * shows more names than `settings.driverFastPathNames`, a block over
+    * the governor cap (the hot-block policy is a distributed concern),
+    * or more implied pairs than `maxPairEstimate` (driver pairing is
+    * single-threaded; 2M pairs ≈ 1–2 s of JW bounds it). */
+  private[dedup] def driverNameTable(spark: SparkSession, rows: Array[Row],
+      sizing: StageSizing, settings: DedupSettings = DedupSettings(),
+      maxPairEstimate: Long = 2000000L): Option[DataFrame] = {
     import org.apache.spark.unsafe.types.UTF8String
     val fits = settings.driverFastPathNames > 0 &&
       sizing.names <= settings.driverFastPathNames &&
       sizing.impliedPairs <= maxPairEstimate &&
       settings.maxBlockNames.forall(sizing.maxBlockNames <= _)
     if (!fits) return None
-    val rows = stats
-      .select("block_key", "base_name", "n_rows", "min_row", "max_row", "token_key").collect()
     val n = rows.length
     val name = rows.map(r => UTF8String.fromString(r.getString(1)))
     val nRows = rows.map(_.getLong(2))
@@ -256,7 +273,6 @@ object Matching {
       if (elected(r) < 0 || beats(i, elected(r))) elected(r) = i
     }
     def opt(t: Long) = if (t == Long.MinValue) None else Some(t)
-    val spark = stats.sparkSession
     import spark.implicits._
     Some((0 until n).map { i =>
       val r = find(i)

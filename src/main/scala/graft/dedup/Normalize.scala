@@ -1,12 +1,17 @@
 package graft.dedup
 
+import graft.functions.functions.{normalize_name, strip_tokens}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Name cleaning + blocking-key column functions (F1-F5, K1 in
-  * SURVEY.md §2.1). All pure `org.apache.spark.sql.functions`
-  * compositions — whole-stage-codegen friendly, no UDFs — so Catalyst
-  * can push/prune/fold around them.
+  * SURVEY.md §2.1). The punctuation pass and the suffix/country strips
+  * are one codegen'd kernel each ([[graft.functions.NameKernel]],
+  * exact with respect to the `(?U)` regex chain they replace); the
+  * rest (`upper`, the null/cast guard, the acronym map, the block key)
+  * are built-in `functions` compositions. No UDFs: everything stays
+  * inside whole-stage codegen and Catalyst can push/prune/fold around
+  * it.
   *
   * Semantics match /root/reference/engine.py:43-70,185-200 with the
   * deliberate re-specifications of SURVEY.md Appendix A.
@@ -15,54 +20,41 @@ object Normalize {
 
   /** F1 — normalize (engine.py:43-51): null→""; upper-case; replace
     * every char outside `[\w\s&/-]` with a space; collapse runs of
-    * whitespace; trim. `(?U)` makes Java's `\w` Unicode-aware like
-    * Python's `re`. */
-  def normalizeName(c: Column): Column = {
-    val s = coalesce(c.cast("string"), lit(""))
-    val depunct = regexp_replace(upper(s), "(?U)[^\\w\\s&/-]", " ")
-    trim(regexp_replace(depunct, "(?U)\\s+", " "))
-  }
-
-  /** One end-anchored strip of the longest matching alternative.
-    * Longest-first ordering in the alternation + leftmost regex
-    * matching reproduce the reference's longest-first fixpoint loop
-    * (engine.py:53-60). */
-  private def stripOnce(c: Column, tokens: Seq[String]): Column = {
-    val alt = tokens.mkString("|")
-    trim(regexp_replace(c, s"(?U)\\b(?:$alt)$$", ""))
-  }
-
-  /** Bounded fixpoint of [[stripOnce]]. Each application removes at
-    * most one trailing token, so `k` bounds the strippable stack depth
-    * ("X CO PVT LTD PRIVATE LIMITED" needs 3). */
-  private def stripFix(c: Column, tokens: Seq[String], k: Int): Column =
-    (1 to k).foldLeft(c)((acc, _) => stripOnce(acc, tokens))
+    * whitespace; trim. `\w` and `\s` are Java's `(?U)` classes, which
+    * are Unicode-aware like Python's `re`. */
+  def normalizeName(c: Column): Column =
+    normalize_name(upper(coalesce(c.cast("string"), lit(""))))
 
   /** F2 — strip_suffixes (engine.py:53-60): repeatedly strip trailing
     * legal suffixes until fixpoint (bound shared with the oracle via
-    * Rules.SuffixFixpointBound; see its worst-case note). */
+    * Rules.SuffixFixpointBound; see its worst-case note). Each pass is
+    * one end-anchored strip of the leftmost, so longest, matching token
+    * (`(?U)\b(?:t1|t2|…)$`, then trim), which reproduces the
+    * reference's longest-first fixpoint loop; it removes at most one
+    * trailing token, so the bound is the strippable stack depth ("X CO
+    * PVT LTD PRIVATE LIMITED" needs 3). */
   def stripSuffixes(c: Column): Column =
-    stripFix(c, Rules.Suffixes, Rules.SuffixFixpointBound)
+    strip_tokens(c, Rules.Suffixes, Rules.SuffixFixpointBound)
 
   /** F3 — fold_subsidiaries (engine.py:62-70): repeatedly strip
     * trailing country tokens until fixpoint; identity when disabled. */
   def foldSubsidiaries(c: Column, settings: DedupSettings = DedupSettings()): Column =
     if (settings.noSubsidiaryFold) c
-    else stripFix(c, Rules.Countries, Rules.CountryFixpointBound)
+    else strip_tokens(c, Rules.Countries, Rules.CountryFixpointBound)
 
   /** Residual check for the bounded fixpoints: true when a base name
     * STILL ends in a strippable suffix/country token after the bounded
     * passes — i.e. the bound was too shallow for this row and the
-    * result diverges from the reference's true fixpoint. Count this
-    * over a corpus (expect 0) to make the bound data-visibly
-    * sufficient rather than assumed. */
+    * result diverges from the reference's true fixpoint. One pass of
+    * the same strip kernel over every token. Count this over a corpus
+    * (expect 0) to make the bound data-visibly sufficient rather than
+    * assumed. */
   def residualStrippable(base: Column,
       settings: DedupSettings = DedupSettings()): Column = {
     val tokens =
       if (settings.noSubsidiaryFold) Rules.Suffixes
       else Rules.Suffixes ++ Rules.Countries
-    val alt = tokens.mkString("|")
-    base =!= stripOnce(base, Seq(alt))
+    base =!= strip_tokens(base, tokens, 1)
   }
 
   /** F4 — acronym-map rewrite (engine.py:34-41,190-191): exact-match

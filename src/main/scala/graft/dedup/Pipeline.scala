@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** E3 — the full dedup "query" (engine.py:210-369) as one lazy
@@ -67,7 +67,7 @@ object Pipeline {
   def run(df: DataFrame, nameCol: String, rowOrderCol: String,
       settings: DedupSettings = DedupSettings()): DataFrame =
     // spread the source before the normalize chain: a single-split
-    // scan would run the 14-regex base-name derivation serially on
+    // scan would run the per-row base-name derivation serially on
     // one core, twice (the stats build and the row join both read
     // `derived`). Gated no-op at production split
     // counts; row_order is an explicit source key, so partitioning
@@ -75,6 +75,14 @@ object Pipeline {
     runDerived(Normalize.withDerived(
       graft.core.Tables.spread(df, rowOrderCol), nameCol, rowOrderCol, settings),
       settings)
+
+  /** The `names` count an [[Observation]] on the name index collected,
+    * or None if it has not arrived. It is delivered through the
+    * session's query-execution listener bus right after the eager
+    * materialization; the wait bounds an event the bus dropped. */
+  private def observedCount(o: Observation): Option[Long] =
+    scala.util.Try(scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(10, "s")).getAs[Long]("names")).toOption
 
   /** [[run]] over an ALREADY-derived frame (any frame carrying the
     * five normalize output columns, e.g. a session-Memo'd
@@ -84,7 +92,7 @@ object Pipeline {
     * holding a default-settings derived table may only pass
     * default settings here. Exists so a host that has already
     * materialized the derived table (the "normalize once, query the
-    * derived table" pattern) does not re-pay the 14-regex chain
+    * derived table" pattern) does not re-pay the normalize chain
     * inside the pipeline — results are bit-identical because the
     * derivation is deterministic. */
   def runDerived(derivedFull: DataFrame,
@@ -101,11 +109,21 @@ object Pipeline {
     val reliable = settings.reliableCheckpoints
     // Name index materialized ONCE; every branch below (regime
     // sizing, pair join sides, name-table aggregates) reads the blocks.
-    val stats = graft.core.Frames.materialize(Matching.nameStats(derived), reliable)
-    // ONE sizing aggregate picks the regime: the driver fast-path
-    // gate, the dense guard and CC's edge bound all read this row, and
+    // The materialization also counts the names (an Observation), so an
+    // index under the driver gate is collected once and sized from its
+    // rows, with no separate sizing query; above the gate ONE sizing
+    // aggregate runs instead. Either way the driver fast-path gate, the
+    // dense guard and CC's edge bound all read the same sizing row, and
     // it is recorded with the regime (StageStats).
-    val sizing = Matching.stageSizing(stats)
+    val counted = Observation()
+    val stats = graft.core.Frames.materialize(
+      Matching.nameStats(derived).observe(counted, count(lit(1)).as("names")), reliable)
+    val gate = settings.driverFastPathNames
+    val index =
+      if (gate > 0 && observedCount(counted).exists(_ <= gate)) Some(Matching.collectIndex(stats))
+      else None
+    val sizing = index.fold(Matching.stageSizing(stats))(rows =>
+      Matching.StageSizing.ofBlocks(rows.map(_.getString(0))))
 
     // --- the name table: one row per distinct base name with its
     // cluster id, cluster size, elected canonical name and A.1
@@ -129,7 +147,7 @@ object Pipeline {
     // name-level fields by joining back to `stats` on min_row, which
     // uniquely identifies a distinct name (each row belongs to exactly
     // one (block_key, base_name) group, so group minima never collide).
-    val names = Matching.driverNameTable(stats, sizing, settings) match {
+    val names = index.flatMap(Matching.driverNameTable(spark, _, sizing, settings)) match {
       case Some(table) =>
         Matching.recordStage("driver-fast-path", 1, sizing)
         table

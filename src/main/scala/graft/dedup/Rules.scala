@@ -150,8 +150,9 @@ object DedupSettings {
 
 object Rules {
   /** Bounded-fixpoint depths for suffix stripping / country folding,
-    * shared by the Spark expressions (Normalize.stripFix) and the
-    * DuckDB oracle (Sql.stripFix) so the two can never drift.
+    * shared by the Spark kernel (Normalize.stripSuffixes and
+    * foldSubsidiaries) and the DuckDB oracle (Sql.stripFix) so the two
+    * can never drift.
     * Worst-case argument: each pass removes at least one whole
     * trailing token, so the bound equals the deepest strippable stack
     * handled exactly; real names stack 2-3 ("X CO PVT LTD PRIVATE
@@ -162,8 +163,8 @@ object Rules {
   val CountryFixpointBound = 6
 
   /** Legal suffixes that can match a normalized (dot-free) name,
-    * longest-first so the regex alternation prefers the longest strip
-    * (engine.py:19-24). */
+    * longest-first like the reference's loop (engine.py:19-24); a strip
+    * takes the leftmost, so longest, match whatever the order. */
   val Suffixes: Seq[String] = Seq(
     "PRIVATE LIMITED", "GMBH & CO KG", "INCORPORATED", "SP Z O O",
     "SA DE CV", "PTE LTD", "PVT LTD", "LIMITED", "COMPANY", "SP ZOO",

@@ -59,7 +59,7 @@ object OfflineVerifier extends Verifier {
       var changed = true
       while (i < bound && changed) {
         changed = false
-        // longest-first, like the regex alternation in Normalize
+        // longest-first, in Rules' order
         tokens.find(t => cur == t || cur.endsWith(" " + t)).foreach { t =>
           cur = cur.stripSuffix(t).trim
           changed = true

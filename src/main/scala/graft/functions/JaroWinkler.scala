@@ -163,6 +163,16 @@ object functions {
     GraftBridge.column(JaroWinklerSimilarity(
       GraftBridge.expression(l), GraftBridge.expression(r)))
 
+  /** F1's punctuation and white-space pass as one codegen'd kernel
+    * ([[NameKernel.normalize]]). */
+  def normalize_name(c: Column): Column =
+    GraftBridge.column(NormalizeNameKernel(GraftBridge.expression(c)))
+
+  /** Up to `bound` passes of the end-anchored strip of `tokens`
+    * ([[TokenStripper]]). */
+  def strip_tokens(c: Column, tokens: Seq[String], bound: Int): Column =
+    GraftBridge.column(StripTokens(GraftBridge.expression(c), tokens, bound))
+
   /** M2 — token-sorted exact match (engine.py:205-208): equality of
     * sorted-token concatenations; pure built-ins. */
   def token_sorted_match(l: Column, r: Column): Column = {

@@ -17,7 +17,7 @@ object DedupQueries {
     * pair join.
     *
     * The derived tables are Memo'd (like the pipeline table): the
-    * base_name derivation is a 14-regex fixpoint chain, and any filter
+    * base_name derivation is a bounded fixpoint chain, and any filter
     * or re-reference Catalyst pushes through the derivation re-inlines
     * the whole chain into the pushed predicate — filter predicates get
     * no subexpression elimination, so `filter(base_name <> '')` alone
@@ -29,7 +29,7 @@ object DedupQueries {
     * recompute. */
   private def derivedPart(s: SparkSession, dir: String): DataFrame =
     graft.core.Memo.cached(s, s"dedup_derived:part:$dir", truncate = true) {
-      // Tables.spread: a single-split scan runs the 14-regex chain
+      // Tables.spread: a single-split scan runs the normalize chain
       // serially on one core otherwise (guide §2.4; gated no-op at
       // production split counts) — same for the two tables below
       Normalize.withDerived(
@@ -54,7 +54,7 @@ object DedupQueries {
     graft.core.Memo.cached(s, s"dedup_full:$dir", truncate = true) {
       // consume the Memo'd derived table (same default settings)
       // instead of re-deriving inside the pipeline: the warm's four
-      // parallel builds then share ONE 14-regex normalize pass over
+      // parallel builds then share ONE normalize pass over
       // part — the fullPart thread blocks on derivedPart's future and
       // proceeds, rather than racing a duplicate derivation
       Pipeline.runDerived(derivedPart(s, dir))
@@ -85,7 +85,7 @@ object DedupQueries {
     // Run them in parallel: the pipeline build has driver-side phases
     // (union-find over the collected min edges, name-table assembly)
     // during which executors idle — the three derived-table
-    // regex scans fill those gaps instead of queueing behind them.
+    // normalize scans fill those gaps instead of queueing behind them.
     graft.core.Par.run(Seq(
       () => fullPart(s, dir).count(): Unit,
       () => derivedPart(s, dir).count(): Unit,
@@ -276,7 +276,7 @@ object DedupQueries {
       // consume the Memo'd derived table (same default settings) —
       // the Pipeline.runDerived treatment fullPart gets: the timed
       // path keeps the dense JW join + closure + election, and stops
-      // re-paying the per-row regex derivation every repetition
+      // re-paying the per-row derivation every repetition
       Pipeline.runDerived(derivedSupplier(s, dir))
         .select("row_order", "cluster_id", "cluster_size", "confidence")
         .orderBy("row_order")),

@@ -104,6 +104,34 @@ class BenchSpec extends AnyFunSuite {
     assert(gate.flags(Window(0.5, 0.5, Some(0.64), Some(0.66)), remeasured = true))
   }
 
+  test("the recovery pass keeps the probe pair of the attempt that took fresh reps") {
+    // attempt 1: pre-probe passes, fresh reps, post-probe fails; attempts
+    // 2 and 3: the pre-probe fails, so no fresh reps
+    val probes = Iterator(0.60, 0.95, 0.97, 0.99)
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val rec = Bench.recover(
+      pending = () => true,
+      probe = () => { val p = probes.next(); events += s"probe $p"; p },
+      healthy = _ < 0.8,
+      remeasure = () => events += "fresh",
+      recovered = () => events += "recovered",
+      sleep = ms => events += s"sleep $ms")
+    assert(events.toSeq === Seq("sleep 2000", "probe 0.6", "fresh", "probe 0.95",
+      "sleep 10000", "probe 0.97", "sleep 30000", "probe 0.99"))
+    assert(rec === Bench.Recovery("still_degraded", 3, Some(0.60), Some(0.95)))
+    // the kept pair is attempt 1's, and its failed post-probe flags the row
+    val gate = Gate.of(healthyRun)
+    assert(gate.flags(Window(0.62, 1.5, rec.pre, rec.post), remeasured = true))
+
+    // a recovery that succeeds stops there, with its own pair
+    val ok = Iterator(0.95, 0.61, 0.62)
+    var pending = true
+    val rec2 = Bench.recover(() => pending, () => ok.next(), _ < 0.8, () => (),
+      () => pending = false, _ => ())
+    assert(rec2 === Bench.Recovery("recovered", 2, Some(0.61), Some(0.62)))
+    assert(!gate.flags(Window(0.62, 1.5, rec2.pre, rec2.post), remeasured = true))
+  }
+
   private val mapper = new ObjectMapper()
   private def headline(skipped: Seq[String], missing: Seq[String]) = Headline(
     total = 66.831, totalCertified = 60.2, totalExAudits = 50.1, totalFloor = 55.5,

@@ -2,6 +2,10 @@ package graft.dedup
 
 import graft.functions.JaroWinklerAlgo
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,22 +82,79 @@ class PipelineSpec extends AnyFunSuite {
     assert(review == Seq(0L, 2L))
   }
 
-  test("driver fast path and distributed path agree bit-for-bit") {
+  /** 60 rows engineered for near-dup structure: shared stems with
+    * typos (soft/hard matches), duplicated rows, empty names, and
+    * multi-block spread. */
+  private lazy val nearDupRows = {
     import spark.implicits._
-    // 60 names engineered for near-dup structure: shared stems with
-    // typos (soft/hard matches), duplicated rows, empty names, and
-    // multi-block spread
     val stems = Seq("GLOBEX CORP", "GLOBEX CORPS", "INITECH LTD", "INITECH INC",
       "ACME WIDGETS", "ACME WIDGET", "UMBRELLA PHARMA", "UMBRELA PHARMA",
       "STARK INDUSTRIES", "STARK INDUSTRIE", "WAYNE ENTERPRISES", "")
-    val rows = (0 until 60).map { i =>
+    (0 until 60).map { i =>
       (i.toLong, stems(i % stems.length) + (if (i % 5 == 0) "" else s" ${i % 3}"))
-    }
-    val df = rows.toDF("id", "nm")
+    }.toDF("id", "nm")
+  }
+
+  test("driver fast path and distributed path agree bit-for-bit") {
+    val df = nearDupRows
     val fast = Pipeline.run(df, "nm", "id").orderBy("row_order").collect()
     val dist = Pipeline.run(df, "nm", "id",
       DedupSettings(driverFastPathNames = 0L)).orderBy("row_order").collect()
     assert(fast.length == 60 && fast.toSeq == dist.toSeq)
+  }
+
+  /** `body`'s result and whether any query it ran planned an aggregate
+    * grouped by `block_key` alone — the shape of the stage-sizing and
+    * governor aggregates over a name index. Query-execution listeners
+    * are called asynchronously, so this waits (up to 30 s) for a marker
+    * query's callback, which comes after every earlier query's. */
+  private def withBlockKeyAggregates[T](body: => T): (T, Boolean) = {
+    val seen = new java.util.concurrent.atomic.AtomicBoolean
+    val done = new java.util.concurrent.atomic.AtomicLong
+    def blockKeyOnly(qe: QueryExecution): Boolean = qe.optimizedPlan.exists {
+      case a: Aggregate => a.groupingExpressions.map {
+        case r: AttributeReference => r.name
+        case other => other.sql
+      } == Seq("block_key")
+      case _ => false
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (blockKeyOnly(qe)) seen.set(true)
+        done.incrementAndGet()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        done.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      val before = done.get
+      spark.range(1).collect()
+      val deadline = System.nanoTime + 30000000000L
+      while (done.get <= before && System.nanoTime < deadline) Thread.sleep(20)
+      (result, seen.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("at the driver gate's boundary: same rows and sizing, and no sizing query below it") {
+    val df = nearDupRows
+    val n = Matching.nameStats(Normalize.withDerived(df, "nm", "id")).count()
+    def run(gate: Long) = withBlockKeyAggregates {
+      val rows = Pipeline.run(df, "nm", "id", DedupSettings(driverFastPathNames = gate))
+        .orderBy("row_order").collect().toSeq
+      (rows, Matching.lastStageStats.get)
+    }
+    val ((atGate, atStage), atGateAggregates) = run(n)
+    val ((below, belowStage), belowAggregates) = run(n - 1)
+    assert(atGate.length == 60 && atGate == below)
+    assert(atStage.regime == "driver-fast-path" && belowStage.regime == "materialize")
+    // the driver fold over the collected index and the aggregate agree
+    assert(atStage.sizing == belowStage.sizing && atStage.sizing.names == n, atStage)
+    // the fast path sized the index from its rows; above the gate the
+    // sizing aggregate ran (which also shows the listener sees it)
+    assert(!atGateAggregates)
+    assert(belowAggregates)
   }
 
   /** The Appendix A row rules computed directly on rows, independently
