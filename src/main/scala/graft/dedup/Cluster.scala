@@ -189,7 +189,7 @@ object Cluster {
         // is captured by the closure
         val uf = new MinUnionFind
         it.foreach { case (a, b) => uf.union(a, b) }
-        uf.components.collect { case (k, r) if r != k => (r, k) }
+        uf.starEdges
       }.toDF("src", "dst")
   }
 
@@ -337,4 +337,10 @@ private[dedup] final class MinUnionFind {
     * of the keys: `find` path-compresses values mid-iteration. */
   def components: Iterator[(Long, Long)] =
     parent.keys.toArray.iterator.map(k => (k, find(k)))
+
+  /** The spanning stars of the components seen so far: one (root,
+    * member) edge per non-root node, which keeps every component and
+    * every node of a component of two or more. */
+  def starEdges: Iterator[(Long, Long)] =
+    components.collect { case (k, r) if r != k => (r, k) }
 }

@@ -19,8 +19,8 @@ object Matching {
 
   /** The size of a name index: distinct names, implied pairs
     * Σ C(|block|, 2) and the largest block's name count. The name-level
-    * stage picks its regime from this row (driver fast path, dense
-    * guard, CC's edge bound). */
+    * stage picks its regime from this row (the driver fast path gate and
+    * CC's edge bound). */
   final case class StageSizing(names: Long, impliedPairs: Long, maxBlockNames: Long)
 
   object StageSizing {
@@ -189,26 +189,24 @@ object Matching {
     * gate: the pair join, connected components, the cluster sizes, the
     * canonical election and the confidence thresholds of every distinct
     * name in one driver pass over the collected index ([[collectIndex]]),
-    * replacing the salted pair join and its checkpoint, CC's collect,
-    * the rejoin joins and the name-level aggregates of [[nameTable]]
+    * replacing [[distributedNameTable]]'s salted pair join, its fold
+    * checkpoint, CC and the name-level aggregates of [[nameTable]]
     * (timings on [[DedupSettings.driverFastPathNames]]). Semantics are
-    * bit-identical to [[nameTable]] over the distributed regimes: the
-    * SAME [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the
-    * same predicate and confidence ladder, min-label components, and
-    * the same election order (code-point length, UTF-8 byte order).
+    * bit-identical to [[distributedNameTable]]: the SAME
+    * [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the same
+    * predicate and confidence ladder, min-label components, and the
+    * same election order (code-point length, UTF-8 byte order).
     *
-    * Returns None — caller must use the distributed path — when `sizing`
-    * shows more names than `settings.driverFastPathNames`, a block over
-    * the governor cap (the hot-block policy is a distributed concern),
-    * or more implied pairs than `maxPairEstimate` (driver pairing is
-    * single-threaded; 2M pairs ≈ 1–2 s of JW bounds it). */
+    * Returns None — caller must use [[distributedNameTable]] — when
+    * `sizing` shows more names than `settings.driverFastPathNames`, a
+    * block over the governor cap (the hot-block policy is a distributed
+    * concern), or more than [[DriverImpliedPairs]] implied pairs. */
   private[dedup] def driverNameTable(spark: SparkSession, rows: Array[Row],
-      sizing: StageSizing, settings: DedupSettings = DedupSettings(),
-      maxPairEstimate: Long = 2000000L): Option[DataFrame] = {
+      sizing: StageSizing, settings: DedupSettings = DedupSettings()): Option[DataFrame] = {
     import org.apache.spark.unsafe.types.UTF8String
     val fits = settings.driverFastPathNames > 0 &&
       sizing.names <= settings.driverFastPathNames &&
-      sizing.impliedPairs <= maxPairEstimate &&
+      sizing.impliedPairs <= DriverImpliedPairs &&
       settings.maxBlockNames.forall(sizing.maxBlockNames <= _)
     if (!fits) return None
     val n = rows.length
@@ -274,6 +272,7 @@ object Matching {
     }
     def opt(t: Long) = if (t == Long.MinValue) None else Some(t)
     import spark.implicits._
+    recordStage("driver-fast-path", 1, sizing)
     Some((0 until n).map { i =>
       val r = find(i)
       (rows(i).getString(1), clusterId(r), size(r), rows(elected(r)).getString(1),
@@ -281,7 +280,7 @@ object Matching {
     }.toDF("base_name", "cluster_id", "cluster_size", "elected_name", "t98", "t95", "t88"))
   }
 
-  /** The name table from a distributed regime's name-level results —
+  /** The name table from [[distributedNameTable]]'s name-level results —
     * `comps` (id = a name's min_row, component) and `crossCand`
     * (cand_name, cand_conf, partner_max_row), any number of candidate
     * rows per (name, conf) — as name-level aggregates over `stats`. One
@@ -323,99 +322,68 @@ object Matching {
         col("t95"), col("t88"))
   }
 
-  /** Dense-block name-level stage WITHOUT pair materialization: the
-    * (components, candidates) pair for name indexes whose implied
-    * pair count is too big to checkpoint but whose similarity join is
-    * cheap to RECOMPUTE (the codegen'd Jaro-Winkler join streams 50M
-    * pairs in ~2 s on 32 cores, while materializing those pairs costs
-    * gigabytes of storage, a multi-second write, GC pressure that
-    * destabilizes every later phase, and multi-pass re-reads — the
-    * sf1 supplier regression, VERDICT r10 item 1).
+  /** The name table above the driver gate, from ONE Jaro-Winkler pass:
+    * [[qualifyingPairsPrepared]]'s rows already carry both names, their
+    * min/max rows and pair_conf, so a single per-partition fold feeds
+    * both consumers and no pair row is ever materialized or rejoined.
+    * Each partition emits
     *
-    * One shared JW pass feeds BOTH consumers through a single
-    * aggregate: pairs are exploded to both orientations map-side and
-    * grouped by (node, name, pair_conf) — name ↔ node is bijective
-    * (node = the name's min_row) so the grouping is ≤ |confs| rows
-    * per name — keeping `max(partner_max_row)` (the A.1 candidate
-    * reduction that [[nameTable]] finishes per name) and
-    * `min(peer)` (each name's min qualifying neighbor per conf).
-    * Connected components then run Borůvka-style on the driver:
-    * round 1 unions each node with its min neighbor (derived from the
-    * aggregate — no extra pass); each further round recomputes the
-    * join ONCE, relabels through a broadcast root map, and aggregates
-    * the min cross-root edge per root (map-side partial agg → ≤
-    * |roots| rows). A near-clique converges in one round + one empty
-    * verification pass, so the whole stage is two JW passes and a few
-    * thousand driver rows. Bit-identical to the materialized path:
-    * same join, same thresholds, same reduction — pinned by
-    * DensePathSpec. */
-  private[dedup] def denseAggregatedStage(stats: DataFrame, sizing: StageSizing,
-      settings: DedupSettings, maxIter: Int = 50): (DataFrame, DataFrame) = {
+    *  - the spanning-star edges of a [[MinUnionFind]] over every
+    *    qualifying pair (0.70 pairs included: they only merge clusters),
+    *    as [[Cluster.preContract]] does, so components are invariant;
+    *  - the largest partner max_row per (name, conf) for 0.98/0.95/0.88,
+    *    in both orientations.
+    *
+    * The fold's output is bounded by the distinct names each partition
+    * sees, not by its pairs (the sf1 supplier clique has 41M qualifying
+    * pairs over 10k names); one aggregate then merges what partitions
+    * repeat (a shared star edge, the partial maxima of one (name,
+    * conf)), and the result is materialized once. The edges go to
+    * [[Cluster.connectedComponents]], bounded by the sizing row (star
+    * edges ≤ qualifying pairs ≤ implied pairs); the candidates go to
+    * [[nameTable]]. Bit-identical to [[driverNameTable]]
+    * (DistributedRegimeSpec). */
+  private[dedup] def distributedNameTable(stats: DataFrame, sizing: StageSizing,
+      settings: DedupSettings): DataFrame = {
     val spark = stats.sparkSession
     import spark.implicits._
-    // Each pairs() pass may pin a fresh blockRanked checkpoint
-    // (distributed ranking for over-cap blocks); release them the
-    // moment the pass's consumer has run — the minEdgeContractionCC
-    // discipline — instead of accreting one O(names) checkpoint per
-    // CC round for the session lifetime (ADVICE r11).
+    val reliable = settings.reliableCheckpoints
+    // a governed hot block's distributed ranking pins a checkpoint whose
+    // last reader is the fold below (ADVICE r11)
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def drainPins(): Unit = {
-      pins.foreach(graft.core.Frames.release)
-      pins.clear()
-    }
-    def pairs(): DataFrame =
+    val confs = Array(Rules.ConfTokenAndRatio, Rules.ConfHardRatio, Rules.ConfSoftRatio)
+    val folded = graft.core.Frames.materialize(
       qualifyingPairsPrepared(stats, settings, pinSink = pins += _)
-    val oriented = pairs().select(explode(array(
-      struct(col("a_min_row").as("node"), col("b_min_row").as("peer"),
-        col("a_name").as("name"), col("b_max_row").as("partner_max_row"),
-        col("pair_conf")),
-      struct(col("b_min_row").as("node"), col("a_min_row").as("peer"),
-        col("b_name").as("name"), col("a_max_row").as("partner_max_row"),
-        col("pair_conf")))).as("o"))
-      .select(col("o.node"), col("o.peer"), col("o.name"),
-        col("o.partner_max_row"), col("o.pair_conf"))
-    // ≤ |confs| rows per name — tiny; checkpoint so the two readers
-    // below don't re-run the JW join
-    val base = graft.core.Frames.materialize(
-      oriented
-        .groupBy(col("node"), col("name"), col("pair_conf"))
-        .agg(max(col("partner_max_row")).as("partner_max_row"),
-          min(col("peer")).as("min_peer")),
-      settings.reliableCheckpoints)
-    drainPins() // pass 1 fully consumed into the base checkpoint
-
-    val crossCand = base.select(col("name").as("cand_name"),
-      col("pair_conf").as("cand_conf"), col("partner_max_row"))
-
-    // driver union-find; round 1 comes free from the shared aggregate
-    val uf = new MinUnionFind
-    base.groupBy(col("node")).agg(min(col("min_peer")).as("peer")).collect()
-      .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
-    var iter = 1
-    var done = false
-    while (!done && iter < maxIter) {
-      val mapDf = broadcast(uf.components.toSeq.toDF("_n", "_r"))
-      // one fresh JW pass: surviving cross-root edges, reduced
-      // map-side to the min peer root per root
-      val rem = pairs().select(col("a_min_row").as("src"), col("b_min_row").as("dst"))
-        .join(mapDf, col("src") === col("_n"), "left")
-        .select(coalesce(col("_r"), col("src")).as("src"), col("dst"))
-        .join(mapDf, col("dst") === col("_n"), "left")
-        .select(col("src"), coalesce(col("_r"), col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src")).agg(min(col("dst")).as("dst"))
-        .collect()
-      drainPins() // this pass's collect consumed its ranking checkpoint
-      if (rem.isEmpty) done = true
-      else { rem.foreach(r => uf.union(r.getLong(0), r.getLong(1))); iter += 1 }
-    }
-    if (!done) log.warn(
-      s"denseAggregatedStage exhausted maxIter=$maxIter before convergence — " +
-        "returned components may be under-merged")
-    log.info(s"denseAggregatedStage: converged after $iter JW pass(es) + 1 shared")
-    recordStage("dense-recompute", iter + 1, sizing)
-    val comps = uf.components.toSeq.toDF("id", "component")
-    (comps, crossCand)
+        .select("a_min_row", "b_min_row", "a_name", "b_name", "a_max_row", "b_max_row", "pair_conf")
+        .as[(Long, Long, String, String, Long, Long, Double)]
+        .mapPartitions { it =>
+          // built per partition, inside the task
+          val uf = new MinUnionFind
+          val top = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+          def offer(name: String, level: Int, partnerMax: Long): Unit = {
+            val t = top.getOrElseUpdate(name, Array.fill(confs.length)(Long.MinValue))
+            if (t(level) < partnerMax) t(level) = partnerMax
+          }
+          it.foreach { case (a, b, aName, bName, aMax, bMax, conf) =>
+            uf.union(a, b)
+            val level = confs.indexOf(conf)
+            if (level >= 0) { offer(aName, level, bMax); offer(bName, level, aMax) }
+          }
+          uf.starEdges.map { case (r, k) => (r, k, null: String, 0.0, 0L) } ++
+            top.iterator.flatMap { case (name, t) =>
+              t.indices.filter(t(_) != Long.MinValue).map(l => (0L, 0L, name, confs(l), t(l)))
+            }
+        }.toDF("src", "dst", "cand_name", "cand_conf", "partner_max_row")
+        .groupBy("src", "dst", "cand_name", "cand_conf")
+        .agg(max(col("partner_max_row")).as("partner_max_row")),
+      reliable)
+    pins.foreach(graft.core.Frames.release)
+    val comps = Cluster.connectedComponents(
+      folded.filter(col("cand_name").isNull).select("src", "dst"),
+      edgeCountHint = sizing.impliedPairs, reliable = reliable)
+    recordStage("distributed", 1, sizing)
+    nameTable(stats, comps, folded.filter(col("cand_name").isNotNull)
+      .select("cand_name", "cand_conf", "partner_max_row"))
   }
 
   /** Aggregate profile of the qualifying pairs (the dedup_pairs_stats
@@ -553,6 +521,11 @@ object Matching {
     * and the two produce identical ranks (RankingSpec). */
   private[dedup] val DistributedRankThreshold = 262144L
 
+  /** Implied pairs above which [[driverNameTable]] declines an index:
+    * driver pairing is single-threaded, and 2M pairs is about 1–2 s of
+    * JW. */
+  private[dedup] val DriverImpliedPairs = 2000000L
+
   /** Distributed per-block ranking: the same values as
     * `row_number().over(partitionBy(block_key).orderBy(base_name))`
     * (base_name is unique within a block, so ranks are deterministic)
@@ -569,8 +542,8 @@ object Matching {
     * `pinSink` receives the eagerly-checkpointed range frame so the
     * CALLER can `Frames.release` it once the returned frame's last
     * reader has finished — without it, every invocation pins an
-    * O(names) checkpoint for the session lifetime (ADVICE r11: the
-    * dense regime re-ranks per CC round, accreting one per pass). */
+    * O(names) checkpoint for the session lifetime (ADVICE r11;
+    * [[distributedNameTable]] releases it once its fold is written). */
   private[dedup] def blockRanked(stats: DataFrame, parts: Int,
       pinSink: DataFrame => Unit = _ => (),
       reliable: Boolean = false): DataFrame = {

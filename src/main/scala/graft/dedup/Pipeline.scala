@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
   * AQE-broadcastable) and a projection: no row-level aggregate and no
   * window, so every input row comes out once, repeated keys included.
   *
-  * Execution semantics: [[run]] is NOT fully lazy — the compact pair
-  * projection and the CC edge set are eagerly materialized via
-  * `localCheckpoint(true)` (the Jaro-Winkler pair join runs inside
-  * this call, once, before the caller acts on the result). Local
+  * Execution semantics: [[run]] is NOT fully lazy — the name index is
+  * eagerly materialized via `localCheckpoint(true)`, and above the
+  * driver gate so is the per-partition fold of the pair join into CC
+  * edges and candidate maxima (the Jaro-Winkler pair join runs inside
+  * this call, once, before the caller acts on the result; no pair row
+  * is ever stored). Local
   * checkpoints trade fault tolerance for lineage truncation: the
   * blocks live on executors with no recompute path, so an executor
   * loss between materialization and consumption fails the job instead
@@ -106,18 +108,18 @@ object Pipeline {
     // Matching/Cluster) from executor-local blocks to durable
     // checkpoint files — the multi-executor deployment path.
     settings.engageCheckpoints(spark)
-    val reliable = settings.reliableCheckpoints
     // Name index materialized ONCE; every branch below (regime
     // sizing, pair join sides, name-table aggregates) reads the blocks.
     // The materialization also counts the names (an Observation), so an
     // index under the driver gate is collected once and sized from its
     // rows, with no separate sizing query; above the gate ONE sizing
-    // aggregate runs instead. Either way the driver fast-path gate, the
-    // dense guard and CC's edge bound all read the same sizing row, and
-    // it is recorded with the regime (StageStats).
+    // aggregate runs instead. Either way the driver fast-path gate and
+    // CC's edge bound read the same sizing row, and it is recorded with
+    // the regime (StageStats).
     val counted = Observation()
     val stats = graft.core.Frames.materialize(
-      Matching.nameStats(derived).observe(counted, count(lit(1)).as("names")), reliable)
+      Matching.nameStats(derived).observe(counted, count(lit(1)).as("names")),
+      settings.reliableCheckpoints)
     val gate = settings.driverFastPathNames
     val index =
       if (gate > 0 && observedCount(counted).exists(_ <= gate)) Some(Matching.collectIndex(stats))
@@ -128,79 +130,13 @@ object Pipeline {
     // --- the name table: one row per distinct base name with its
     // cluster id, cluster size, elected canonical name and A.1
     // confidence thresholds (Matching.nameTable). Everything the row
-    // stage needs except one comparison is a property of a NAME, so
-    // the regimes below differ only in how they build this table.
-    //
-    // Up to DedupSettings.driverFastPathNames names (and 2M implied
-    // pairs), Matching.driverNameTable builds it in one driver pass over
-    // the collected index — bit-identical results, none of the
-    // distributed jobs below (the Cluster.localEdgeCC philosophy applied
-    // to the whole name-level stage). Above it the pair join (the
-    // Jaro-Winkler work) has two consumers — the CC edge set and the
-    // confidence candidates. Materializing the full pair rows is off
-    // the table (a dense block makes them tens of millions of WIDE rows
-    // — 6 GB at the 10×-scale stress test), but the similarity compute
-    // itself must not run twice either (round 2 paid a double JW pass
-    // here: once for the eager CC build, once in the final DAG).
-    // Resolution: checkpoint ONLY the compact (a_min_row, b_min_row,
-    // pair_conf) projection — 24 bytes/pair — and recover the
-    // name-level fields by joining back to `stats` on min_row, which
-    // uniquely identifies a distinct name (each row belongs to exactly
-    // one (block_key, base_name) group, so group minima never collide).
-    val names = index.flatMap(Matching.driverNameTable(spark, _, sizing, settings)) match {
-      case Some(table) =>
-        Matching.recordStage("driver-fast-path", 1, sizing)
-        table
-      case None =>
-        val (comps, crossCand) =
-          if (sizing.impliedPairs > settings.densePairEstimate)
-            // DENSE regime (sf1+ supplier: a 10k-name near-clique is
-            // 50M implied pairs): checkpointing the pair rows costs
-            // gigabytes of storage + GC churn while the codegen'd JW
-            // join recomputes in ~2 s — so never materialize pairs;
-            // push both consumers down to aggregates over the streamed
-            // join (one shared pass + one verification pass per CC
-            // round). See Matching.denseAggregatedStage.
-            Matching.denseAggregatedStage(stats, sizing, settings)
-          else {
-            Matching.recordStage("materialize", 1, sizing)
-            val pairsCompact = graft.core.Frames.materialize(
-              Matching.qualifyingPairsPrepared(stats, settings)
-                .select(col("a_min_row"), col("b_min_row"), col("pair_conf")),
-              reliable)
-            // --- C1 (distributed): node id = the name's min_row, so a
-            // component id IS min(row_order) in-cluster. The edge set is
-            // a projection of the compact checkpoint, which CC reads in
-            // one map-only pass and never copies (on the sf1 supplier
-            // clique a copy was ~2 GB of storage and seconds of wall
-            // per run).
-            val edges = pairsCompact
-              .select(col("a_min_row").as("src"), col("b_min_row").as("dst"))
-            // edgeCountHint: qualifying pairs ⊆ implied pairs, so the
-            // Σ C(block,2) estimate is a valid upper bound — when it
-            // already fits the driver, CC skips the pre-contraction
-            // constant outright (VERDICT r15 item 1)
-            val compsDist = Cluster.connectedComponents(edges,
-              edgeCountHint = sizing.impliedPairs, reliable = reliable)
-            // name fields recovered from the compact checkpoint: AQE
-            // turns both min_row joins into broadcasts (the name index
-            // is tiny relative to pairs), so this costs two map-side
-            // probes of already-computed conf rows, not a second
-            // similarity join. Both orientations become candidates;
-            // Matching.nameTable reduces them to O(names) rows.
-            val nameByMin = stats.select(col("min_row"), col("base_name"), col("max_row"))
-            val rejoined = pairsCompact
-              .join(nameByMin.select(col("min_row").as("a_min_row"),
-                col("base_name").as("a_name"), col("max_row").as("a_max_row")), Seq("a_min_row"))
-              .join(nameByMin.select(col("min_row").as("b_min_row"),
-                col("base_name").as("b_name"), col("max_row").as("b_max_row")), Seq("b_min_row"))
-            val crossDist = rejoined.select(col("a_name").as("cand_name"),
-                col("pair_conf").as("cand_conf"), col("b_max_row").as("partner_max_row"))
-              .union(rejoined.select(col("b_name"), col("pair_conf"), col("a_max_row")))
-            (compsDist, crossDist)
-          }
-        Matching.nameTable(stats, comps, crossCand)
-    }
+    // stage needs except one comparison is a property of a NAME; an
+    // index under the driver gate builds the table in one driver pass
+    // (Matching.driverNameTable), any other in one distributed JW pass
+    // folded into CC edges and candidate maxima
+    // (Matching.distributedNameTable). Same table either way.
+    val names = index.flatMap(Matching.driverNameTable(spark, _, sizing, settings))
+      .getOrElse(Matching.distributedNameTable(stats, sizing, settings))
 
     // --- the row stage: ONE left join of the rows onto the name table
     // and a projection. Empty-base rows are absent from the table

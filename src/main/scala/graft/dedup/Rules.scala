@@ -30,13 +30,15 @@ final case class DedupSettings(
     hotBlockWindow: Int = 10,
     /** Driver fast path gate (execution knob, not semantics): a name
       * index of at most this many distinct names — with at most 2M
-      * implied pairs and no block over [[maxBlockNames]] — runs
-      * pairing, components and the whole name table in one driver pass
-      * (Matching.driverNameTable) instead of the distributed pair
-      * checkpoint, CC collect, rejoin joins and name aggregates; results are
-      * bit-identical. The pair bound caps the driver's single-threaded
-      * JW work; this gate caps the index the driver collects. 0 forces
-      * the distributed path.
+      * implied pairs (Matching.DriverImpliedPairs) and no block over
+      * [[maxBlockNames]] — runs pairing, components and the whole name
+      * table in one driver pass (Matching.driverNameTable). Any other
+      * index takes the distributed path (Matching.distributedNameTable):
+      * one JW pass over the salted pair join, folded per partition into
+      * CC edges and candidate maxima, then CC and the name aggregates;
+      * results are bit-identical. The pair bound caps the driver's
+      * single-threaded JW work; this gate caps the index the driver
+      * collects. 0 forces the distributed path.
       *
       * Measured: `Sources.runFile` job seconds on perfbench's seeded
       * company file scaled to 1, 10, 30, 60 and 120× its entities
@@ -59,22 +61,10 @@ final case class DedupSettings(
       * 528k row, 0.8% above it, and the driver heap the collected index
       * needs was not measured). */
     driverFastPathNames: Long = 262144L,
-    /** Dense regime gate (execution knob, not semantics): above this
-      * implied pair count the name-level stage never materializes
-      * pair rows — it recomputes the codegen'd JW join per consumer
-      * pass and pushes both consumers down to aggregates
-      * (Matching.denseAggregatedStage; results are bit-identical —
-      * DensePathSpec). Below it, one compact checkpoint + re-reads
-      * is cheaper than a second JW pass. ~4M pairs ≈ 100 MB
-      * checkpointed, ~0.3 s recomputed: the crossover is flat around
-      * here, the constant just separates "fits comfortably" from
-      * "gigabytes" (sf1 supplier: 50M pairs ≈ 3 GB resident and the
-      * GC pressure tripled every later phase — VERDICT r10 item 1). */
-    densePairEstimate: Long = 4000000L,
     /** Durable checkpoint directory for multi-executor deployments
       * (execution knob, not semantics): when set, every eager
-      * materialization in the pipeline (name index, compact pairs,
-      * CC rounds, distributed ranking) uses reliable `checkpoint()`
+      * materialization in the pipeline (name index, the name-table
+      * fold, CC rounds, distributed ranking) uses reliable `checkpoint()`
       * against this directory instead of executor-local checkpoint
       * blocks, so a mid-query executor loss is survivable. None
       * (default) = `localCheckpoint`, the single-JVM trade-off

@@ -47,11 +47,6 @@ object TextOps {
   def shingles(wordsCol: Column, k: Int): Column =
     array_distinct(ngrams(wordsCol, k))
 
-  /** One MinHash signature: min over shingles of md5(seed|shingle).
-    * Hex-string min ≡ unsigned-hash min. */
-  def minhashSig(shinglesCol: Column, seed: Int): Column =
-    array_min(transform(shinglesCol, s => md5(concat(lit(s"$seed|"), s))))
-
   /** Batched MinHash: each md5 digest is 128 bits = four independent
     * 32-bit components (8 hex chars each), so n signatures need only
     * ceil(n/4) md5 evaluations per shingle — and the md5 count

@@ -172,12 +172,4 @@ object functions {
     * ([[TokenStripper]]). */
   def strip_tokens(c: Column, tokens: Seq[String], bound: Int): Column =
     GraftBridge.column(StripTokens(GraftBridge.expression(c), tokens, bound))
-
-  /** M2 — token-sorted exact match (engine.py:205-208): equality of
-    * sorted-token concatenations; pure built-ins. */
-  def token_sorted_match(l: Column, r: Column): Column = {
-    import org.apache.spark.sql.functions._
-    def key(c: Column) = concat_ws("", array_sort(split(c, " ")))
-    key(l) === key(r)
-  }
 }

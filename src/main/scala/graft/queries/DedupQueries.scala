@@ -281,7 +281,7 @@ object DedupQueries {
         .select("row_order", "cluster_id", "cluster_size", "confidence")
         .orderBy("row_order")),
 
-    // the dense-regime pipeline over a deterministic md5 name sample
+    // the supplier pipeline over a deterministic md5 name sample
     // (VERDICT r18 item 3 — the last sf1 oracle skip): the full
     // supplier twin's recursive closure over a ~10k-name near-clique
     // (40M+ SQL JW pairs) is oracle-infeasible at sf1, so this runs

@@ -148,7 +148,7 @@ class PipelineSpec extends AnyFunSuite {
     val ((atGate, atStage), atGateAggregates) = run(n)
     val ((below, belowStage), belowAggregates) = run(n - 1)
     assert(atGate.length == 60 && atGate == below)
-    assert(atStage.regime == "driver-fast-path" && belowStage.regime == "materialize")
+    assert(atStage.regime == "driver-fast-path" && belowStage.regime == "distributed")
     // the driver fold over the collected index and the aggregate agree
     assert(atStage.sizing == belowStage.sizing && atStage.sizing.names == n, atStage)
     // the fast path sized the index from its rows; above the gate the
@@ -245,9 +245,7 @@ class PipelineSpec extends AnyFunSuite {
       val expected = modelRows(derived, thresholds)
       for ((regime, settings) <- Seq(
           "driver fast path" -> thresholds,
-          "materialize" -> thresholds.copy(driverFastPathNames = 0L,
-            densePairEstimate = Long.MaxValue),
-          "dense" -> thresholds.copy(driverFastPathNames = 0L, densePairEstimate = 0L))) {
+          "distributed" -> thresholds.copy(driverFastPathNames = 0L))) {
         val got = Pipeline.run(df, "name", "id", settings).orderBy("row_order").collect().toSeq
         assert(got == expected, s"$regime at ${thresholds.hardThreshold}/${thresholds.softThreshold}")
       }

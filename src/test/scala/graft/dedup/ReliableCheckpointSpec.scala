@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `DedupSettings.checkpointDir` switches every pipeline
   * materialization from `localCheckpoint` blocks to durable
   * `checkpoint()` files. Results must be bit-identical — the toggle
-  * changes fault tolerance, never semantics — across all three
-  * name-level regimes (driver fast path, materialize, dense) and the
-  * sorted-neighborhood ranking. */
+  * changes fault tolerance, never semantics — across both name-level
+  * regimes (driver fast path, distributed) and the sorted-neighborhood
+  * ranking. */
 class ReliableCheckpointSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   private val dir = "/root/testdata/sf0.001"
@@ -36,17 +36,10 @@ class ReliableCheckpointSpec extends AnyFunSuite {
     runBoth(DedupSettings())
   }
 
-  test("materialize regime: identical output with reliable checkpoints") {
-    // driverFastPathNames=0 forces the distributed path; the default
-    // densePairEstimate keeps it in the materialize (compact pair
-    // checkpoint + distributed CC) regime at sf0.001
+  test("distributed regime: identical output with reliable checkpoints") {
+    // driverFastPathNames=0 forces the distributed name table, whose
+    // pair-join fold is the checkpointed frame
     runBoth(DedupSettings(driverFastPathNames = 0L))
-  }
-
-  test("dense regime: identical output with reliable checkpoints") {
-    // densePairEstimate=0 forces the recompute-per-consumer dense
-    // stage, whose base aggregate is the checkpointed frame
-    runBoth(DedupSettings(driverFastPathNames = 0L, densePairEstimate = 0L))
   }
 
   test("sorted-neighborhood governed path honors the toggle") {

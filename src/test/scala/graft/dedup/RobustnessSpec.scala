@@ -123,9 +123,9 @@ class RobustnessSpec extends AnyFunSuite {
     }
     val (fast, fastStage) = run(DedupSettings())
     val (dist, distStage) = run(DedupSettings(driverFastPathNames = 0L))
-    assert(fast == dist, "driver fast path diverges from the materialize regime")
+    assert(fast == dist, "driver fast path diverges from the distributed regime")
     assert(fastStage.regime == "driver-fast-path")
-    assert(distStage.regime == "materialize")
+    assert(distStage.regime == "distributed")
 
     // the recorded sizing is the index's own: names, Σ C(b,2), max block
     val blocks = Matching.nameStats(Normalize.withDerived(df, "name", "id"))
@@ -136,7 +136,7 @@ class RobustnessSpec extends AnyFunSuite {
 
     // a block over the governor cap keeps the index off the driver
     val (_, cappedStage) = run(DedupSettings(maxBlockNames = Some(10L)))
-    assert(cappedStage.regime == "materialize", cappedStage)
+    assert(cappedStage.regime == "distributed", cappedStage)
     assert(cappedStage.sizing == expected)
   }
 }

@@ -178,8 +178,8 @@ class SourcesSpec extends AnyFunSuite {
     val csv = companiesCsv(160, withId = true)
     val regimes = Seq(
       "driver fast path" -> DedupSettings(),
-      "materialize" -> DedupSettings(driverFastPathNames = 0L),
-      "materialize, reliable checkpoints" -> DedupSettings(driverFastPathNames = 0L,
+      "distributed" -> DedupSettings(driverFastPathNames = 0L),
+      "distributed, reliable checkpoints" -> DedupSettings(driverFastPathNames = 0L,
         checkpointDir = Some(Files.createTempDirectory("graft_runfile_ck").toString)))
     for ((regime, settings) <- regimes) {
       val expected = Pipeline.run(Sources.readCsv(spark, csv), "Company Name", "id", settings)
