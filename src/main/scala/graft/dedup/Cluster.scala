@@ -170,6 +170,32 @@ object Cluster {
     result
   }
 
+  /** The near-dup cluster table (id, cluster_id, cluster_size,
+    * is_canonical) of the ANN, text and image dedup paths, ordered by
+    * id: verified `pairs` (a_id, b_id) become [[connectedComponents]]
+    * edges (with the caller's `edgeCountHint`), transitive near-dups
+    * merge, the component's min id is the cluster id and the canonical
+    * member, and members without an edge stay singletons. `members`
+    * holds the `id` column, and with `rep` also a representative column
+    * the pairs are over (text's exact-dedup pre-pass: doc → the min
+    * doc_id of its content); every member takes its representative's
+    * cluster. */
+  def clusterTable(members: DataFrame, id: String, pairs: DataFrame,
+      edgeCountHint: Long = -1L, rep: Option[String] = None): DataFrame = {
+    val r = rep.getOrElse(id)
+    val comps = connectedComponents(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst")),
+      edgeCountHint = edgeCountHint)
+      .withColumnRenamed("id", r)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
+    members.select((id +: rep.toSeq).map(col): _*)
+      .join(comps, Seq(r), "left")
+      .select(col(id), coalesce(col("component"), col(r)).as("cluster_id"))
+      .withColumn("cluster_size", count(lit(1)).over(w))
+      .withColumn("is_canonical", col(id) === col("cluster_id"))
+      .orderBy(id)
+  }
+
   /** The per-partition spanning-star pass: local union-find over each
     * partition's edges, one (root, member) edge per non-root member.
     * Nodes keep appearing in the output (every input node's local

@@ -1,7 +1,8 @@
 package graft.dedup
 
 import graft.functions.functions.jaro_winkler
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** J1 + M1/M2 + C2 — the blocking self-join, similarity predicate and
@@ -33,19 +34,48 @@ object Matching {
     }
   }
 
-  /** [[StageSizing]] of a (materialized) name index as one aggregate
-    * job (two shuffles). `Pipeline.runDerived` runs it only above the
-    * driver gate, for an index it does not collect; below the gate it
-    * folds the same row from the collected rows
+  /** [[StageSizing]] of a (materialized) name index: the
+    * [[bucketHistogram]] of its blocks. `Pipeline.runDerived` runs it
+    * only above the driver gate, for an index it does not collect;
+    * below the gate it folds the same row from the collected rows
     * ([[StageSizing.ofBlocks]]). */
   def stageSizing(stats: DataFrame): StageSizing = {
-    // SQL `/` is double division — n·(n-1) is always even, so the
-    // long cast after the halving is exact
-    val r = stats.groupBy("block_key").agg(count(lit(1)).as("_n"))
-      .agg(sum(col("_n")), sum((col("_n") * (col("_n") - 1) / 2).cast("long")),
-        max(col("_n"))).head()
-    if (r.isNullAt(0)) StageSizing(0L, 0L, 0L)
-    else StageSizing(r.getLong(0), r.getLong(1), r.getLong(2))
+    val h = BucketHistogram.of(bucketHistogram(stats, Seq("block_key")).head())
+    StageSizing(h.members, h.pairs, h.maxBucket)
+  }
+
+  /** One row of [[bucketHistogram]]: members, the largest bucket,
+    * Σ C(n, 2) over all buckets, the pair bound under the cap, and the
+    * members of over-cap buckets. */
+  final case class BucketHistogram(members: Long, maxBucket: Long, pairs: Long,
+      cappedPairs: Long, hotMembers: Long)
+
+  object BucketHistogram {
+    def of(r: Row): BucketHistogram =
+      BucketHistogram(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+  }
+
+  /** The bucket histogram of `rows` grouped by `keys` as one 1-row
+    * aggregate (two shuffles): members, max_bucket, pairs = Σ C(n, 2),
+    * capped_pairs = the candidate bound when buckets over `cap` each
+    * member pair `hotPairs` times (`window − 1` under a
+    * sorted-neighborhood policy, 0 when they are dropped) and the rest
+    * pair fully, and hot_members = the members of over-cap buckets.
+    * Read it with [[BucketHistogram.of]]. The name stage sizes its
+    * index with it, and the ANN, text and image governors memoize it
+    * under their own keys. Zeros on empty input. */
+  def bucketHistogram(rows: DataFrame, keys: Seq[String], cap: Long = Long.MaxValue,
+      hotPairs: Long = 0L): DataFrame = {
+    // n·(n-1) is always even, so the long cast after the halving is exact
+    val tri = (col("_n") * (col("_n") - 1) / 2).cast("long")
+    val hot = col("_n") > cap
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+      .agg(total(col("_n")).as("members"),
+        coalesce(max(col("_n")), lit(0L)).as("max_bucket"),
+        total(tri).as("pairs"),
+        total(when(hot, col("_n") * hotPairs).otherwise(tri)).as("capped_pairs"),
+        total(when(hot, col("_n")).otherwise(0L)).as("hot_members"))
   }
 
   /** The name index on the driver, in the column order
@@ -83,7 +113,7 @@ object Matching {
   /** Pair confidence ladder (engine.py:371-375). The 0.90/0.85 cut
     * points are fixed in the reference, independent of the settings
     * thresholds. */
-  def pairConfidence(ratio: org.apache.spark.sql.Column, token: org.apache.spark.sql.Column) =
+  def pairConfidence(ratio: Column, token: Column) =
     when(token && ratio >= 0.90, lit(Rules.ConfTokenAndRatio))
       .when(ratio >= 0.90, lit(Rules.ConfHardRatio))
       .when(ratio >= 0.85, lit(Rules.ConfSoftRatio))
@@ -129,9 +159,9 @@ object Matching {
       settings: DedupSettings = DedupSettings(), salt: Int = 0,
       pinSink: DataFrame => Unit = _ => ()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    governedPairs(stats, settings)(
+    governedPairs(stats, settings, pinSink)(
       allPairs(_, settings, salt, _),
-      sortedNeighborhoodPairs(_, settings.hotBlockWindow, settings, pinSink))
+      rankedNeighborhoodPairs(_, settings.hotBlockWindow, settings))
   }
 
   /** The cost governor's split of a name index (default ON): blocks over
@@ -140,19 +170,22 @@ object Matching {
     * hotBlockWindow <= 1), bounding the quadratic worst case. One
     * single-row aggregate sizes the whole plan: the over-cap key list
     * is bounded (each hot block holds > cap names, so ≤ |names|/cap
-    * keys) and the small-side name count picks the salt without
-    * another job. `full(names, knownNames)` pairs the under-cap blocks
-    * (knownNames < 0 = not sized), `hot(names)` the over-cap ones; the
-    * row-returning pairs and [[pairProfile]]'s slim feed pass their
-    * own builders. */
-  private def governedPairs(stats: DataFrame, settings: DedupSettings)(
+    * keys), the small-side name count picks the salt and the hot-side
+    * name count picks the rank path ([[ranked]]) without another job.
+    * `full(names, knownNames)` pairs the under-cap blocks (knownNames
+    * < 0 = not sized), `hot(ranked)` the over-cap ones, ranked within
+    * their blocks by name; the row-returning pairs and
+    * [[pairProfile]]'s slim feed pass their own builders. */
+  private def governedPairs(stats: DataFrame, settings: DedupSettings,
+      pinSink: DataFrame => Unit = _ => ())(
       full: (DataFrame, Long) => DataFrame, hot: DataFrame => DataFrame): DataFrame =
     settings.maxBlockNames match {
       case Some(cap) =>
         val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
           .agg(
             collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
-            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"))
+            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"),
+            sum(when(col("_bn") > cap, col("_bn"))).as("_hotNames"))
           .head()
         val hotKeys = sized.getSeq[String](0)
         val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
@@ -169,7 +202,8 @@ object Matching {
           val hotDf = broadcast(hotKeys.toDF("block_key"))
           val base = full(stats.join(hotDf, Seq("block_key"), "left_anti"), smallNames)
           if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(hot(stats.join(hotDf, Seq("block_key"), "left_semi")))
+          else base.unionByName(hot(ranked(stats.join(hotDf, Seq("block_key"), "left_semi"),
+            "block_key", "base_name", sized.getLong(2), pinSink, settings.reliableCheckpoints)))
         }
       case None => full(stats, -1L)
     }
@@ -407,8 +441,7 @@ object Matching {
     settings.engageCheckpoints(stats.sparkSession)
     val slim = governedPairs(stats, settings)(
       slimPairs, slimSorted(_, settings.hotBlockWindow))
-    val qual = (col("token_match") && col("ratio") >= settings.softThreshold) ||
-      col("ratio") >= settings.hardThreshold
+    val qual = qualifies(settings)
     slim.agg(
       count(when(qual, 1)).as("n_pairs"),
       // 1 per qualifying token match, 0 per other QUALIFYING pair,
@@ -422,16 +455,16 @@ object Matching {
 
   /** [[allPairs]] slimmed to (ratio, token_match), no predicate, no
     * canonical swap — the profile-aggregation feed. */
-  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame =
-    saltedSelfJoin(capped, adaptiveSalt(capped, knownNames), Seq("token_key"))
+  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame = {
+    val s = adaptiveSalt(capped, knownNames)
+    saltedSelfJoin(named(capped), "block_key", Seq("name", "token_key"), s, s)
       .select(jaro_winkler(col("l_name"), col("r_name")).as("ratio"),
         (col("l_token_key") === col("r_token_key")).as("token_match"))
+  }
 
-  /** [[sortedNeighborhoodPairs]] slimmed the same way (shares
-    * [[withBlockRank]], so the profile path also never single-tasks
-    * a hot block's rank). */
-  private def slimSorted(stats: DataFrame, window: Int): DataFrame =
-    neighborJoin(withBlockRank(stats), window, Seq("token_key"))
+  /** [[rankedNeighborhoodPairs]] slimmed the same way. */
+  private def slimSorted(rankedStats: DataFrame, window: Int): DataFrame =
+    neighborJoin(named(rankedStats), "block_key", Seq("name", "token_key"), window)
       .select(jaro_winkler(col("a_name"), col("b_name")).as("ratio"),
         (col("a_token_key") === col("b_token_key")).as("token_match"))
 
@@ -461,10 +494,10 @@ object Matching {
   private def allPairs(capped: DataFrame, settings: DedupSettings,
       salt: Int, knownNames: Long): DataFrame = {
     val s = if (salt > 0) salt else adaptiveSalt(capped, knownNames)
-    val joined = saltedSelfJoin(capped, s, Seq("min_row", "max_row", "token_key"))
+    val joined = saltedSelfJoin(named(capped), "block_key", NameColumns, s, s)
     // canonical a<b orientation regardless of which chunk fanned out
     val aIsL = col("l_name") < col("r_name")
-    joined.select(
+    qualified(joined.select(
       col("block_key"),
       when(aIsL, col("l_name")).otherwise(col("r_name")).as("a_name"),
       when(aIsL, col("l_min_row")).otherwise(col("r_min_row")).as("a_min_row"),
@@ -473,52 +506,72 @@ object Matching {
       when(aIsL, col("r_min_row")).otherwise(col("l_min_row")).as("b_min_row"),
       when(aIsL, col("r_max_row")).otherwise(col("l_max_row")).as("b_max_row"),
       (col("l_token_key") === col("r_token_key")).as("token_match"))
-      .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name")))
-      .where((col("token_match") && col("ratio") >= settings.softThreshold) ||
-        col("ratio") >= settings.hardThreshold)
+      .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name"))), settings)
+  }
+
+  /** The pair-join columns of a name index: the name (renamed from
+    * base_name by [[named]]) first, then its payload. */
+  private val NameColumns = Seq("name", "min_row", "max_row", "token_key")
+  private def named(stats: DataFrame): DataFrame = stats.withColumnRenamed("base_name", "name")
+
+  /** The reference predicate `(token_match && jw >= soft) || jw >= hard`
+    * (engine.py:260) over (ratio, token_match) pair rows. */
+  private def qualifies(settings: DedupSettings): Column =
+    (col("token_match") && col("ratio") >= settings.softThreshold) ||
+      col("ratio") >= settings.hardThreshold
+
+  /** The qualifying pairs of (ratio, token_match) rows, with pair_conf. */
+  private def qualified(pairs: DataFrame, settings: DedupSettings): DataFrame =
+    pairs.where(qualifies(settings))
       .withColumn("pair_conf", pairConfidence(col("ratio"), col("token_match")))
-  }
 
-  /** Each unordered pair of names within a block exactly once, over
-    * `s` salt chunks: the left side (l_name, l_<payload>, l_chunk)
-    * fans out to every chunk ≥ its own, the right side (r_name,
-    * r_<payload>) stays in its chunk, and same-chunk pairs keep
-    * l_name < r_name. Explicit repartition with a fixed partition
-    * count: the pre-join shuffle is tiny (names), so AQE would coalesce
-    * it to one partition and serialize the O(|b|²) pair explosion that
-    * happens INSIDE the join. A user repartition pins the parallelism. */
-  private def saltedSelfJoin(capped: DataFrame, s: Int, payload: Seq[String]): DataFrame = {
-    val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
-    val a = salted.select(pairSide("l", payload) ++ Seq(col("chunk").as("l_chunk"),
+  /** Each unordered pair of rows sharing `key` exactly once, over `s`
+    * salt chunks — the skew-aware similarity-join partitioning of
+    * REPOSE (ICDE 2021). `cols` are the pair columns, the row id first:
+    * the left side (key, l_<col>…, l_chunk) fans out to every chunk ≥
+    * its own, the right side (key, r_<col>…) stays in its chunk, and
+    * same-chunk pairs keep l_<id> < r_<id>. Cross-chunk pairs come from
+    * the strictly-smaller chunk's fan-out, so one hot key spreads over
+    * `s` chunks instead of one task. Explicit repartition into `parts`
+    * partitions: the pre-join shuffle is tiny (ids), so AQE would
+    * coalesce it to one partition and serialize the O(|key|²) pair
+    * explosion that happens INSIDE the join. A user repartition pins
+    * the parallelism. The name stage passes `parts = s`, ANN 4·s. */
+  private[graft] def saltedSelfJoin(rows: DataFrame, key: String, cols: Seq[String],
+      s: Int, parts: Int): DataFrame = {
+    val id = cols.head
+    val salted = rows.withColumn("chunk", pmod(hash(col(id)), lit(s)))
+    val a = salted.select(pairSide(key, "l", cols) ++ Seq(col("chunk").as("l_chunk"),
       explode(sequence(col("chunk"), lit(s - 1))).as("chunk")): _*)
-    val b = salted.select(pairSide("r", payload) :+ col("chunk"): _*)
-    a.repartition(s, col("block_key"), col("chunk"))
-      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
-      .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
+    val b = salted.select(pairSide(key, "r", cols) :+ col("chunk"): _*)
+    a.repartition(parts, col(key), col("chunk"))
+      .join(b.repartition(parts, col(key), col("chunk")), Seq(key, "chunk"))
+      .where(col("l_chunk") =!= col("chunk") || col(s"l_$id") < col(s"r_$id"))
   }
 
-  /** One pair-join side: block_key, then base_name and `payload`
-    * renamed with prefix `p` (l_name, l_token_key, …). */
-  private def pairSide(p: String, payload: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    col("block_key") +: col("base_name").as(s"${p}_name") +:
-      payload.map(c => col(c).as(s"${p}_$c"))
+  /** One pair-join side: `key`, then `cols` renamed with prefix `p`
+    * (l_name, l_token_key, …). */
+  private def pairSide(key: String, p: String, cols: Seq[String]): Seq[Column] =
+    col(key) +: cols.map(c => col(c).as(s"${p}_$c"))
 
-  /** The sorted-neighborhood join over a ranked index: each name
-    * (a_name, a_<payload>) meets its `window-1` successors in rank
-    * (b_name, b_<payload>). The rank-offset fan-out makes the
-    * neighborhood condition an equi-join on (block_key, rnk). */
-  private def neighborJoin(ranked: DataFrame, window: Int, payload: Seq[String]): DataFrame = {
-    val a = ranked.select(pairSide("a", payload) :+
+  /** The sorted-neighborhood join over a [[ranked]] frame: each row
+    * (a_<col>…) meets its `window-1` successors in rank within `key`
+    * (b_<col>…). The rank-offset fan-out makes the neighborhood
+    * condition an equi-join on (key, rnk), so it shuffles and
+    * parallelizes like any hash join. */
+  private[graft] def neighborJoin(ranked: DataFrame, key: String, cols: Seq[String],
+      window: Int): DataFrame = {
+    val a = ranked.select(pairSide(key, "a", cols) :+
       explode(sequence(col("rnk") + 1, col("rnk") + (window - 1))).as("rnk"): _*)
-    val b = ranked.select(pairSide("b", payload) :+ col("rnk"): _*)
-    a.join(b, Seq("block_key", "rnk"))
+    val b = ranked.select(pairSide(key, "b", cols) :+ col("rnk"): _*)
+    a.join(b, Seq(key, "rnk"))
   }
 
-  /** Names-per-call above which [[blockRanked]] replaces the
-    * single-window ranking: a row_number window over one hot block
-    * serializes that block onto ONE task (the sort is fine at 1M
-    * names, fatal at 100M). Below it, the plain window is fewer jobs
-    * and the two produce identical ranks (RankingSpec). */
+  /** Rows per call above which [[ranked]] switches to [[blockRanked]]:
+    * a row_number window over one hot block serializes that block onto
+    * ONE task (the sort is fine at 1M names, fatal at 100M). Below it,
+    * the plain window is fewer jobs and the two produce identical ranks
+    * (RankingSpec). */
   private[dedup] val DistributedRankThreshold = 262144L
 
   /** Implied pairs above which [[driverNameTable]] declines an index:
@@ -526,93 +579,105 @@ object Matching {
     * JW. */
   private[dedup] val DriverImpliedPairs = 2000000L
 
-  /** Distributed per-block ranking: the same values as
-    * `row_number().over(partitionBy(block_key).orderBy(base_name))`
-    * (base_name is unique within a block, so ranks are deterministic)
-    * without funneling a hot block through a single task. Two-pass
-    * range-partitioned pattern: range-repartition by (block, name) —
-    * pinned with an eager checkpoint so both readers see the same
-    * partition ids — count each block's rows per partition (tiny:
-    * ≤ partitions × blocks-touching-them rows, collected), convert
-    * to per-(partition, block) offsets on the driver, then a LOCAL
-    * row_number within (partition, block) plus the broadcast offset.
-    * Every step is |block|/partitions parallel; nothing is
-    * single-task.
+  /** Distributed per-key ranking: the same values as
+    * `row_number().over(partitionBy(key).orderBy(order))` (`order` is
+    * unique within a key, so ranks are deterministic) without funneling
+    * a hot key through a single task. Two-pass range-partitioned
+    * pattern: range-repartition by (key, order) — pinned with an eager
+    * checkpoint so both readers see the same partition ids — count each
+    * key's rows per partition (tiny: ≤ partitions × keys-touching-them
+    * rows), turn the counts into per-(partition, key) offsets by a
+    * running sum over the partitions of each key, then a LOCAL
+    * row_number within (partition, key) plus the broadcast offset.
+    * Every step is |key|/partitions parallel; nothing is single-task.
     *
     * `pinSink` receives the eagerly-checkpointed range frame so the
     * CALLER can `Frames.release` it once the returned frame's last
     * reader has finished — without it, every invocation pins an
-    * O(names) checkpoint for the session lifetime (ADVICE r11;
+    * O(rows) checkpoint for the session lifetime (ADVICE r11;
     * [[distributedNameTable]] releases it once its fold is written). */
   private[dedup] def blockRanked(stats: DataFrame, parts: Int,
       pinSink: DataFrame => Unit = _ => (),
-      reliable: Boolean = false): DataFrame = {
-    val spark = stats.sparkSession
-    import spark.implicits._
+      reliable: Boolean = false, key: String = "block_key",
+      order: String = "base_name"): DataFrame = {
     val ranged = graft.core.Frames.materialize(
       stats
-        .repartitionByRange(parts, col("block_key"), col("base_name"))
+        .repartitionByRange(parts, col(key), col(order))
         .withColumn("_pid", spark_partition_id()),
       reliable)
     pinSink(ranged)
-    val counts = ranged.groupBy("_pid", "block_key")
-      .agg(count(lit(1)).as("_c")).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    val offsets = counts.groupBy(_._2).iterator.flatMap { case (bk, rows) =>
-      var acc = 0L
-      rows.sortBy(_._1).map { case (pid, _, c) =>
-        val off = acc; acc += c; (pid, bk, off)
-      }
-    }.toSeq
-    val offDf = broadcast(offsets.toDF("_pid", "block_key", "_off"))
-    val localW = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid", "block_key").orderBy("base_name")
-    ranged.withColumn("_lrnk", row_number().over(localW))
-      .join(offDf, Seq("_pid", "block_key"))
+    val before = Window.partitionBy(key).orderBy("_pid")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = ranged.groupBy("_pid", key).agg(count(lit(1)).as("_c"))
+      .select(col("_pid"), col(key), coalesce(sum(col("_c")).over(before), lit(0L)).as("_off"))
+    ranged.withColumn("_lrnk", row_number().over(Window.partitionBy("_pid", key).orderBy(order)))
+      .join(broadcast(offsets), Seq("_pid", key))
       .withColumn("rnk", (col("_off") + col("_lrnk")).cast("int"))
       .drop("_pid", "_off", "_lrnk")
   }
 
-  /** Per-block rank column shared by the sorted-neighborhood paths:
-    * plain window below [[DistributedRankThreshold]] names, the
-    * two-pass distributed ranking above it. Identical values either
-    * way — the gate is wall-clock only. */
-  private def withBlockRank(stats: DataFrame,
-      pinSink: DataFrame => Unit = _ => (),
-      reliable: Boolean = false): DataFrame = {
-    val n = stats.count()
+  /** The per-key rank column `rnk` of the sorted-neighborhood joins:
+    * the plain window up to [[DistributedRankThreshold]] rows, the
+    * two-pass [[blockRanked]] above it — identical values either way,
+    * the gate is wall-clock only. `n` is the frame's row count, read
+    * by the caller from an aggregate it already runs (the
+    * governor's sizing row, ANN's memoized bucket histogram); a
+    * negative count (unknown) takes the window. */
+  private[graft] def ranked(rows: DataFrame, key: String, order: String, n: Long,
+      pinSink: DataFrame => Unit = _ => (), reliable: Boolean = false): DataFrame =
     if (n <= DistributedRankThreshold) {
-      val byName = org.apache.spark.sql.expressions.Window
-        .partitionBy("block_key").orderBy("base_name")
-      stats.withColumn("rnk", row_number().over(byName))
+      rows.withColumn("rnk", row_number().over(Window.partitionBy(key).orderBy(order)))
     } else {
-      val parts = stats.sparkSession.sparkContext.defaultParallelism
-      log.info(s"sorted-neighborhood: distributed ranking over $n names " +
+      val parts = rows.sparkSession.sparkContext.defaultParallelism
+      log.info(s"sorted-neighborhood: distributed ranking over $n rows " +
         s"($parts range partitions)")
-      blockRanked(stats, parts, pinSink, reliable)
+      blockRanked(rows, parts, pinSink, reliable, key, order)
     }
+
+  /** Unordered candidate pairs (a_id < b_id, each once) of the rows
+    * that share every `keys` value — the LSH band self-join of the
+    * text and image near-dup paths. Under `cap`, buckets with more
+    * members are dropped first by a count window over `keys`, NOT a
+    * groupBy + semi-join: the window's shuffle partitioning is exactly
+    * the self-join's key, so Catalyst reuses one exchange instead of
+    * adding two more for the join back. The drop is SIZE-GATED: it runs
+    * only when `maxBucket` (a memoized full-corpus max, read only under
+    * a cap) exceeds the cap; otherwise it is a proven no-op and the
+    * window pass is skipped. */
+  private[graft] def bandCandidates(rows: DataFrame, id: String, keys: Seq[String],
+      cap: Option[Long] = None, maxBucket: => Long = 0L): DataFrame = {
+    val kept = cap.filter(maxBucket > _).fold(rows) { c =>
+      rows.withColumn("_bn", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+        .filter(col("_bn") <= c).drop("_bn")
+    }
+    kept.as("a")
+      .join(kept.as("b"), keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("a_id"), col(s"b.$id").as("b_id"))
+      .distinct()
   }
+
+  /** The qualifying sorted-neighborhood pairs of a name index ranked
+    * within its blocks by base_name ([[ranked]] or [[blockRanked]]),
+    * in the columns of [[qualifyingPairs]]. */
+  private[dedup] def rankedNeighborhoodPairs(rankedStats: DataFrame, window: Int,
+      settings: DedupSettings): DataFrame =
+    qualified(neighborJoin(named(rankedStats), "block_key", NameColumns, window)
+      .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name")))
+      .withColumn("token_match", col("a_token_key") === col("b_token_key"))
+      .drop("a_token_key", "b_token_key", "rnk"), settings)
 
   /** Sorted-neighborhood pair generation — the O(n·w) scale path for
     * blocks of all-distinct names where full pairing is quadratic:
     * names are sorted within each block and each name is compared
-    * only to its `window-1` successors. The rank-offset fan-out turns
-    * the neighborhood condition into an equi-join on
-    * (block_key, rank), so it shuffles and parallelizes like any
-    * hash join; the rank itself is distributed past
-    * [[DistributedRankThreshold]] names so no hot block ever
-    * serializes onto one task. */
+    * only to its `window-1` successors ([[neighborJoin]]). Counts the
+    * index to pick the rank path, so no hot block ever serializes onto
+    * one task past [[DistributedRankThreshold]] names. */
   def sortedNeighborhoodPairs(stats: DataFrame, window: Int,
       settings: DedupSettings = DedupSettings(),
       pinSink: DataFrame => Unit = _ => ()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    neighborJoin(withBlockRank(stats, pinSink, settings.reliableCheckpoints), window,
-        Seq("min_row", "max_row", "token_key"))
-      .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name")))
-      .withColumn("token_match", col("a_token_key") === col("b_token_key"))
-      .drop("a_token_key", "b_token_key", "rnk")
-      .where((col("token_match") && col("ratio") >= settings.softThreshold) ||
-        col("ratio") >= settings.hardThreshold)
-      .withColumn("pair_conf", pairConfidence(col("ratio"), col("token_match")))
+    rankedNeighborhoodPairs(ranked(stats, "block_key", "base_name", stats.count(), pinSink,
+      settings.reliableCheckpoints), window, settings)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.dedup.Matching
 import graft.functions.vector.dot_product
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -94,21 +95,24 @@ object Ann {
     *
     * Skew: correlated embeddings concentrate in few buckets, so an
     * unsalted bucket self-join would serialize the dominant bucket's
-    * O(|b|²) pair explosion onto one partition. Same remedy as the
-    * dedup pair join (Matching.qualifyingPairs): vectors are salted
-    * into `salt` chunks, the left side fans out to every chunk ≥ its
-    * own, and the join key becomes (bucket, chunk) — `salt`-way
-    * parallelism per bucket with each unordered pair generated exactly
-    * once (cross-chunk via the smaller chunk's fan-out, same-chunk via
-    * the id< residual). Shared by the sign-LSH pair join ([[lshPairs]],
+    * O(|b|²) pair explosion onto one partition. The join is the dedup
+    * pair join's ([[Matching.saltedSelfJoin]]): vectors are
+    * salted into `salt` chunks over 4·salt partitions, so each bucket
+    * gets `salt`-way parallelism with each unordered pair generated
+    * exactly once. Shared by the sign-LSH pair join ([[lshPairs]],
     * bucket = hyperplane signature) and SemDeDup ([[semDedup]],
-    * bucket = cluster label). */
+    * bucket = cluster label).
+    *
+    * `hotMembers` is the member count of the over-cap buckets, when the
+    * caller has it from a bucket histogram it already ran; it picks the
+    * hot buckets' rank path ([[Matching.ranked]]), −1 =
+    * unknown (the plain window). */
   def saltedCosinePairs(bucketed: DataFrame, minCos: Double,
       salt: Int = 16, bucketCap: Option[Int] = None,
-      window: Int = 8): DataFrame = bucketCap match {
+      window: Int = 8, hotMembers: Long = -1L): DataFrame = bucketCap match {
     case None => triangularPairs(bucketed, minCos, salt)
     case Some(cap) =>
-      // window=1 would make neighborhoodPairs' sequence(rnk+1, rnk)
+      // window=1 would make the neighbor join's sequence(rnk+1, rnk)
       // DESCENDING — emitting self-pairs that violate a_id < b_id
       // (ADVICE r15); production passes 8, but the parameter is public
       require(window >= 2,
@@ -149,58 +153,35 @@ object Ann {
       triangularPairs(sized.filter(col("bn") <= cap).drop("bn"), minCos, salt)
         .unionByName(
           neighborhoodPairs(sized.filter(col("bn") > cap).drop("bn"),
-            minCos, window))
+            minCos, window, hotMembers))
   }
 
   /** Sorted-neighborhood pairs within hot buckets: rank by vec_id
     * within the bucket, join rank r to ranks r+1..r+window−1 — an
     * equi-join on (bucket, rank), O(|b|·window) pairs, a_id < b_id by
-    * construction (ranks follow vec_id order). The rank window is
-    * per-bucket: fine to ~1M members per bucket; a corpus whose single
-    * hottest CELL outgrows that needs the distributed two-pass ranking
-    * (dedup's blockRanked) — at that point the cell is ~the whole
-    * corpus and the geometry, not the cap, is the problem. */
+    * construction (ranks follow vec_id order). The rank is the dedup
+    * name stage's ([[Matching.ranked]]): distributed past
+    * its threshold when `hotMembers` says so. */
   private def neighborhoodPairs(hot: DataFrame, minCos: Double,
-      window: Int): DataFrame = {
-    val ranked = hot.withColumn("rnk",
-      row_number().over(Window.partitionBy("bucket").orderBy("vec_id")))
-    val a = ranked.select(col("bucket"), col("vec_id").as("a_id"),
-      col("u").as("lu"),
-      explode(sequence(col("rnk") + 1, col("rnk") + (window - 1))).as("rnk"))
-    val b = ranked.select(col("bucket"), col("vec_id").as("b_id"),
-      col("u").as("ru"), col("rnk"))
-    a.join(b, Seq("bucket", "rnk"))
-      .withColumn("cos", cosine(col("lu"), col("ru")))
+      window: Int, hotMembers: Long): DataFrame =
+    Matching.neighborJoin(
+      Matching.ranked(hot, "bucket", "vec_id", hotMembers),
+      "bucket", Seq("vec_id", "u"), window)
+      .withColumn("cos", cosine(col("a_u"), col("b_u")))
       .filter(col("cos") >= minCos)
-      .select(col("a_id"), col("b_id"), col("bucket"), col("cos"))
-  }
+      .select(col("a_vec_id").as("a_id"), col("b_vec_id").as("b_id"), col("bucket"), col("cos"))
 
-  /** The full salted triangular join (see [[saltedCosinePairs]]). */
+  /** The full salted triangular join (see [[saltedCosinePairs]]);
+    * cosine is symmetric (same index-ordered sum either way), so only
+    * the ids need canonical a<b orientation. */
   private def triangularPairs(bucketed: DataFrame, minCos: Double,
-      salt: Int): DataFrame = {
-    val chunked = bucketed
-      .select(col("bucket"), col("vec_id"), col("u"))
-      .withColumn("chunk", pmod(hash(col("vec_id")), lit(salt)))
-    val a = chunked.select(col("bucket"),
-      col("vec_id").as("l_id"), col("u").as("lu"), col("chunk").as("l_chunk"),
-      explode(sequence(col("chunk"), lit(salt - 1))).as("chunk"))
-    val b = chunked.select(col("bucket"),
-      col("vec_id").as("r_id"), col("u").as("ru"), col("chunk"))
-    // pinned repartition: the pre-join shuffle is tiny, so AQE would
-    // coalesce it and serialize the pair explosion inside the join
-    val joined = a.repartition(4 * salt, col("bucket"), col("chunk"))
-      .join(b.repartition(4 * salt, col("bucket"), col("chunk")),
-        Seq("bucket", "chunk"))
-      .where(col("l_chunk") =!= col("chunk") || col("l_id") < col("r_id"))
-    // cosine is symmetric (same index-ordered sum either way), so only
-    // the ids need canonical a<b orientation
-    joined
-      .withColumn("cos", cosine(col("lu"), col("ru")))
+      salt: Int): DataFrame =
+    Matching.saltedSelfJoin(bucketed, "bucket", Seq("vec_id", "u"), salt, 4 * salt)
+      .withColumn("cos", cosine(col("l_u"), col("r_u")))
       .filter(col("cos") >= minCos)
-      .select(least(col("l_id"), col("r_id")).as("a_id"),
-        greatest(col("l_id"), col("r_id")).as("b_id"),
+      .select(least(col("l_vec_id"), col("r_vec_id")).as("a_id"),
+        greatest(col("l_vec_id"), col("r_vec_id")).as("b_id"),
         col("bucket"), col("cos"))
-  }
 
   /** LSH-bucketed near-dup pairs: bucket equi-join (shuffles each
     * vector to ONE bucket — the 100 TB alternative to the all-pairs
@@ -209,9 +190,9 @@ object Ann {
     * multiple tables. */
   def lshPairs(prep: DataFrame, planes: Seq[Seq[Double]], minCos: Double,
       salt: Int = 16, bucketCap: Option[Int] = None,
-      window: Int = 8): DataFrame =
+      window: Int = 8, hotMembers: Long = -1L): DataFrame =
     saltedCosinePairs(prep.withColumn("bucket", lshBucket(col("v"), planes)),
-      minCos, salt, bucketCap, window)
+      minCos, salt, bucketCap, window, hotMembers)
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023,
     * arXiv:2303.08487) over PRE-CLUSTERED embeddings: within each

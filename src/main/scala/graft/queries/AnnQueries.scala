@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.dedup.{Cluster, Matching}
 import graft.ext.Ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -356,49 +357,36 @@ object AnnQueries {
     }
   }
 
+  /** One Memo'd scan of the bucket histogram
+    * ([[Matching.bucketHistogram]]) yields every governor
+    * input at once: the hottest bucket's size (drives the cap gate),
+    * the over-cap members (drive the hot buckets' rank path) and the
+    * candidate-pair upper bounds of both plans — Σ C(bn,2) uncapped,
+    * and with a bucket the cap switches to sorted-neighborhood
+    * contributing ≤ bn·(window−1) — (drive the CC small-graph gate,
+    * VERDICT r15 item 1). Keyed by (dir, plane count) — buckets depend
+    * on nothing else — so the governed default and the `_governed`
+    * audit share one aggregate job per session. */
+  private def bucketStats(s: SparkSession, p: DataFrame, dir: String,
+      planes: Seq[Seq[Double]]): Matching.BucketHistogram =
+    Matching.BucketHistogram.of(graft.core.Memo.cached(s,
+      s"ann_bucketstats:$dir:p${planes.size}") {
+      Matching.bucketHistogram(
+        p.select(Ann.lshBucket(col("v"), planes).as("bucket")), Seq("bucket"),
+        AnnBucketCap, AnnNeighborWindow - 1)
+    }.head())
+
   /** The governed LSH pair join — volume-derived plane count AND the
     * hot-bucket sorted-neighborhood cap (see [[Ann.saltedCosinePairs]])
     * — the DEFAULT candidate generator of ann_lsh_pairs /
     * ann_dedup_clusters since r15 (the r12 text-family swap, replayed:
     * fixed geometry and uncapped planes are the explicitly-named
-    * audits). The count() driving the plane governor reads a Memo'd
-    * cached frame; a cluster job would read table metadata. */
-  /** One Memo'd scan of the bucket histogram yields every governor
-    * input at once: the hottest bucket's size (drives the cap gate)
-    * and the candidate-pair upper bound of the plan that gate selects
-    * (drives the CC small-graph gate, VERDICT r15 item 1). Keyed by
-    * (dir, plane count) — buckets depend on nothing else — so the
-    * governed default and the `_governed` audit share one aggregate
-    * job per session. */
-  private final case class BucketStats(maxBucket: Long, pairBound: Long)
-  private def bucketStats(s: SparkSession, p: DataFrame, dir: String,
-      planes: Seq[Seq[Double]]): BucketStats = {
-    val row = graft.core.Memo.cached(s,
-      s"ann_bucketstats:$dir:p${planes.size}") {
-      // triangular buckets imply C(bn,2) candidates; a bucket the cap
-      // would switch to sorted-neighborhood implies ≤ bn·(window−1).
-      // bn·(bn−1) is even, so the long cast after halving is exact.
-      val tri = (col("bn") * (col("bn") - 1) / 2).cast("long")
-      val hot = (col("bn") * (AnnNeighborWindow - 1)).cast("long")
-      p.select(Ann.lshBucket(col("v"), planes).as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("bn"))
-        .agg(coalesce(max(col("bn")), lit(0L)).as("max_bucket"),
-          coalesce(sum(tri), lit(0L)).as("pairs_uncapped"),
-          coalesce(sum(when(col("bn") > AnnBucketCap, hot).otherwise(tri)),
-            lit(0L)).as("pairs_capped"))
-    }.head()
-    val capped = row.getLong(0) > AnnBucketCap
-    BucketStats(row.getLong(0), if (capped) row.getLong(2) else row.getLong(1))
-  }
-
-  private def governedPairs(s: SparkSession, dir: String,
-      minCos: Double): DataFrame = governedPairsWithBound(s, dir, minCos)._1
-
-  /** Returns the governed pair join AND its candidate-count upper
-    * bound (verified pairs ⊆ candidates) for downstream CC gating. */
-  private def governedPairsWithBound(s: SparkSession, dir: String,
+    * audits) — over the prepared corpus `p`, whose histogram is
+    * memoized under `key`, with its candidate-count upper bound
+    * (verified pairs ⊆ candidates) for downstream CC gating. The
+    * count() driving the plane governor reads a Memo'd cached frame. */
+  private def governedPairs(s: SparkSession, p: DataFrame, key: String,
       minCos: Double): (DataFrame, Long) = {
-    val p = prep(s, dir)
     val planes = PlanesAll.take(planesFor(p.count()))
     // SIZE-GATED like the text family's band-bucket governor: on a
     // corpus whose hottest bucket already fits the cap the split is a
@@ -407,30 +395,10 @@ object AnnQueries {
     // full-corpus bucket max shows a hot bucket exists (sf ≤ 0.1:
     // never; sf1: 23 buckets; sf10: ~1.5k). Semantics are unchanged
     // either way, so the one capped twin grades both gate outcomes.
-    val stats = bucketStats(s, p, dir, planes)
+    val stats = bucketStats(s, p, key, planes)
     val cap = if (stats.maxBucket > AnnBucketCap) Some(AnnBucketCap) else None
-    (Ann.lshPairs(p, planes, minCos,
-      bucketCap = cap, window = AnnNeighborWindow), stats.pairBound)
-  }
-
-  /** Near-dup cluster assembly shared by the three ann_dedup_clusters
-    * variants: verified pairs become edges, connected components merge
-    * transitive near-dups, min vec_id elects the canonical vector,
-    * non-edge vectors stay singletons. */
-  private def dedupClusters(p: DataFrame, pairs: DataFrame,
-      pairBound: Long = -1L): DataFrame = {
-    val comps = graft.dedup.Cluster.connectedComponents(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst")),
-      edgeCountHint = pairBound)
-      .withColumnRenamed("id", "vec_id")
-    val w = Window.partitionBy("cluster_id")
-    p.select(col("vec_id"))
-      .join(comps, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("component"), col("vec_id")).as("cluster_id"))
-      .withColumn("cluster_size", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("vec_id") === col("cluster_id"))
-      .orderBy("vec_id")
+    (Ann.lshPairs(p, planes, minCos, bucketCap = cap, window = AnnNeighborWindow,
+      hotMembers = stats.hotMembers), stats.cappedPairs)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -473,7 +441,7 @@ object AnnQueries {
     // planes-only variant as the _governed audit (what does the cap
     // cost / what did the planes buy).
     "ann_lsh_pairs" -> ((s, dir) =>
-      governedPairs(s, dir, minCos = 0.20).orderBy("a_id", "b_id")),
+      governedPairs(s, prep(s, dir), dir, minCos = 0.20)._1.orderBy("a_id", "b_id")),
 
     // AUDIT: the historical fixed 6-plane, uncapped geometry — the
     // quadratic counterfactual (18× wall at 10× data, SCALE.md ANN
@@ -540,15 +508,16 @@ object AnnQueries {
     // mixes families. This is the shape that survives a 100 TB
     // embedding table with a pathological duplicate mass.
     "ann_dedup_clusters" -> ((s, dir) => {
-      val (pairs, bound) = governedPairsWithBound(s, dir, minCos = CosThreshold)
-      dedupClusters(prep(s, dir), pairs, pairBound = bound)
+      val p = prep(s, dir)
+      val (pairs, bound) = governedPairs(s, p, dir, minCos = CosThreshold)
+      Cluster.clusterTable(p, "vec_id", pairs, bound)
     }),
 
     // AUDIT: the historical fixed 6-plane, uncapped composition (20×
     // wall at 10× data — the documented quadratic counterfactual).
     "ann_dedup_clusters_fixed" -> ((s, dir) => {
       val p = prep(s, dir)
-      dedupClusters(p, Ann.lshPairs(p, Planes, minCos = CosThreshold))
+      Cluster.clusterTable(p, "vec_id", Ann.lshPairs(p, Planes, minCos = CosThreshold))
     }),
 
     // AUDIT: volume-governed planes WITHOUT the hot-bucket cap —
@@ -559,10 +528,8 @@ object AnnQueries {
       val planes = PlanesAll.take(planesFor(p.count()))
       // uncapped plan → the triangular Σ C(bn,2) bound (same Memo'd
       // histogram scan as the governed default)
-      val row = bucketStats(s, p, dir, planes)
-      val bound = if (row.maxBucket > AnnBucketCap) -1L else row.pairBound
-      dedupClusters(p, Ann.lshPairs(p, planes, minCos = CosThreshold),
-        pairBound = bound)
+      Cluster.clusterTable(p, "vec_id", Ann.lshPairs(p, planes, minCos = CosThreshold),
+        bucketStats(s, p, dir, planes).pairs)
     }),
 
     // SAMPLED composition twin (VERDICT r15 item 3 — the
@@ -576,12 +543,8 @@ object AnnQueries {
     // at the scale the governor was built for.
     "ann_dedup_clusters_sample" -> ((s, dir) => {
       val p = prep(s, dir).filter(col("vec_id") % 4 === 0)
-      val planes = PlanesAll.take(planesFor(p.count()))
-      val stats = bucketStats(s, p, s"$dir#sample4", planes)
-      val cap = if (stats.maxBucket > AnnBucketCap) Some(AnnBucketCap) else None
-      val pairs = Ann.lshPairs(p, planes, minCos = CosThreshold,
-        bucketCap = cap, window = AnnNeighborWindow)
-      dedupClusters(p, pairs, pairBound = stats.pairBound)
+      val (pairs, bound) = governedPairs(s, p, s"$dir#sample4", minCos = CosThreshold)
+      Cluster.clusterTable(p, "vec_id", pairs, bound)
     }),
 
     // IVF: probe the 2 nearest coarse partitions, exact top-k inside.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.dedup.Matching
 import graft.ext.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -95,28 +96,21 @@ object MultimodalQueries {
     idx.select(col("media_id"), posexplode(array(
       col("b0"), col("b1"), col("b2"), col("b3"))).as(Seq("band", "val")))
 
-  /** One Memo'd scan of the band-bucket histogram yields both
-    * governor inputs (the AnnQueries.bucketStats pattern): the
+  /** One Memo'd scan of the band-bucket histogram
+    * ([[Matching.bucketHistogram]]) yields both governor inputs: the
     * hottest bucket's size (drives the size gate — when it fits the
-    * cap, the count-window filter is a provable no-op and is
-    * skipped) and the candidate-pair upper bound of the governed
-    * plan (Σ C(bn,2) over KEPT buckets; dropped buckets contribute
-    * nothing) — the CC small-graph gate's edge-count hint. Each
-    * distinct pair can be proposed by up to 4 bands, so the sum
+    * cap, the count-window filter is a provable no-op and is skipped)
+    * and the candidate-pair upper bound of the governed plan
+    * (`cappedPairs`: Σ C(bn,2) over KEPT buckets; dropped buckets
+    * contribute nothing) — the CC small-graph gate's edge-count hint.
+    * Each distinct pair can be proposed by up to 4 bands, so the sum
     * overcounts: valid as an upper bound, which is all the hint
     * needs. */
-  private final case class DhashStats(maxBucket: Long, pairBound: Long)
-  private def dhashBucketStats(s: SparkSession, dir: String): DhashStats = {
-    val row = graft.core.Memo.cached(s, s"mm_dhash_bstats:$dir") {
-      val tri = (col("n") * (col("n") - 1) / 2).cast("long")
-      dhashBandRows(dhashIndex(s, dir))
-        .groupBy("band", "val").agg(count(lit(1)).as("n"))
-        .agg(coalesce(max(col("n")), lit(0L)).as("max_bucket"),
-          coalesce(sum(when(col("n") <= DhashBucketCap, tri).otherwise(lit(0L))),
-            lit(0L)).as("pair_bound"))
-    }.head()
-    DhashStats(row.getLong(0), row.getLong(1))
-  }
+  private def dhashBucketStats(s: SparkSession, dir: String): Matching.BucketHistogram =
+    Matching.BucketHistogram.of(graft.core.Memo.cached(s, s"mm_dhash_bstats:$dir") {
+      Matching.bucketHistogram(dhashBandRows(dhashIndex(s, dir)), Seq("band", "val"),
+        DhashBucketCap)
+    }.head())
 
   /** Band-bucket keys (band·2^16 + val — the [[graft.streaming.StreamMmDedup]]
     * state key) currently OVER the hot-bucket cap; None when the
@@ -149,29 +143,14 @@ object MultimodalQueries {
       .select("a_id", "b_id", "hamming")
   }
 
-  /** Unordered candidate pairs from a (media_id, band, val) relation:
-    * band-key self-equi-join + distinct. */
-  private def bandCandidates(br: DataFrame): DataFrame =
-    br.as("a")
-      .join(br.as("b"),
-        col("a.band") === col("b.band") && col("a.val") === col("b.val") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("a_id"), col("b.media_id").as("b_id"))
-      .distinct()
-
   /** Verified perceptual near-dup pairs (a_id, b_id, hamming),
     * unordered — the shared core of `mm_neardup` (pair surface) and
     * `mm_neardup_clusters` (edge set): size-gated hot-bucket cap,
     * band-key candidate equi-join, exact XOR-popcount verify. */
   private def dhashPairs(s: SparkSession, dir: String): DataFrame = {
     val idx = dhashIndex(s, dir)
-    val br0 = dhashBandRows(idx)
-    val br = if (dhashBucketStats(s, dir).maxBucket > DhashBucketCap)
-      br0.withColumn("bn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "val")))
-        .filter(col("bn") <= DhashBucketCap).drop("bn")
-      else br0
-    verifyHamming(bandCandidates(br), idx)
+    verifyHamming(Matching.bandCandidates(dhashBandRows(idx), "media_id", Seq("band", "val"),
+      Some(DhashBucketCap.toLong), dhashBucketStats(s, dir).maxBucket), idx)
   }
 
   /** Materialize the Memo'd decode stages (Bench warm-up hook — see
@@ -293,7 +272,8 @@ object MultimodalQueries {
       // kept relation is computed once instead of twice (agg + anti
       // side). The twin keeps its explicit EXCEPT form and grades the
       // set identity.
-      val allPairs = verifyHamming(bandCandidates(audited), idx)
+      val allPairs = verifyHamming(
+        Matching.bandCandidates(audited, "media_id", Seq("band", "val")), idx)
         .select("a_id", "b_id")
       val keptPairs = dhashPairs(s, dir).select("a_id", "b_id")
       val aggKept = keptPairs.agg(count(lit(1)).as("n_kept"))
@@ -359,21 +339,9 @@ object MultimodalQueries {
     // hashes: candidates stay bucket-local, CC runs on the tiny
     // verified-pair set with the Memo'd histogram's pair bound as its
     // small-graph gate hint, and the id join back broadcasts.
-    "mm_neardup_clusters" -> ((s, dir) => {
-      val pairs = dhashPairs(s, dir)
-      val comps = graft.dedup.Cluster.connectedComponents(
-        pairs.select(col("a_id").as("src"), col("b_id").as("dst")),
-        edgeCountHint = dhashBucketStats(s, dir).pairBound)
-        .withColumnRenamed("id", "media_id")
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
-      dhashIndex(s, dir).select(col("media_id"))
-        .join(comps, Seq("media_id"), "left")
-        .select(col("media_id"),
-          coalesce(col("component"), col("media_id")).as("cluster_id"))
-        .withColumn("cluster_size", count(lit(1)).over(w))
-        .withColumn("is_canonical", col("media_id") === col("cluster_id"))
-        .orderBy("media_id")
-    })
+    "mm_neardup_clusters" -> ((s, dir) =>
+      graft.dedup.Cluster.clusterTable(dhashIndex(s, dir), "media_id", dhashPairs(s, dir),
+        dhashBucketStats(s, dir).cappedPairs))
   )
 
   val oracle: Map[String, String] = Map(

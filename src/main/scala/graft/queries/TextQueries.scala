@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.dedup.Matching
 import graft.ext.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -109,21 +110,6 @@ object TextQueries {
       }.drop("sh", "digests")
     }
 
-  /** Verified MinHash-LSH near-dup pairs (a_id, b_id, jaccard):
-    * band-bucket candidate equi-join over the cached signature index,
-    * then exact-Jaccard verification against the cached shingle sets.
-    * Shared by `text_lsh_pairs` (pair surface) and
-    * `text_neardup_clusters` (doc→cluster mapping).
-    *
-    * GOVERNED BY DEFAULT: band buckets over `LshBucketCap` members are
-    * dropped before the self-join (the same posture the dedup pair
-    * join has had since r8). An ungoverned LSH join is quadratic in
-    * the hottest bucket — measured 33× pair growth at 10× data on the
-    * shared-vocab corpus — so the uncapped path (`bucketCap = None`)
-    * is the AUDIT variant (`text_lsh_pairs_allpairs`), not the
-    * default. Dropped buckets' members keep their other Bands-1
-    * chances at candidacy, which is the standard recall trade every
-    * production LSH dedup makes. */
   /** (doc_id, band, key) rows — one per LSH band per doc — for a
     * signature frame. */
   private def bandRowsOf(sigs: DataFrame): DataFrame = {
@@ -143,43 +129,38 @@ object TextQueries {
     * keeps every row for any restriction — the window pass can be
     * skipped with a bit-identical result. */
   private def maxBandBucket(s: SparkSession, dir: String): Long =
-    graft.core.Memo.cached(s, s"text_lsh_maxbucket:$dir") {
-      bandRowsOf(withSigs(s, dir))
-        .groupBy("band", "key").agg(count(lit(1)).as("n"))
-        .agg(coalesce(max(col("n")), lit(0L)).as("max_bucket"))
-    }.head().getLong(0)
+    Matching.BucketHistogram.of(graft.core.Memo.cached(s, s"text_lsh_maxbucket:$dir") {
+      Matching.bucketHistogram(bandRowsOf(withSigs(s, dir)), Seq("band", "key"))
+    }.head()).maxBucket
 
+  /** Verified MinHash-LSH near-dup pairs (a_id, b_id, jaccard):
+    * band-bucket candidate equi-join over the cached signature index
+    * ([[Matching.bandCandidates]]),
+    * then exact-Jaccard verification against the cached shingle sets.
+    * Shared by `text_lsh_pairs` (pair surface) and
+    * `text_neardup_clusters` (doc→cluster mapping).
+    *
+    * GOVERNED BY DEFAULT: band buckets over `LshBucketCap` members are
+    * dropped before the self-join (the same posture the dedup pair
+    * join has had since r8). An ungoverned LSH join is quadratic in
+    * the hottest bucket — measured 33× pair growth at 10× data on the
+    * shared-vocab corpus — so the uncapped path (`bucketCap = None`)
+    * is the AUDIT variant (`text_lsh_pairs_allpairs`), not the
+    * default. Dropped buckets' members keep their other Bands-1
+    * chances at candidacy, which is the standard recall trade every
+    * production LSH dedup makes. */
   private def lshPairs(s: SparkSession, dir: String,
       onlyDocs: Option[DataFrame] = None,
       bucketCap: Option[Int] = Some(LshBucketCap)): DataFrame = {
     val sigs0 = withSigs(s, dir)
     val sigs = onlyDocs.fold(sigs0)(ids =>
       sigs0.join(ids.select("doc_id"), Seq("doc_id"), "left_semi"))
-    val bandRowsAll = bandRowsOf(sigs)
-    // hot-bucket governor: a count window over (band, key) — NOT a
-    // groupBy + semi-join — because the window's shuffle partitioning
-    // is exactly the self-join's key below, so Catalyst reuses one
-    // exchange instead of adding two more for the join back.
-    // SIZE-GATED (VERDICT r11 item 6): on a corpus whose hottest
-    // bucket already fits the cap the filter is a no-op, so the
-    // window pass (1.3 s vs 0.4 s at sf0.1) is skipped — engaged
-    // only when the Memo'd full-corpus bucket max proves a hot
-    // bucket actually exists. Semantics are unchanged either way.
-    val bandRows = bucketCap
-      .filter(cap => maxBandBucket(s, dir) > cap)
-      .fold(bandRowsAll) { cap =>
-      bandRowsAll
-        .withColumn("bn",
-          count(lit(1)).over(Window.partitionBy("band", "key")))
-        .filter(col("bn") <= cap)
-        .drop("bn")
-    }
-    val cand = bandRows.as("a")
-      .join(bandRows.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    // hot-bucket governor: the count-window drop, size-gated on the
+    // Memo'd full-corpus bucket max (VERDICT r11 item 6: the window
+    // pass costs 1.3 s vs 0.4 s at sf0.1, so it is skipped when no
+    // bucket exceeds the cap). Semantics are unchanged either way.
+    val cand = Matching.bandCandidates(bandRowsOf(sigs), "doc_id", Seq("band", "key"),
+      bucketCap.map(_.toLong), maxBandBucket(s, dir))
     val sh = withShingles(s, dir)
     cand
       .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), Seq("a_id"))
@@ -225,18 +206,8 @@ object TextQueries {
       .select("doc_id", "rep_id")
     val repIds = byContent.filter(col("doc_id") === col("rep_id"))
       .select("doc_id")
-    val edges = lshPairs(s, dir, Some(repIds), bucketCap = bucketCap)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-    val comps = graft.dedup.Cluster.connectedComponents(edges)
-      .withColumnRenamed("id", "rep_id")
-    val w = Window.partitionBy("cluster_id")
-    byContent
-      .join(comps, Seq("rep_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("rep_id")).as("cluster_id"))
-      .withColumn("cluster_size", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
-      .orderBy("doc_id")
+    graft.dedup.Cluster.clusterTable(byContent, "doc_id",
+      lshPairs(s, dir, Some(repIds), bucketCap = bucketCap), rep = Some("rep_id"))
   }
 
   /** Materialize the session-shared Memo indexes (shingle sets, MinHash

@@ -208,16 +208,14 @@ object AnnIndexIO {
       .select(col("label").cast("long").as("label"),
         transform(col("dc"), _.getField("cval")).as("cv"))
 
-  /** (label, vector) rows of a (label, dim, cval) centroid table,
+  /** (label, vector) rows of each (label, dim, cval) centroid table,
     * collected to the driver sorted by label. Bounded by the index
     * GEOMETRY (k·dim doubles — KBs for any corpus), never by corpus
     * size: loading codebooks into memory is what every ANN serving
     * system does (FAISS holds them resident); the manifest validates
-    * the shape before this runs. */
-  private def collectCentroids(cent: DataFrame): Seq[(Long, Seq[Double])] =
-    collectCentroidTables(Seq(cent)).head
-
-  /** All centroid tables in ONE Spark job (a tagged union): encode
+    * the shape before this runs.
+    *
+    * All centroid tables in ONE Spark job (a tagged union): encode
     * calls this for coarse + every subspace codebook, and 1 + nSub
     * separate KB-scale collect jobs were pure scheduling latency —
     * ~1.4 s of a 2.3 s sf0.1 encode rep. */

@@ -24,6 +24,7 @@ class MatchingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
 
   test("salted pair join is exactly the plain self-join, any salt") {
+    import spark.implicits._
     // plain reference: unsalted equi-join with a<b residual
     val a = stats.select(col("block_key"), col("base_name").as("a_name"),
       col("token_key").as("a_tk"))
@@ -35,10 +36,49 @@ class MatchingSpec extends AnyFunSuite {
       .where((col("token_match") && col("ratio") >= 0.85) || col("ratio") >= 0.90)
     val expected = pairSet(plain)
     assert(expected.nonEmpty)
+    // the ANN caller of the same salted join: cosine pairs within a
+    // bucket against the brute-force same-bucket cosine set
+    import graft.ext.Ann
+    val rnd = new scala.util.Random(11)
+    val vecs = Ann.prepared((0L until 90L).map { i =>
+      (i, Array.tabulate(4)(_ => rnd.nextFloat()))
+    }.toDF("vec_id", "embedding")).withColumn("bucket", col("vec_id") % 3).cache()
+    val bruteForce = vecs.as("a").join(vecs.as("b"),
+      col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
+      .where(Ann.cosine(col("a.u"), col("b.u")) >= 0.9)
+      .select(col("a.vec_id"), col("b.vec_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(bruteForce.nonEmpty)
     for (salt <- Seq(1, 2, 7, 96)) {
       assert(pairSet(Matching.qualifyingPairs(stats, salt = salt)) == expected,
         s"salt=$salt")
+      val ann = Ann.saltedCosinePairs(vecs, minCos = 0.9, salt = salt)
+        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(ann.length == ann.toSet.size && ann.toSet == bruteForce, s"ANN salt=$salt")
     }
+  }
+
+  test("bucket histogram equals a driver fold of the same keys under every cap policy") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    val rows = (1 to 400).map(_ => (rnd.nextInt(3), rnd.nextInt(40) % (1 + rnd.nextInt(12))))
+    val sizes = rows.groupMapReduce(identity)(_ => 1L)(_ + _).values
+    val cap = sizes.max - 3
+    val df = rows.toDF("band", "val")
+    for ((policy, hotPairs) <- Seq("no cap" -> -1L, "drop" -> 0L, "neighborhood" -> 7L)) {
+      val c = if (hotPairs < 0) Long.MaxValue else cap
+      val got = Matching.BucketHistogram.of(
+        Matching.bucketHistogram(df, Seq("band", "val"), c, hotPairs max 0L).head())
+      val hot = sizes.filter(_ > c)
+      val expected = Matching.BucketHistogram(sizes.sum, sizes.max,
+        sizes.map(n => n * (n - 1) / 2).sum,
+        sizes.map(n => if (n > c) n * (hotPairs max 0L) else n * (n - 1) / 2).sum,
+        hot.sum)
+      assert(got == expected, policy)
+      assert((hotPairs < 0) == hot.isEmpty, policy)
+    }
+    assert(Matching.BucketHistogram.of(Matching.bucketHistogram(
+      df.limit(0), Seq("band", "val")).head()) == Matching.BucketHistogram(0, 0, 0, 0, 0))
   }
 
   test("cost governor: drop policy excludes over-cap blocks, keeps the rest intact") {

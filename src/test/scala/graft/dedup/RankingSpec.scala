@@ -39,6 +39,14 @@ class RankingSpec extends AnyFunSuite {
     // ranks are 1..n per block, no gaps
     assert(got.filter(_._1 == "B_big").map(_._3) == (1 to 5000).toSet)
     assert(got.filter(_._1 == "A_small").map(_._3) == (1 to 37).toSet)
+
+    // a numeric key and order (the ANN hot-bucket rank): same ranks
+    val byId = stats.select((col("min_row") % 3).as("bucket"), col("min_row").as("vec_id"))
+    def ranks(df: org.apache.spark.sql.DataFrame) = df.select("bucket", "vec_id", "rnk")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(ranks(Matching.blockRanked(byId, parts = 8, key = "bucket", order = "vec_id")) ==
+      ranks(byId.withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("bucket").orderBy("vec_id")))))
   }
 
   test("sortedNeighborhoodPairs is rank-path-independent") {
@@ -51,29 +59,11 @@ class RankingSpec extends AnyFunSuite {
       f.select("a_name", "b_name").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
     val viaWindow = pairsVia(Matching.sortedNeighborhoodPairs(stats, window = 5))
-    // force the distributed ranking by feeding blockRanked directly
-    // through the same fan-out shape: equality of the rank columns
-    // (test above) plus this end-to-end check on the public surface
     assert(viaWindow.nonEmpty)
-    val ranked = Matching.blockRanked(stats, parts = 8)
-    val viaDistributed = {
-      val a = ranked.select(col("block_key"), col("base_name").as("a_name"),
-        col("min_row").as("a_min_row"), col("max_row").as("a_max_row"),
-        col("token_key").as("a_token_key"),
-        explode(sequence(col("rnk") + 1, col("rnk") + 4)).as("rnk"))
-      val b = ranked.select(col("block_key"), col("base_name").as("b_name"),
-        col("min_row").as("b_min_row"), col("max_row").as("b_max_row"),
-        col("token_key").as("b_token_key"), col("rnk"))
-      import graft.functions.functions.jaro_winkler
-      val s = DedupSettings()
-      a.join(b, Seq("block_key", "rnk"))
-        .withColumn("ratio", jaro_winkler(col("a_name"), col("b_name")))
-        .withColumn("token_match", col("a_token_key") === col("b_token_key"))
-        .where((col("token_match") && col("ratio") >= s.softThreshold) ||
-          col("ratio") >= s.hardThreshold)
-        .select("a_name", "b_name").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    }
+    // force the distributed ranking: the same neighborhood join and
+    // predicate over blockRanked's ranks
+    val viaDistributed = pairsVia(Matching.rankedNeighborhoodPairs(
+      Matching.blockRanked(stats, parts = 8), window = 5, DedupSettings()))
     assert(viaDistributed == viaWindow)
   }
 }

@@ -62,6 +62,10 @@ class AnnCapGovernorSpec extends AnyFunSuite {
       Ann.saltedCosinePairs(rows, minCos = 0.5, bucketCap = Some(16), window = 8))
     assert(capped.nonEmpty && capped.subsetOf(uncapped))
     assert(capped.size < uncapped.size)
+    // a hot-member count past the rank threshold ranks the hot bucket
+    // through the distributed two-pass rank: the same pairs
+    assert(pairSet(Ann.saltedCosinePairs(rows, minCos = 0.5, bucketCap = Some(16),
+      window = 8, hotMembers = Long.MaxValue)) == capped)
     // the small bucket's pairs survive in full: C(10,2) = 45
     val smallPairs = capped.filter(_._1 >= 100L)
     assert(smallPairs.size == 45)
