@@ -18,41 +18,32 @@ import org.apache.spark.sql.functions._
   * name side is small. */
 object Matching {
 
-  /** The size of a name index: distinct names, implied pairs
-    * Σ C(|block|, 2) and the largest block's name count. The name-level
-    * stage picks its regime from this row (the driver fast path gate and
-    * CC's edge bound). */
-  final case class StageSizing(names: Long, impliedPairs: Long, maxBlockNames: Long)
-
-  object StageSizing {
-    /** The sizing of a collected index from its rows' block keys — the
-      * driver fold that gives the same row as [[stageSizing]]. */
-    def ofBlocks(blockKeys: Iterable[String]): StageSizing = {
-      val sizes = blockKeys.groupMapReduce(identity)(_ => 1L)(_ + _).values
-      if (sizes.isEmpty) StageSizing(0L, 0L, 0L)
-      else StageSizing(sizes.sum, sizes.map(b => b * (b - 1) / 2).sum, sizes.max)
-    }
-  }
-
-  /** [[StageSizing]] of a (materialized) name index: the
-    * [[bucketHistogram]] of its blocks. `Pipeline.runDerived` runs it
-    * only above the driver gate, for an index it does not collect;
-    * below the gate it folds the same row from the collected rows
-    * ([[StageSizing.ofBlocks]]). */
-  def stageSizing(stats: DataFrame): StageSizing = {
-    val h = BucketHistogram.of(bucketHistogram(stats, Seq("block_key")).head())
-    StageSizing(h.members, h.pairs, h.maxBucket)
-  }
-
   /** One row of [[bucketHistogram]]: members, the largest bucket,
-    * Σ C(n, 2) over all buckets, the pair bound under the cap, and the
-    * members of over-cap buckets. */
+    * Σ C(n, 2) over all buckets, the pair bound under the cap, the
+    * members of over-cap buckets, the bucket count and the over-cap
+    * bucket count. Over a name index's blocks ([[indexHistogram]]) it
+    * is the index's only sizing row: the driver gate, the cost
+    * governor's split, the salt and CC's edge bound (the uncapped
+    * `pairs`) all read it. */
   final case class BucketHistogram(members: Long, maxBucket: Long, pairs: Long,
-      cappedPairs: Long, hotMembers: Long)
+      cappedPairs: Long, hotMembers: Long, buckets: Long, hotBuckets: Long)
 
   object BucketHistogram {
     def of(r: Row): BucketHistogram =
-      BucketHistogram(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      BucketHistogram(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getLong(5), r.getLong(6))
+
+    /** The same row folded on the driver from one key per member —
+      * [[bucketHistogram]] over the collected keys, without a job. */
+    def ofBlocks(keys: Iterable[Any], cap: Long = Long.MaxValue,
+        hotPairs: Long = 0L): BucketHistogram = {
+      val sizes = keys.groupMapReduce(identity)(_ => 1L)(_ + _).values
+      val hot = sizes.filter(_ > cap)
+      def tri(n: Long) = n * (n - 1) / 2
+      BucketHistogram(sizes.sum, if (sizes.isEmpty) 0L else sizes.max, sizes.map(tri).sum,
+        sizes.map(n => if (n > cap) n * hotPairs else tri(n)).sum, hot.sum,
+        sizes.size.toLong, hot.size.toLong)
+    }
   }
 
   /** The bucket histogram of `rows` grouped by `keys` as one 1-row
@@ -60,10 +51,11 @@ object Matching {
     * capped_pairs = the candidate bound when buckets over `cap` each
     * member pair `hotPairs` times (`window − 1` under a
     * sorted-neighborhood policy, 0 when they are dropped) and the rest
-    * pair fully, and hot_members = the members of over-cap buckets.
-    * Read it with [[BucketHistogram.of]]. The name stage sizes its
-    * index with it, and the ANN, text and image governors memoize it
-    * under their own keys. Zeros on empty input. */
+    * pair fully, hot_members = the members of over-cap buckets,
+    * buckets and hot_buckets. Read it with [[BucketHistogram.of]]. The
+    * name stage sizes its index with it once ([[indexHistogram]]), and
+    * the ANN, text and image governors memoize it under their own keys.
+    * Zeros on empty input. */
   def bucketHistogram(rows: DataFrame, keys: Seq[String], cap: Long = Long.MaxValue,
       hotPairs: Long = 0L): DataFrame = {
     // n·(n-1) is always even, so the long cast after the halving is exact
@@ -75,8 +67,33 @@ object Matching {
         coalesce(max(col("_n")), lit(0L)).as("max_bucket"),
         total(tri).as("pairs"),
         total(when(hot, col("_n") * hotPairs).otherwise(tri)).as("capped_pairs"),
-        total(when(hot, col("_n")).otherwise(0L)).as("hot_members"))
+        total(when(hot, col("_n")).otherwise(0L)).as("hot_members"),
+        count(lit(1)).as("buckets"),
+        total(when(hot, 1L).otherwise(0L)).as("hot_buckets"))
   }
+
+  /** The governor's cap and the pairs each over-cap member yields
+    * under `settings` (window − 1, or 0 when hot blocks are dropped):
+    * the histogram arguments of a name index. */
+  private def governorCap(settings: DedupSettings): Long =
+    settings.maxBlockNames.getOrElse(Long.MaxValue)
+  private def hotPairsPerName(settings: DedupSettings): Long =
+    (settings.hotBlockWindow - 1L) max 0L
+
+  /** The sizing row of a (materialized) name index: the
+    * [[bucketHistogram]] of its blocks under the governor's cap.
+    * `Pipeline.runDerived` runs it only above the driver gate, for an
+    * index it does not collect; below the gate it folds the same row
+    * from the collected block keys (the overload below). */
+  private[dedup] def indexHistogram(stats: DataFrame, settings: DedupSettings): BucketHistogram =
+    BucketHistogram.of(bucketHistogram(stats, Seq("block_key"), governorCap(settings),
+      hotPairsPerName(settings)).head())
+
+  /** [[indexHistogram]] folded on the driver from a collected index's
+    * block keys. */
+  private[dedup] def indexHistogram(blockKeys: Iterable[String],
+      settings: DedupSettings): BucketHistogram =
+    BucketHistogram.ofBlocks(blockKeys, governorCap(settings), hotPairsPerName(settings))
 
   /** The name index on the driver, in the column order
     * [[driverNameTable]] reads: block_key, base_name, n_rows, min_row,
@@ -89,10 +106,10 @@ object Matching {
     * it paid, and the sizing row the regime was chosen from. Mirrors
     * [[Cluster.lastStats]]: observability only, thread-local, no
     * production branching. */
-  final case class StageStats(regime: String, jwPasses: Int, sizing: StageSizing)
+  final case class StageStats(regime: String, jwPasses: Int, sizing: BucketHistogram)
   private val lastStageTl = new ThreadLocal[StageStats]
   def lastStageStats: Option[StageStats] = Option(lastStageTl.get)
-  private[dedup] def recordStage(regime: String, jwPasses: Int, sizing: StageSizing): Unit =
+  private[dedup] def recordStage(regime: String, jwPasses: Int, sizing: BucketHistogram): Unit =
     lastStageTl.set(StageStats(regime, jwPasses, sizing))
 
   /** Distinct-name statistics per block. `min_row` doubles as the
@@ -159,62 +176,59 @@ object Matching {
       settings: DedupSettings = DedupSettings(), salt: Int = 0,
       pinSink: DataFrame => Unit = _ => ()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    governedPairs(stats, settings, pinSink)(
-      allPairs(_, settings, salt, _),
-      rankedNeighborhoodPairs(_, settings.hotBlockWindow, settings))
+    sizedPairs(stats, indexHistogram(stats, settings), settings, salt, pinSink)
   }
 
-  /** The cost governor's split of a name index (default ON): blocks over
+  /** [[qualifyingPairsPrepared]] over an index already sized by
+    * `sizing` ([[indexHistogram]] under the same settings). */
+  private def sizedPairs(stats: DataFrame, sizing: => BucketHistogram, settings: DedupSettings,
+      salt: Int = 0, pinSink: DataFrame => Unit = _ => ()): DataFrame =
+    governedPairs(stats, sizing, settings, salt, pinSink)(
+      allPairs(_, settings, _, _),
+      rankedNeighborhoodPairs(_, settings.hotBlockWindow, settings))
+
+  /** The cost governor's split of a name index (default ON), read off
+    * its sizing row ([[indexHistogram]]): blocks over
     * `settings.maxBlockNames` switch from full pairing to the
     * sorted-neighborhood O(|b|·w) policy (or are dropped when
-    * hotBlockWindow <= 1), bounding the quadratic worst case. One
-    * single-row aggregate sizes the whole plan: the over-cap key list
-    * is bounded (each hot block holds > cap names, so ≤ |names|/cap
-    * keys), the small-side name count picks the salt and the hot-side
-    * name count picks the rank path ([[ranked]]) without another job.
-    * `full(names, knownNames)` pairs the under-cap blocks (knownNames
-    * < 0 = not sized), `hot(ranked)` the over-cap ones, ranked within
-    * their blocks by name; the row-returning pairs and
-    * [[pairProfile]]'s slim feed pass their own builders. */
-  private def governedPairs(stats: DataFrame, settings: DedupSettings,
-      pinSink: DataFrame => Unit = _ => ())(
-      full: (DataFrame, Long) => DataFrame, hot: DataFrame => DataFrame): DataFrame =
-    settings.maxBlockNames match {
-      case Some(cap) =>
-        val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
-          .agg(
-            collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
-            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"),
-            sum(when(col("_bn") > cap, col("_bn"))).as("_hotNames"))
-          .head()
-        val hotKeys = sized.getSeq[String](0)
-        val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-        if (hotKeys.isEmpty) full(stats, smallNames)
-        else {
-          val policy =
-            if (settings.hotBlockWindow > 1)
-              s"sorted-neighborhood(window=${settings.hotBlockWindow})"
-            else "drop"
-          log.warn(s"cost governor: ${hotKeys.length} block(s) exceed " +
-            s"maxBlockNames=$cap — applying $policy to their pairs")
-          val spark = stats.sparkSession
-          import spark.implicits._
-          val hotDf = broadcast(hotKeys.toDF("block_key"))
-          val base = full(stats.join(hotDf, Seq("block_key"), "left_anti"), smallNames)
-          if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(hot(ranked(stats.join(hotDf, Seq("block_key"), "left_semi"),
-            "block_key", "base_name", sized.getLong(2), pinSink, settings.reliableCheckpoints)))
-        }
-      case None => full(stats, -1L)
+    * hotBlockWindow <= 1), bounding the quadratic worst case. No
+    * over-cap block means no split at all; otherwise one count window
+    * over `block_key` (the [[bandCandidates]] idiom) splits the index,
+    * and the row's hot_members picks the rank path ([[ranked]]).
+    * `full(names, s, parts)` pairs the under-cap blocks over `s` salt
+    * chunks and `parts` join partitions, `hot(ranked)` the over-cap
+    * ones, ranked within their blocks by name; the row-returning pairs
+    * and [[pairProfile]]'s slim feed pass their own builders.
+    *
+    * Salt: a pinned `salt` > 0 sets both. Otherwise the fan-out follows
+    * the largest under-cap block (at most max_bucket and the cap) and
+    * the partitions the names full pairing sees — the REPOSE split
+    * follows the skew, not the corpus: under 500 → 4, else 96. A
+    * 44k-name index of ≤ 11-name blocks keeps 96 partitions but fans
+    * each name out to 4 chunks, not 96. Without a cap a pinned salt
+    * reads nothing off the row, so `sizing` is only run when read. */
+  private def governedPairs(stats: DataFrame, sizing: => BucketHistogram,
+      settings: DedupSettings, salt: Int = 0, pinSink: DataFrame => Unit = _ => ())(
+      full: (DataFrame, Int, Int) => DataFrame, hot: DataFrame => DataFrame): DataFrame = {
+    lazy val h = sizing
+    val cap = governorCap(settings)
+    def chunks(n: Long) = if (n < 500) 4 else 96
+    val (s, parts) =
+      if (salt > 0) (salt, salt) else (chunks(h.maxBucket min cap), chunks(h.members - h.hotMembers))
+    if (settings.maxBlockNames.isEmpty || h.hotMembers == 0) full(stats, s, parts)
+    else {
+      val policy =
+        if (settings.hotBlockWindow > 1) s"sorted-neighborhood(window=${settings.hotBlockWindow})"
+        else "drop"
+      log.warn(s"cost governor: ${h.hotBuckets} block(s) exceed " +
+        s"maxBlockNames=$cap — applying $policy to their pairs")
+      val sized = stats.withColumn("_bn", count(lit(1)).over(Window.partitionBy("block_key")))
+      def side(c: Column) = sized.filter(c).drop("_bn")
+      val base = full(side(col("_bn") <= cap), s, parts)
+      if (settings.hotBlockWindow <= 1) base
+      else base.unionByName(hot(ranked(side(col("_bn") > cap), "block_key", "base_name",
+        h.hotMembers, pinSink, settings.reliableCheckpoints)))
     }
-
-  /** Salt chunks for full pairing when the caller pins none: tiny name
-    * sets skip the wide fan-out (a 96-way shuffle of 64 names is pure
-    * scheduling overhead), big ones get full parallelism. `knownNames`
-    * < 0 → count here (one cheap job over the checkpoint). */
-  private def adaptiveSalt(capped: DataFrame, knownNames: Long): Int = {
-    val n = if (knownNames >= 0) knownNames else capped.count()
-    if (n < 500) 4 else 96
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -236,12 +250,11 @@ object Matching {
     * block over the governor cap (the hot-block policy is a distributed
     * concern), or more than [[DriverImpliedPairs]] implied pairs. */
   private[dedup] def driverNameTable(spark: SparkSession, rows: Array[Row],
-      sizing: StageSizing, settings: DedupSettings = DedupSettings()): Option[DataFrame] = {
+      sizing: BucketHistogram, settings: DedupSettings = DedupSettings()): Option[DataFrame] = {
     import org.apache.spark.unsafe.types.UTF8String
     val fits = settings.driverFastPathNames > 0 &&
-      sizing.names <= settings.driverFastPathNames &&
-      sizing.impliedPairs <= DriverImpliedPairs &&
-      settings.maxBlockNames.forall(sizing.maxBlockNames <= _)
+      sizing.members <= settings.driverFastPathNames &&
+      sizing.pairs <= DriverImpliedPairs && sizing.hotMembers == 0
     if (!fits) return None
     val n = rows.length
     val name = rows.map(r => UTF8String.fromString(r.getString(1)))
@@ -377,7 +390,7 @@ object Matching {
     * edges ≤ qualifying pairs ≤ implied pairs); the candidates go to
     * [[nameTable]]. Bit-identical to [[driverNameTable]]
     * (DistributedRegimeSpec). */
-  private[dedup] def distributedNameTable(stats: DataFrame, sizing: StageSizing,
+  private[dedup] def distributedNameTable(stats: DataFrame, sizing: BucketHistogram,
       settings: DedupSettings): DataFrame = {
     val spark = stats.sparkSession
     import spark.implicits._
@@ -387,7 +400,7 @@ object Matching {
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val confs = Array(Rules.ConfTokenAndRatio, Rules.ConfHardRatio, Rules.ConfSoftRatio)
     val folded = graft.core.Frames.materialize(
-      qualifyingPairsPrepared(stats, settings, pinSink = pins += _)
+      sizedPairs(stats, sizing, settings, pinSink = pins += _)
         .select("a_min_row", "b_min_row", "a_name", "b_name", "a_max_row", "b_max_row", "pair_conf")
         .as[(Long, Long, String, String, Long, Long, Double)]
         .mapPartitions { it =>
@@ -414,7 +427,7 @@ object Matching {
     pins.foreach(graft.core.Frames.release)
     val comps = Cluster.connectedComponents(
       folded.filter(col("cand_name").isNull).select("src", "dst"),
-      edgeCountHint = sizing.impliedPairs, reliable = reliable)
+      edgeCountHint = sizing.pairs, reliable = reliable)
     recordStage("distributed", 1, sizing)
     nameTable(stats, comps, folded.filter(col("cand_name").isNotNull)
       .select("cand_name", "cand_conf", "partner_max_row"))
@@ -439,7 +452,7 @@ object Matching {
   def pairProfile(stats: DataFrame,
       settings: DedupSettings = DedupSettings()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    val slim = governedPairs(stats, settings)(
+    val slim = governedPairs(stats, indexHistogram(stats, settings), settings)(
       slimPairs, slimSorted(_, settings.hotBlockWindow))
     val qual = qualifies(settings)
     slim.agg(
@@ -455,12 +468,10 @@ object Matching {
 
   /** [[allPairs]] slimmed to (ratio, token_match), no predicate, no
     * canonical swap — the profile-aggregation feed. */
-  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame = {
-    val s = adaptiveSalt(capped, knownNames)
-    saltedSelfJoin(named(capped), "block_key", Seq("name", "token_key"), s, s)
+  private def slimPairs(capped: DataFrame, s: Int, parts: Int): DataFrame =
+    saltedSelfJoin(named(capped), "block_key", Seq("name", "token_key"), s, parts)
       .select(jaro_winkler(col("l_name"), col("r_name")).as("ratio"),
         (col("l_token_key") === col("r_token_key")).as("token_match"))
-  }
 
   /** [[rankedNeighborhoodPairs]] slimmed the same way. */
   private def slimSorted(rankedStats: DataFrame, window: Int): DataFrame =
@@ -470,31 +481,25 @@ object Matching {
 
   /** Data-visible cost-governor report (ADVICE r2: divergence from
     * exact reference semantics should be observable in data, not only
-    * a warn line). One row: how many blocks exist, how many exceed
+    * a warn line). One row, a projection of the index's
+    * [[bucketHistogram]]: how many blocks exist, how many exceed
     * `settings.maxBlockNames` (and thus run under the hot-block
     * policy instead of full pairing), and how many distinct names
     * those governed blocks hold. */
   def governorStats(stats: DataFrame,
-      settings: DedupSettings = DedupSettings()): DataFrame = {
-    val cap = settings.maxBlockNames.getOrElse(Long.MaxValue)
-    stats.groupBy("block_key").agg(count(lit(1)).as("n_names"))
-      .agg(
-        count(lit(1)).as("total_blocks"),
-        coalesce(sum(when(col("n_names") > cap, 1L).otherwise(0L)), lit(0L))
-          .as("governed_blocks"),
-        coalesce(sum(when(col("n_names") > cap, col("n_names")).otherwise(0L)), lit(0L))
-          .as("governed_names"))
-  }
+      settings: DedupSettings = DedupSettings()): DataFrame =
+    bucketHistogram(stats, Seq("block_key"), governorCap(settings))
+      .select(col("buckets").as("total_blocks"), col("hot_buckets").as("governed_blocks"),
+        col("hot_members").as("governed_names"))
 
-  /** Full within-block pairing (salted; see the scaladoc above).
-    * `capped` is (derived from) the checkpointed name index, so the
-    * two join sides re-read materialized blocks, not the upstream
-    * aggregation. `salt` > 0 pins the chunk count, otherwise
-    * [[adaptiveSalt]] picks it. */
+  /** Full within-block pairing over `s` salt chunks and `parts` join
+    * partitions (salted; see the scaladoc above; [[governedPairs]]
+    * picks both). `capped` is (derived from) the checkpointed name
+    * index, so the two join sides re-read materialized blocks, not the
+    * upstream aggregation. */
   private def allPairs(capped: DataFrame, settings: DedupSettings,
-      salt: Int, knownNames: Long): DataFrame = {
-    val s = if (salt > 0) salt else adaptiveSalt(capped, knownNames)
-    val joined = saltedSelfJoin(named(capped), "block_key", NameColumns, s, s)
+      s: Int, parts: Int): DataFrame = {
+    val joined = saltedSelfJoin(named(capped), "block_key", NameColumns, s, parts)
     // canonical a<b orientation regardless of which chunk fanned out
     val aIsL = col("l_name") < col("r_name")
     qualified(joined.select(
@@ -536,7 +541,8 @@ object Matching {
     * partitions: the pre-join shuffle is tiny (ids), so AQE would
     * coalesce it to one partition and serialize the O(|key|²) pair
     * explosion that happens INSIDE the join. A user repartition pins
-    * the parallelism. The name stage passes `parts = s`, ANN 4·s. */
+    * the parallelism. The name stage sizes `s` from its largest block
+    * and `parts` from its names ([[governedPairs]]), ANN passes 4·s. */
   private[graft] def saltedSelfJoin(rows: DataFrame, key: String, cols: Seq[String],
       s: Int, parts: Int): DataFrame = {
     val id = cols.head

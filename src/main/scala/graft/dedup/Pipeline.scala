@@ -112,10 +112,11 @@ object Pipeline {
     // sizing, pair join sides, name-table aggregates) reads the blocks.
     // The materialization also counts the names (an Observation), so an
     // index under the driver gate is collected once and sized from its
-    // rows, with no separate sizing query; above the gate ONE sizing
-    // aggregate runs instead. Either way the driver fast-path gate and
-    // CC's edge bound read the same sizing row, and it is recorded with
-    // the regime (StageStats).
+    // rows, with no separate sizing query; above the gate ONE bucket
+    // histogram runs instead. Either way one sizing row
+    // (Matching.BucketHistogram) drives the driver fast-path gate, the
+    // cost governor's split, the salt and CC's edge bound, and it is
+    // recorded with the regime (StageStats).
     val counted = Observation()
     val stats = graft.core.Frames.materialize(
       Matching.nameStats(derived).observe(counted, count(lit(1)).as("names")),
@@ -124,8 +125,8 @@ object Pipeline {
     val index =
       if (gate > 0 && observedCount(counted).exists(_ <= gate)) Some(Matching.collectIndex(stats))
       else None
-    val sizing = index.fold(Matching.stageSizing(stats))(rows =>
-      Matching.StageSizing.ofBlocks(rows.map(_.getString(0))))
+    val sizing = index.fold(Matching.indexHistogram(stats, settings))(rows =>
+      Matching.indexHistogram(rows.map(_.getString(0)), settings))
 
     // --- the name table: one row per distinct base name with its
     // cluster id, cluster size, elected canonical name and A.1

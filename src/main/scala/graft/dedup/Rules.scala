@@ -94,14 +94,14 @@ final case class DedupSettings(
     * directory has not been set" (ADVICE r19). Idempotent. */
   def engageCheckpoints(spark: org.apache.spark.sql.SparkSession): Unit =
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-  // The governor sizing aggregate collects the over-cap key list into
-  // one driver row, bounded by |distinct blocks| / cap — a degenerate
-  // cap (e.g. 1) would degrade that bound to every block key in a
-  // single row. Floor it so the list stays a small fraction of blocks
-  // (≤ |names|/8 keys — a few MB even at 100× customer scale).
+  // A degenerate cap (e.g. 1) governs nearly every block: the governor
+  // then splits and ranks almost the whole index although a block of
+  // at most hotBlockWindow names pairs fully under either policy. Floor
+  // it so a misconfigured cap fails fast instead of quietly paying the
+  // split and the rank.
   maxBlockNames.foreach(cap => require(cap >= DedupSettings.MinBlockNamesCap,
     s"maxBlockNames=$cap below sanity floor ${DedupSettings.MinBlockNamesCap}: " +
-      "the governor's hot-key list is bounded by |blocks|/cap rows on the driver"))
+      "such a cap governs nearly every block"))
 
   /** Acronym rewrite map = defaults overridden by user entries
     * (engine.py:34-41). */

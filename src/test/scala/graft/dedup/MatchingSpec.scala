@@ -73,12 +73,16 @@ class MatchingSpec extends AnyFunSuite {
       val expected = Matching.BucketHistogram(sizes.sum, sizes.max,
         sizes.map(n => n * (n - 1) / 2).sum,
         sizes.map(n => if (n > c) n * (hotPairs max 0L) else n * (n - 1) / 2).sum,
-        hot.sum)
+        hot.sum, sizes.size.toLong, hot.size.toLong)
       assert(got == expected, policy)
       assert((hotPairs < 0) == hot.isEmpty, policy)
+      // the driver fold over the same keys gives the same row
+      assert(Matching.BucketHistogram.ofBlocks(rows, c, hotPairs max 0L) == got, policy)
     }
+    val empty = Matching.BucketHistogram(0, 0, 0, 0, 0, 0, 0)
     assert(Matching.BucketHistogram.of(Matching.bucketHistogram(
-      df.limit(0), Seq("band", "val")).head()) == Matching.BucketHistogram(0, 0, 0, 0, 0))
+      df.limit(0), Seq("band", "val")).head()) == empty)
+    assert(Matching.BucketHistogram.ofBlocks(Nil) == empty)
   }
 
   test("cost governor: drop policy excludes over-cap blocks, keeps the rest intact") {

@@ -103,13 +103,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(fast.length == 60 && fast.toSeq == dist.toSeq)
   }
 
-  /** `body`'s result and whether any query it ran planned an aggregate
-    * grouped by `block_key` alone — the shape of the stage-sizing and
-    * governor aggregates over a name index. Query-execution listeners
-    * are called asynchronously, so this waits (up to 30 s) for a marker
-    * query's callback, which comes after every earlier query's. */
-  private def withBlockKeyAggregates[T](body: => T): (T, Boolean) = {
-    val seen = new java.util.concurrent.atomic.AtomicBoolean
+  /** `body`'s result and how many of the queries it ran planned an
+    * aggregate grouped by `block_key` alone — the shape of the sizing
+    * histogram over a name index. Query-execution listeners are called
+    * asynchronously, so this waits (up to 30 s) for a marker query's
+    * callback, which comes after every earlier query's. */
+  private def withBlockKeyAggregates[T](body: => T): (T, Int) = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
     val done = new java.util.concurrent.atomic.AtomicLong
     def blockKeyOnly(qe: QueryExecution): Boolean = qe.optimizedPlan.exists {
       case a: Aggregate => a.groupingExpressions.map {
@@ -120,7 +120,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        if (blockKeyOnly(qe)) seen.set(true)
+        if (blockKeyOnly(qe)) seen.incrementAndGet()
         done.incrementAndGet()
       }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
@@ -150,11 +150,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(atGate.length == 60 && atGate == below)
     assert(atStage.regime == "driver-fast-path" && belowStage.regime == "distributed")
     // the driver fold over the collected index and the aggregate agree
-    assert(atStage.sizing == belowStage.sizing && atStage.sizing.names == n, atStage)
+    assert(atStage.sizing == belowStage.sizing && atStage.sizing.members == n, atStage)
     // the fast path sized the index from its rows; above the gate the
-    // sizing aggregate ran (which also shows the listener sees it)
-    assert(!atGateAggregates)
-    assert(belowAggregates)
+    // sizing aggregate ran once (which also shows the listener sees it)
+    assert(atGateAggregates == 0)
+    assert(belowAggregates == 1)
+  }
+
+  test("a distributed run sizes its name index once, governed or not") {
+    import spark.implicits._
+    // the near-dup rows plus one 12-name block, which a cap of 9 governs
+    val big = (0 until 12).map(i => (100L + i, s"BIGBLOCK ${('A' + i).toChar}QXZ"))
+    val df = nearDupRows.union(big.toDF("id", "nm"))
+    for ((cap, governed) <- Seq(DedupSettings().maxBlockNames -> 0L, Some(9L) -> 1L)) {
+      val ((rows, stage), sizingQueries) = withBlockKeyAggregates {
+        val settings = DedupSettings(maxBlockNames = cap, driverFastPathNames = 0L)
+        (Pipeline.run(df, "nm", "id", settings).collect(), Matching.lastStageStats.get)
+      }
+      assert(rows.length == 72 && stage.regime == "distributed", stage)
+      assert(stage.sizing.hotBuckets == governed && stage.sizing.maxBucket == 12L, stage)
+      assert(sizingQueries == 1, s"cap $cap: $sizingQueries sizing queries")
+    }
   }
 
   /** The Appendix A row rules computed directly on rows, independently

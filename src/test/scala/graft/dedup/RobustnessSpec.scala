@@ -130,13 +130,15 @@ class RobustnessSpec extends AnyFunSuite {
     // the recorded sizing is the index's own: names, Σ C(b,2), max block
     val blocks = Matching.nameStats(Normalize.withDerived(df, "name", "id"))
       .groupBy("block_key").count().collect().map(_.getLong(1))
-    val expected = Matching.StageSizing(blocks.sum, blocks.map(b => b * (b - 1) / 2).sum, blocks.max)
-    assert(expected.names > 4096L && expected.maxBlockNames == 12L, expected)
-    assert(fastStage.sizing == expected && distStage.sizing == expected)
+    def sized(h: Matching.BucketHistogram) = (h.members, h.pairs, h.maxBucket)
+    val expected = (blocks.sum, blocks.map(b => b * (b - 1) / 2).sum, blocks.max)
+    assert(expected._1 > 4096L && expected._3 == 12L, expected)
+    assert(fastStage.sizing == distStage.sizing && sized(fastStage.sizing) == expected)
 
     // a block over the governor cap keeps the index off the driver
     val (_, cappedStage) = run(DedupSettings(maxBlockNames = Some(10L)))
     assert(cappedStage.regime == "distributed", cappedStage)
-    assert(cappedStage.sizing == expected)
+    assert(sized(cappedStage.sizing) == expected && cappedStage.sizing.hotMembers == 12L,
+      cappedStage)
   }
 }
