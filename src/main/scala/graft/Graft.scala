@@ -1,7 +1,8 @@
 package graft
 
-import graft.functions.{DotProduct, JaroWinklerSimilarity}
+import graft.functions.{DotProduct, JaroWinklerSimilarity, TopKBy, UnicodeNorm}
 import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Library facade: one call makes every graft-native Catalyst
   * expression available to SQL users of the session.
@@ -14,17 +15,16 @@ import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
   * Or cluster-wide via config (no code change):
   * `--conf spark.sql.extensions=graft.GraftExtensions`. */
 object Graft {
-  def install(spark: SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "jaro_winkler",
-      es => JaroWinklerSimilarity(es(0), es(1)))
-    GraftBridge.registerFunction(spark, "dot_product",
-      es => DotProduct(es(0), es(1)))
-    GraftBridge.registerFunction(spark, "unicode_norm",
-      es => functions.UnicodeNorm(es(0), es(1)))
-    GraftBridge.registerFunction(spark, "top_k_by",
-      es => functions.TopKBy(es(0), es(1),
-        es(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression())
-  }
+  /** Every SQL function: (name, expression class, builder). */
+  private[graft] val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("jaro_winkler", classOf[JaroWinklerSimilarity], es => JaroWinklerSimilarity(es(0), es(1))),
+    ("dot_product", classOf[DotProduct], es => DotProduct(es(0), es(1))),
+    ("unicode_norm", classOf[UnicodeNorm], es => UnicodeNorm(es(0), es(1))),
+    ("top_k_by", classOf[TopKBy], es =>
+      TopKBy(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
+
+  def install(spark: SparkSession): Unit =
+    Functions.foreach { case (name, _, builder) => GraftBridge.registerFunction(spark, name, builder) }
 }
 
 /** `spark.sql.extensions` entry point. */
@@ -32,19 +32,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerSimilarity].getName, "jaro_winkler"),
-      es => JaroWinklerSimilarity(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      es => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("unicode_norm"),
-      new ExpressionInfo(classOf[functions.UnicodeNorm].getName, "unicode_norm"),
-      es => functions.UnicodeNorm(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("top_k_by"),
-      new ExpressionInfo(classOf[functions.TopKBy].getName, "top_k_by"),
-      es => functions.TopKBy(es(0), es(1),
-        es(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    Graft.Functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -1,4 +1,6 @@
 package graft
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** What the driver mains ([[Bench]], [[Verify]] and the `graft.tools`
@@ -10,7 +12,12 @@ object Mains {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
-    * time, no UI and WARN logging; `extra` confs are set on top. */
+    * time, no UI and WARN logging; `extra` confs are set on top. The
+    * stream family's per-query notices are logged at ERROR only: every
+    * state store's "state for version N doesn't exist in loadedMaps" on
+    * its first load (each store logs under its own name, below the
+    * `state` package) and the two "AQE is not supported" notices of
+    * every query start. */
   def localSession(extra: (String, String)*): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,6 +27,10 @@ object Mains {
     extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Seq("org.apache.spark.sql.execution.streaming.state",
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
+      .foreach(Configurator.setLevel(_, Level.ERROR))
     spark
   }
 

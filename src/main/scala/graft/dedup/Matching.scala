@@ -241,9 +241,10 @@ object Matching {
     * checkpoint, CC and the name-level aggregates of [[nameTable]]
     * (timings on [[DedupSettings.driverFastPathNames]]). Semantics are
     * bit-identical to [[distributedNameTable]]: the SAME
-    * [[graft.functions.JaroWinklerAlgo.similarity]] doubles, the same
-    * predicate and confidence ladder, min-label components, and the
-    * same election order (code-point length, UTF-8 byte order).
+    * [[graft.functions.JaroWinklerAlgo]] kernel (each name's code points
+    * read once, not once per pair), the same predicate and confidence
+    * ladder, min-label components, and the same election order
+    * (code-point length, UTF-8 byte order).
     *
     * Returns None — caller must use [[distributedNameTable]] — when
     * `sizing` shows more names than `settings.driverFastPathNames`, a
@@ -258,6 +259,7 @@ object Matching {
     if (!fits) return None
     val n = rows.length
     val name = rows.map(r => UTF8String.fromString(r.getString(1)))
+    val cps = name.map(graft.functions.NameKernel.codePoints)
     val nRows = rows.map(_.getLong(2))
     val minRow = rows.map(_.getLong(3))
     val maxRow = rows.map(_.getLong(4))
@@ -283,7 +285,7 @@ object Matching {
         var y = x + 1
         while (y < block.length) {
           val (i, j) = (block(x), block(y))
-          val ratio = graft.functions.JaroWinklerAlgo.similarity(name(i), name(j))
+          val ratio = graft.functions.JaroWinklerAlgo.similarity(cps(i), cps(j))
           val tok = tokenKey(i) == tokenKey(j)
           if ((tok && ratio >= settings.softThreshold) || ratio >= settings.hardThreshold) {
             val (ri, rj) = (find(i), find(j))

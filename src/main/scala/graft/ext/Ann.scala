@@ -226,8 +226,13 @@ object Ann {
     * (label, dim, cval). DECIMAL sums make the mean independent of
     * aggregation order. */
   def centroids(emb: DataFrame, labelCol: String = "label", embCol: String = "embedding"): DataFrame =
-    emb.select(col(labelCol).as("label"), posexplode(toDouble(col(embCol))).as(Seq("dim", "x")))
-      .groupBy("label", "dim")
+    labelMeans(emb.select(col(labelCol).as("label"),
+      posexplode(toDouble(col(embCol))).as(Seq("dim", "x"))))
+
+  /** (label, dim, cval): the mean of `x` per (label, dim) of `rows`,
+    * summed in DECIMAL. */
+  private def labelMeans(rows: DataFrame): DataFrame =
+    rows.groupBy("label", "dim")
       .agg((sum(col("x").cast("decimal(28,12)")).cast("double") / count(lit(1))).as("cval"))
 
   /** Squared L2 distance of each query to each centroid, rounded.
@@ -325,11 +330,8 @@ object Ann {
       // chain once more (ADVICE r9). Materializing the k·dim frame
       // costs one small job; the superseded round's blocks are
       // released immediately.
-      cent = base.join(labels.select("vec_id", "label"), Seq("vec_id"))
-        .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("label", "dim")
-        .agg((sum(col("x").cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("cval"))
+      cent = labelMeans(base.join(labels.select("vec_id", "label"), Seq("vec_id"))
+        .select(col("label"), posexplode(col("v")).as(Seq("dim", "x"))))
         .localCheckpoint(true)
       graft.core.Frames.release(prev)
     }

@@ -7,35 +7,29 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler algorithm (M1 in SURVEY.md §2.1), matching the
-  * jellyfish semantics the reference relies on
-  * (/root/reference/engine.py:202-203) and DuckDB's built-in
-  * `jaro_winkler_similarity` (the oracle), verified numerically:
+  * jellyfish semantics the reference relies on (its engine.py:202-203):
   *
   *  - match window = max(|s1|,|s2|)/2 - 1 (floor, min 0)
   *  - transpositions = (# mismatched matched positions) / 2,
   *    INTEGER division (DuckDB('ABCXXXX','BCAXXXX') = 20/21)
   *  - either side empty → 0.0 (DuckDB('','') = 0.0)
   *  - Winkler boost 0.1 · prefix(≤4) · (1−jaro), only when jaro > 0.7
-  */
+  *
+  * One kernel over code points, as jellyfish reads a Python `str`:
+  * a string reaches it through [[NameKernel.codePoints]] (ASCII bytes
+  * as they are, anything else decoded), so an astral character is one
+  * position, not a surrogate pair. DuckDB's `jaro_winkler_similarity`
+  * (the oracle) runs on UTF-8 bytes instead, so the two agree on ASCII
+  * names only — the oracle testdata and the fuzzer's name alphabet;
+  * JaroWinklerSpec pins non-ASCII values by hand. */
 object JaroWinklerAlgo {
-  /** Hot-path entry: ASCII inputs (the overwhelmingly common case for
-    * normalized names) run directly on the UTF8String bytes — no
-    * String materialization per comparison. Non-ASCII falls back to
-    * the String (UTF-16 code unit) path. */
-  def similarity(s1: UTF8String, s2: UTF8String): Double = {
-    val b1 = s1.getBytes
-    val b2 = s2.getBytes
-    if (isAscii(b1) && isAscii(b2)) computeBytes(b1, b2)
-    else compute(s1.toString, s2.toString)
-  }
+  /** The similarity of two strings' code points: the entry the
+    * codegen'd [[JaroWinklerSimilarity]] calls. */
+  def similarity(s1: UTF8String, s2: UTF8String): Double =
+    similarity(NameKernel.codePoints(s1), NameKernel.codePoints(s2))
 
-  private def isAscii(b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < b.length) { if (b(i) < 0) return false; i += 1 }
-    true
-  }
-
-  def computeBytes(a: Array[Byte], b: Array[Byte]): Double = {
+  /** The kernel, for callers that convert each string once. */
+  def similarity(a: Array[Int], b: Array[Int]): Double = {
     val len1 = a.length
     val len2 = b.length
     if (len1 == 0 || len2 == 0) return 0.0
@@ -82,56 +76,6 @@ object JaroWinklerAlgo {
     val maxPrefix = math.min(4, math.min(len1, len2))
     var l = 0
     while (l < maxPrefix && a(l) == b(l)) l += 1
-    jaro + l * 0.1 * (1.0 - jaro)
-  }
-
-  def compute(a: String, b: String): Double = {
-    val len1 = a.length
-    val len2 = b.length
-    if (len1 == 0 || len2 == 0) return 0.0
-    val range = math.max((if (len1 > len2) len1 else len2) / 2 - 1, 0)
-
-    val matched1 = new Array[Boolean](len1)
-    val matched2 = new Array[Boolean](len2)
-    var m = 0
-    var i = 0
-    while (i < len1) {
-      val lo = if (i - range > 0) i - range else 0
-      val hi = if (i + range < len2 - 1) i + range else len2 - 1
-      var j = lo
-      var found = false
-      while (!found && j <= hi) {
-        if (!matched2(j) && a.charAt(i) == b.charAt(j)) {
-          matched1(i) = true
-          matched2(j) = true
-          m += 1
-          found = true
-        }
-        j += 1
-      }
-      i += 1
-    }
-    if (m == 0) return 0.0
-
-    var mismatches = 0
-    var k = 0
-    i = 0
-    while (i < len1) {
-      if (matched1(i)) {
-        while (!matched2(k)) k += 1
-        if (a.charAt(i) != b.charAt(k)) mismatches += 1
-        k += 1
-      }
-      i += 1
-    }
-    val t = mismatches / 2
-    val md = m.toDouble
-    val jaro = (md / len1 + md / len2 + (md - t) / md) / 3.0
-    if (jaro <= 0.7) return jaro
-
-    val maxPrefix = math.min(4, math.min(len1, len2))
-    var l = 0
-    while (l < maxPrefix && a.charAt(l) == b.charAt(l)) l += 1
     jaro + l * 0.1 * (1.0 - jaro)
   }
 }

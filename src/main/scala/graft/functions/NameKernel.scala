@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    or before one final line terminator;
   *  - `trim` is Spark's: ASCII spaces only.
   *
-  * All-ASCII input (the common case) is read straight from the
-  * UTF8String bytes; anything else goes through `toString`, as the regex
-  * chain does, so even malformed UTF-8 comes out the same. */
+  * Input is read through [[codePoints]]: all-ASCII input (the common
+  * case) straight from the UTF8String bytes, anything else through
+  * `toString`, as the regex chain does, so even malformed UTF-8 comes
+  * out the same. */
 object NameKernel {
   private val WordTypes =
     (1 << Character.NON_SPACING_MARK) | (1 << Character.ENCLOSING_MARK) |
@@ -50,34 +51,41 @@ object NameKernel {
     (isWord(cp) || cp == '&' || cp == '/' || cp == '-') && !isSpace(cp)
   private val asciiKeeps = Array.tabulate(128)(keeps)
 
-  /** The code points of `s`, or null when it is not all ASCII. */
-  private[functions] def asciiCodePoints(s: UTF8String): Array[Int] = {
+  /** The code points of `s`: its bytes when it is all ASCII, else those
+    * of `s.toString`, which reads malformed UTF-8 as U+FFFD just as the
+    * regex chain does. The one string view of every kernel here and of
+    * [[JaroWinklerAlgo]]. */
+  private[graft] def codePoints(s: UTF8String): Array[Int] = {
     val n = s.numBytes
     val cps = new Array[Int](n)
     var i = 0
     while (i < n) {
       val b = s.getByte(i)
-      if (b < 0) return null
+      if (b < 0) return s.toString.codePoints().toArray
       cps(i) = b
       i += 1
     }
     cps
   }
 
-  private[functions] def toUtf8(cps: Array[Int], from: Int, until: Int, ascii: Boolean): UTF8String =
-    if (ascii) {
-      val b = new Array[Byte](until - from)
-      var i = from
-      while (i < until) { b(i - from) = cps(i).toByte; i += 1 }
-      UTF8String.fromBytes(b)
-    } else UTF8String.fromString(new String(cps, from, until - from))
+  /** `cps[from, until)` as UTF-8: byte by byte while it is ASCII, else
+    * through a String. */
+  private[functions] def toUtf8(cps: Array[Int], from: Int, until: Int): UTF8String = {
+    val b = new Array[Byte](until - from)
+    var i = from
+    while (i < until) {
+      if (cps(i) >= 128) return UTF8String.fromString(new String(cps, from, until - from))
+      b(i - from) = cps(i).toByte
+      i += 1
+    }
+    UTF8String.fromBytes(b)
+  }
 
   /** F1's punctuation and white-space pass over an upper-cased name:
     * every run of characters outside `[\w&/-]` (and every white space)
     * becomes one space, and the ends are trimmed. */
   def normalize(s: UTF8String): UTF8String = {
-    val ascii = asciiCodePoints(s)
-    val cps = if (ascii != null) ascii else s.toString.codePoints().toArray
+    val cps = codePoints(s)
     var j = 0
     var gap = false
     var i = 0
@@ -91,7 +99,7 @@ object NameKernel {
       } else gap = true
       i += 1
     }
-    toUtf8(cps, 0, j, ascii != null)
+    toUtf8(cps, 0, j)
   }
 }
 
@@ -107,8 +115,7 @@ final class TokenStripper(tokens: Seq[String], bound: Int) extends Serializable 
   private val startsWord: Array[Boolean] = toks.map(t => NameKernel.isWord(t(0)))
 
   def strip(s: UTF8String): UTF8String = {
-    val ascii = NameKernel.asciiCodePoints(s)
-    val cps = if (ascii != null) ascii else s.toString.codePoints().toArray
+    val cps = NameKernel.codePoints(s)
     var lo = 0
     var hi = cps.length
     var pass = 0
@@ -144,8 +151,8 @@ final class TokenStripper(tokens: Seq[String], bound: Int) extends Serializable 
       while (hi > lo && cps(hi - 1) == ' ') { hi -= 1; changed = true }
       pass += 1
     }
-    if (ascii != null && lo == 0 && hi == cps.length) s
-    else NameKernel.toUtf8(cps, lo, hi, ascii != null)
+    if (lo == 0 && hi == cps.length && s.isFullAscii) s
+    else NameKernel.toUtf8(cps, lo, hi)
   }
 
   /** Java's non-MULTILINE `$` at `e` in `cps[lo, hi)`: the end, before a

@@ -576,14 +576,8 @@ object AnnQueries {
       val p = prep(s, dir)
       val q = p.filter(probeSet)
       val truth = cosTruth(s, dir)
-      val approx = Ann.ivfSearchPrepared(labeledPrep(s, dir), ivfCent(s, dir),
-        q, nProbe = 2, k = TopK)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")) / count(lit(1)), 6).as("recall"))
-        .orderBy("query_id")
+      recallByQuery(truth, Ann.ivfSearchPrepared(labeledPrep(s, dir), ivfCent(s, dir),
+        q, nProbe = 2, k = TopK).select("query_id", "neighbor_id"))
     }),
 
     // nProbe-sizing curve: IVF recall@k at nProbe ∈ {1,2,4,8} over
@@ -743,15 +737,9 @@ object AnnQueries {
           (0 until PqSub).map(sub => col(s"di$sub")).reduce(_ + _).as("d2i"))
       val aw = Window.partitionBy("query_id")
         .orderBy(col("d2i").asc, col("vec_id").asc)
-      val approxTopk = approx
+      recallByQuery(l2Truth(s, dir), approx
         .withColumn("rk", row_number().over(aw)).filter(col("rk") <= TopK)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1).as("hit"))
-      l2Truth(s, dir).join(approxTopk, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")) / count(lit(1)), 6).as("recall"))
-        .orderBy("query_id")
+        .select(col("query_id"), col("vec_id").as("neighbor_id")))
     }),
 
     // the full SemDeDup pipeline end-to-end: k-means clustering over
@@ -934,15 +922,21 @@ object AnnQueries {
           Seq("query_id"))
         .withColumn("d2", exd2)
         .withColumn("rk", row_number().over(rw)).filter(col("rk") <= TopK)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), lit(1).as("hit"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"))
       // exact-L2 truth over the bounded probe set — the shared Memo'd
       // table every PQ-family audit scores against
-      l2Truth(s, dir).join(approxTopk, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")) / count(lit(1)), 6).as("recall"))
-        .orderBy("query_id")
+      recallByQuery(l2Truth(s, dir), approxTopk)
   }
+
+  /** The recall@k readout of an audit: per query, how many of its
+    * `truth` (query_id, neighbor_id) rows the `approx` search found,
+    * and that count over the query's truths. */
+  private def recallByQuery(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.join(approx.withColumn("hit", lit(1)), Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(col("hit")).as("n_hits"),
+        round(count(col("hit")) / count(lit(1)), 6).as("recall"))
+      .orderBy("query_id")
 
   /** Up to 16 deterministic hyperplanes for 64-dim embeddings
     * (md5-derived, regenerated bit-identically by any engine;

@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tables
 import graft.dedup.Matching
 import graft.ext.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -233,17 +233,23 @@ object TextQueries {
     * grams); the train side streams its explode straight into the
     * downstream filter/join, never materializing O(total 4-grams)
     * rows. */
-  private def contamGrams(s: SparkSession, dir: String, split: String): DataFrame = {
-    val bucket = conv(substring(md5(concat(lit("split|"),
-      col("doc_id").cast("string"))), 1, 4), 16, 10).cast("long")
-    val lab = when(bucket < (65536 * 0.90).toLong, "train")
-      .when(bucket < (65536 * 0.95).toLong, "val")
-      .otherwise("test")
+  private def contamGrams(s: SparkSession, dir: String, split: String): DataFrame =
     docsSpread(s, dir)
-      .filter(lab === split)
+      .filter(splitLabel(splitBucket) === split)
       .select(col("doc_id"),
         explode(array_distinct(TextOps.shingles(TextOps.words(col("text")), 4))).as("g"))
-  }
+
+  /** A doc's deterministic split bucket: the first 16 bits of
+    * md5("split|" || doc_id), 0..65535. */
+  private def splitBucket: Column =
+    conv(substring(md5(concat(lit("split|"), col("doc_id").cast("string"))), 1, 4), 16, 10)
+      .cast("long")
+
+  /** The 90/5/5 train/val/test label of a [[splitBucket]]. */
+  private def splitLabel(bucket: Column): Column =
+    when(bucket < (65536 * 0.90).toLong, "train")
+      .when(bucket < (65536 * 0.95).toLong, "val")
+      .otherwise("test")
 
   // Line-level dedup chunking: non-overlapping 32-word windows (the
   // intra-corpus granularity of MassiveText-style line/paragraph
@@ -650,17 +656,11 @@ object TextQueries {
     // deterministic split assignment: md5-bucketed train/val/test
     // (90/5/5) — reproducible across engines, runs, and partitionings,
     // unlike rand()-based sampling.
-    "text_split" -> ((s, dir) => {
-      val bucket = conv(substring(md5(concat(lit("split|"),
-        col("doc_id").cast("string"))), 1, 4), 16, 10).cast("long")
+    "text_split" -> ((s, dir) =>
       docs(s, dir)
-        .select(col("doc_id"), bucket.as("bucket"))
-        .withColumn("split",
-          when(col("bucket") < (65536 * 0.90).toLong, "train")
-            .when(col("bucket") < (65536 * 0.95).toLong, "val")
-            .otherwise("test"))
-        .orderBy("doc_id")
-    }),
+        .select(col("doc_id"), splitBucket.as("bucket"))
+        .withColumn("split", splitLabel(col("bucket")))
+        .orderBy("doc_id")),
 
     // repetition scoring (Gopher-style quality signal): fraction of
     // duplicate word 3-grams per document — high dup_frac = boilerplate

@@ -55,18 +55,6 @@ object Sources {
   def detectNameColumn(df: DataFrame): Option[String] =
     df.schema.fields.find(_.dataType == StringType).map(_.name)
 
-  /** Bucketed managed-table sink: pre-partitions (and pre-sorts) by
-    * the join key so repeated joins/aggregations on that key read
-    * co-located buckets and skip the shuffle entirely — the storage-
-    * layout half of the 100 TB join strategy (pair with broadcast for
-    * small dims). Both sides of a join must use the same bucket
-    * count. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .saveAsTable(table)
-
   /** S4 + E3 + O1 — run the full pipeline on an input file and write
     * the five reports under `outDir`: company_duplicates_final,
     * canonical_summary, settings, golden_mapping and

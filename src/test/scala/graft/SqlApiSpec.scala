@@ -26,6 +26,12 @@ class SqlApiSpec extends AnyFunSuite {
       "SELECT dot_product(array(1.0d, 2.0d, 3.0d), array(1.0d, 1.0d, 1.0d))")
       .collect()(0).getDouble(0)
     assert(dp == 6.0)
+
+    assert(spark.sql("SELECT unicode_norm('café', 'strip_accents')")
+      .collect()(0).getString(0) == "cafe")
+    assert(spark.sql(
+      "SELECT top_k_by(id, s, 1)[0].id FROM VALUES (1L, 1.0d), (2L, 9.0d) AS t(id, s)")
+      .collect()(0).getLong(0) == 2L)
   }
 
   test("GraftExtensions (the spark.sql.extensions class) registers the full function set") {

@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 class JaroWinklerSpec extends AnyFunSuite {
-  private def jw(a: String, b: String) = JaroWinklerAlgo.compute(a, b)
+  private def jw(a: String, b: String) =
+    JaroWinklerAlgo.similarity(UTF8String.fromString(a), UTF8String.fromString(b))
 
   test("matches DuckDB jaro_winkler_similarity on pinned cases") {
     // every expected value captured from DuckDB (the oracle engine)
@@ -30,25 +32,9 @@ class JaroWinklerSpec extends AnyFunSuite {
       jw("ABCXXXX", "BCAXXXX") == 0.9523809523809524)
   }
 
-  test("byte fast path agrees with string path; non-ascii falls back") {
-    import org.apache.spark.unsafe.types.UTF8String
-    def sim(a: String, b: String) =
-      JaroWinklerAlgo.similarity(UTF8String.fromString(a), UTF8String.fromString(b))
-    val rnd = new scala.util.Random(99)
-    for (_ <- 1 to 1000) {
-      val a = (0 until rnd.nextInt(12)).map(_ => ('A' + rnd.nextInt(26)).toChar).mkString
-      val b = (0 until rnd.nextInt(12)).map(_ => ('A' + rnd.nextInt(26)).toChar).mkString
-      assert(sim(a, b) == JaroWinklerAlgo.compute(a, b), s"'$a' '$b'")
-    }
-    // unicode goes through the string path and still behaves
-    assert(sim("CAFÉ", "CAFÉ") == 1.0)
-    assert(sim("MÜNCHEN", "MUNCHEN") == JaroWinklerAlgo.compute("MÜNCHEN", "MUNCHEN"))
-  }
-
   test("non-ASCII runs on code points (reference-faithful) — DuckDB's byte dialect documented") {
     // The reference (jellyfish via engine.py) compares Python str CODE
-    // POINTS; the String fallback path here does the same (UTF-16 code
-    // units = code points for BMP text). DuckDB's
+    // POINTS, and so does the kernel here. DuckDB's
     // jaro_winkler_similarity runs on UTF-8 BYTES instead — measured
     // 0.84833… for ('café','cafe') where the code-point answer is
     // 0.88333… — so JW parity with the oracle holds only on ASCII
@@ -68,13 +54,14 @@ class JaroWinklerSpec extends AnyFunSuite {
     // spellings upstream with unicode_norm('nfc') when corpora mix
     // them (UnicodeNormSpec).
     assert(jw("caf\u00e9", "cafe\u0301") == 0.8483333333333334)
-    // the UTF8String entry routes all of these through the String
-    // path (byte fast path is ASCII-gated)
-    import org.apache.spark.unsafe.types.UTF8String
-    def sim(a: String, b: String) =
-      JaroWinklerAlgo.similarity(UTF8String.fromString(a), UTF8String.fromString(b))
-    assert(sim("caf\u00e9", "cafe") == 0.8833333333333334)
-    assert(sim("トヨタ", "トヨダ") == 0.8222222222222222)
+    assert(jw("CAFÉ", "CAFÉ") == 1.0)
+    // 'MÜNCHEN' vs 'MUNCHEN': m=6 of 7/7 → jaro (6/7+6/7+1)/3, prefix 1
+    assert(jw("MÜNCHEN", "MUNCHEN") == 0.9142857142857143)
+    // astral characters are ONE code point each, not a surrogate pair:
+    // the two emoji share a high surrogate but no code point
+    assert(jw("\uD83D\uDE00", "\uD83D\uDE01") == 0.0)
+    assert(jw("\uD83D\uDE00AB", "\uD83D\uDE00AC") == 0.8222222222222222)
+    assert(jw("A\uD835\uDD38BC", "A\uD835\uDD38BD") == 0.8833333333333334)
   }
 
   test("properties: range, symmetry, identity") {

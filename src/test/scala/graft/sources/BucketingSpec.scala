@@ -17,11 +17,12 @@ class BucketingSpec extends AnyFunSuite {
     // force a merge join so the missing Exchange is attributable to
     // bucketing, not to a broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val dir = java.nio.file.Files.createTempDirectory("bucketing")
     try {
       val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
       val b = (1 to 1000).map(i => (i.toLong, i * 2.0)).toDF("k", "vb")
-      Sources.writeBucketed(a, s"$db.ta", "k", 4)
-      Sources.writeBucketed(b, s"$db.tb", "k", 4)
+      Bucketed.write(a, s"$db.ta", s"$dir/ta", 4, Seq("k"))
+      Bucketed.write(b, s"$db.tb", s"$dir/tb", 4, Seq("k"))
       val joined = spark.table(s"$db.ta").join(spark.table(s"$db.tb"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan.take(500))
@@ -35,6 +36,7 @@ class BucketingSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
       spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }
